@@ -35,35 +35,27 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // env knob for A/B runs; AQE stays on by default (its runtime
-      // coalescing/skew handling is the 100 TB posture)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+    val cpus = Session.cpus
+    val spark = Session.local("graft-bench",
+      // AQE stays on (its runtime coalescing/skew handling is the 100 TB
+      // posture)
+      "spark.sql.adaptive.enabled" -> "true",
       // split-size knob for sweep A/Bs: single-file bench fixtures arrive
       // as 1-4 scan splits at the 128m default, which starves map-only
       // operators (they're exchange-free BY DESIGN, so partition count ==
       // split count). Sizing splits is the legitimate scale lever — a real
       // deployment tunes it — and it must not require a plan change.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPB", "134217728"))
+      "spark.sql.files.maxPartitionBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_MAXPB", "134217728"),
       // static conf, takes effect at context creation: compiled-class cache
       // for whole-stage codegen. The 100-entry default thrashes on a
       // 231-query suite (~1000 codegen units per pass), so pass 2 of every
       // query re-pays Janino compilation instead of measuring steady-state
       // execution — the exact cost the min-of-passes methodology is
       // documented to exclude. Scale-independent (every long-lived driver
-      // and executor JVM wants its generated classes cached); env knob for
-      // A/B runs. Measured A/B in OPTIMIZATION_r15.md.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.dist.Binning.tuneSession(spark)
+      // and executor JVM wants its generated classes cached). Measured A/B
+      // in OPTIMIZATION_r15.md.
+      "spark.sql.codegen.cache.maxEntries" -> "4096")
     // warmup: exercise codegen, parquet reader, broadcast, window and
     // explode machinery once so one-time init lands outside measured queries
     spark.range(1000000).selectExpr("sum(id)").collect()

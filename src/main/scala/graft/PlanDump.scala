@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan and timed
   * execution for one named SparkEntry query (or all). A comma-separated
   * name list dumps several in one JVM; an optional third arg writes each
@@ -15,15 +13,7 @@ object PlanDump {
     val name = args.headOption.getOrElse("all")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.dist.Binning.tuneSession(spark)
+    val spark = Session.local("graft-plandump")
     val todo = if (name == "all") SparkEntry.queries.toSeq.sortBy(_._1)
                else name.split(',').toSeq.map(n => n -> SparkEntry.queries(n))
     outDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))

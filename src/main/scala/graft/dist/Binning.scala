@@ -36,29 +36,6 @@ object Binning {
     * bin_hi DOUBLE, cnt BIGINT), dense (zero-count bins present), sorted. */
   val schemaDoc: String = "(bin_id INT, bin_lo DOUBLE, bin_hi DOUBLE, cnt BIGINT)"
 
-  /** Engine session tuning. `InferFiltersFromGenerate` is excluded because it
-    * inserts `size(e) > 0 && isnotnull(e)` filters before every explode,
-    * re-inlining the generator's (expensive) expression tree into a pushed
-    * filter — the tokenize+shingle chain then evaluates ~3× per row instead
-    * of once (measured 40% slowdown on the shingle-based dedup operators).
-    * Generate with outer=false already skips null/empty inputs, so the
-    * exclusion is semantics-neutral. */
-  def tuneSession(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    // ObjectHashAggregate sort-fallback fix — shared, consumer-path-complete
-    // delivery since r14 (see graft.functions.SessionTuning for the full
-    // r13 sf100 ENOSPC story and the checked bounded-state contract)
-    graft.functions.SessionTuning.ensureObjectAggHashPath(spark)
-    // the engine's rewrite rules, for sessions built without
-    // spark.sql.extensions=graft.functions.GraftExtensions; each is a
-    // no-op unless its spark.graft.*.cellWidth conf is set (idempotent add)
-    val rules = Seq(graft.plans.RangeJoinRewrite,
-      graft.plans.IntervalJoinRewrite, graft.plans.BoxJoinRewrite)
-    val cur = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = cur ++ rules.filterNot(cur.contains)
-  }
-
   /** Equal-width edges: `[i*inc + lo for i in 0 until n] :+ hi` — the last
     * edge is the exact max, absorbing float error (rdd.py:2311-2312). The
     * integer-width nicety (rdd.py:2306-2309) is automatic in IEEE doubles:

@@ -108,9 +108,4 @@ object DistExplore {
                range: Option[(Double, Double)] = None, title: String = "",
                overlapping: Boolean = false): String =
     new Histogram(bins, range).addData(dfs).plotHist(title, overlapping = overlapping)
-
-  /** reference `distplot(ax, x, **kw)` WITH the drawing — SVG string. */
-  def plotDistplot(dfs: Seq[DataFrame], bins: Bins = Bins.Count(10),
-                   range: Option[(Double, Double)] = None, title: String = ""): String =
-    new Histogram(bins, range).addData(dfs).plotDensity(title)
 }

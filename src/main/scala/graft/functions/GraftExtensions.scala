@@ -19,12 +19,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
     // no-ops unless their spark.graft.*.cellWidth confs are set
     ext.injectOptimizerRule { session =>
-      // rule BUILDERS run once, when the session assembles its optimizer —
-      // the extensions path's only per-session hook, so the load-bearing
-      // ObjectHashAggregate fallback-threshold fix rides here (r13 verdict
-      // #1: tuneSession-only delivery left library consumers on the 128-key
-      // external-sort pathology). Idempotent; user-set values respected.
-      SessionTuning.ensureObjectAggHashPath(session)
+      // rule BUILDERS are the extensions path's only per-session hook, so
+      // the session tuning rides here — the same `SessionTuning.tune` the
+      // imperative path runs. Idempotent; user-set values respected.
+      SessionTuning.tune(session)
       graft.plans.RangeJoinRewrite
     }
     ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
@@ -102,13 +100,19 @@ object GraftFunctions {
       })
   )
 
-  /** Register into an existing session's function registry (idempotent).
-    * Also applies the load-bearing object-agg session tuning — the
-    * imperative sibling of the extensions path (see [[SessionTuning]]). */
+  /** Register into an existing session (idempotent): the functions, the
+    * [[SessionTuning.tune]] session tuning and the three `graft.plans`
+    * rewrite rules — the imperative sibling of [[GraftExtensions]], giving
+    * the same confs and optimizer rules. */
   def register(spark: SparkSession): Unit = {
-    SessionTuning.ensureObjectAggHashPath(spark)
+    SessionTuning.tune(spark)
     descriptors.foreach { case (id, fi, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, fi, builder)
     }
+    // each rule is a no-op unless its spark.graft.*.cellWidth conf is set
+    val rules = Seq(graft.plans.RangeJoinRewrite,
+      graft.plans.IntervalJoinRewrite, graft.plans.BoxJoinRewrite)
+    val cur = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = cur ++ rules.filterNot(cur.contains)
   }
 }

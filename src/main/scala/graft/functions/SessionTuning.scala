@@ -44,7 +44,6 @@ import org.apache.spark.sql.SparkSession
   *     ObjectHashAggregate without any graft facade in the tree, so the
   *     facade hook alone left them on the 128-key fallback (r14 verdict
   *     weak #1).
-  *   - `Binning.tuneSession` (this repo's mains) delegates here.
   *
   * ==Session-global side effect (read this if you embed graft)==
   * The raised threshold applies to the WHOLE session, including the
@@ -88,6 +87,29 @@ object SessionTuning {
     if (!optedOut && !spark.sessionState.conf.contains(FallbackKey)) {
       spark.conf.set(FallbackKey, fallbackThreshold.toString)
     }
+  }
+
+  private val ExcludedRulesKey = "spark.sql.optimizer.excludedRules"
+
+  /** `InferFiltersFromGenerate` inserts `size(e) > 0 && isnotnull(e)`
+    * filters before every explode, re-inlining the generator's (expensive)
+    * expression tree into a pushed filter — the tokenize+shingle chain then
+    * evaluates ~3× per row instead of once (measured 40% slowdown on the
+    * shingle-based dedup operators). Generate with outer=false already
+    * skips null/empty inputs, so the exclusion is semantics-neutral. */
+  private val excludedRule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+  /** The engine's whole session tuning, shared by both integration paths
+    * ([[GraftExtensions]] and `GraftFunctions.register`): appends
+    * [[excludedRule]] to `spark.sql.optimizer.excludedRules` — keeping any
+    * rule the user already excluded, never duplicating — then applies
+    * [[ensureObjectAggHashPath]]. Idempotent. */
+  def tune(spark: SparkSession): Unit = {
+    val cur = spark.conf.getOption(ExcludedRulesKey).toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    if (!cur.contains(excludedRule))
+      spark.conf.set(ExcludedRulesKey, (cur :+ excludedRule).mkString(","))
+    ensureObjectAggHashPath(spark)
   }
 
   /** Facade-side hook: tune whatever session is active on this thread.

@@ -148,7 +148,8 @@ object Similarity {
     // design occupancy, but a dense hub (many near-identical vectors — the
     // exact shape replica-heavy corpora produce) shares one sign pattern
     // at ANY bit width, so its cell grows with the hub and Σ|cell|² goes
-    // hub-quadratic. Measured at 100× bench scale (LshBucketProbe): p50
+    // hub-quadratic. Measured at 100× bench scale (LshBucketProbe, removed;
+    // `git show 21ce4b7:src/main/scala/graft/tools/LshBucketProbe.scala`): p50
     // occupancy 120 vs max 3269 — the tail, not the median, carried 4.5×
     // the design pair volume. Keeping the maxBucket smallest ids per cell
     // (deterministic) bounds per-source candidates at

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.Dedup
@@ -30,16 +29,8 @@ object IncrementalDedupProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val face = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-incdedup-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.dist.Binning.tuneSession(spark)
+    val spark = graft.Session.local("graft-incdedup-probe",
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64"))
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val cut = docs.agg(expr("approx_percentile(doc_id, 0.5)")).collect()(0).getLong(0)

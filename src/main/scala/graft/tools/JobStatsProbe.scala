@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run declared queries and report scheduling-shape metrics —
   * job count, stage count, task count, summed executor task time, and
@@ -17,15 +16,7 @@ import org.apache.spark.sql.SparkSession
 object JobStatsProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("graft-jobstatsprobe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.dist.Binning.tuneSession(spark)
+    val spark = graft.Session.local("graft-jobstatsprobe")
     try {
       // warmup (same shape as Bench): JIT + parquet reader init off the books
       spark.range(1000000).selectExpr("sum(id)").collect()

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.llm.{Graphs, Similarity}
 
@@ -13,7 +12,9 @@ import graft.llm.{Graphs, Similarity}
   * documented scratch-constrained fallback is (64, 1), whose recall gap vs
   * the full config is recovered by probeDepth=2 (BenchScaleRecallSpec).
   * Reports wall AND total shuffle-write volume (the portable scale signal,
-  * per ShuffleProbe). Not part of the library API.
+  * per ShuffleProbe — removed; source at
+  * `git show 21ce4b7:src/main/scala/graft/tools/ShuffleProbe.scala`). Not
+  * part of the library API.
   *
   * Usage: runMain graft.tools.LshScaleSweep <sfDir> <knn|pagerank> \
   *          [maxBucket=64] [nTables=1] [shufflePartitions=32] [probeDepth=1]
@@ -31,18 +32,11 @@ object LshScaleSweep {
     val nTables = if (args.length > 3) args(3).toInt else 1
     val shuffleParts = if (args.length > 4) args(4).toInt else 32
     val probeDepth = if (args.length > 5) args(5).toInt else 1
-    // honor the bench-wide CPU knob: a sweep measured at a different thread
+    // Session.local honors the bench-wide CPU knob: a sweep measured at a different thread
     // count than the bench it's compared against is silently over/under-
     // subscribed (r10 ADVICE)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("graft-lshsweep").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.dist.Binning.tuneSession(spark)
+    val spark = graft.Session.local("graft-lshsweep",
+      "spark.sql.shuffle.partitions" -> shuffleParts.toString)
     try {
       val e = graft.sources.Readers.readEmbeddings(spark, sfDir)
       // same corpus-adaptive bits as the declared queries

@@ -37,19 +37,12 @@ object ScaleGen {
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
     val splits = args.lift(4).map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // some fixture generations carry TIMESTAMP(NANOS) in events.parquet;
-      // the conf lets those read as long (no-op for micros fixtures) —
-      // ts passes through untouched either way, so the output keeps the
-      // source's physical type and Readers.readEvents normalizes on read
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // some fixture generations carry TIMESTAMP(NANOS) in events.parquet;
+    // the conf lets those read as long (no-op for micros fixtures) — ts
+    // passes through untouched either way, so the output keeps the source's
+    // physical type and Readers.readEvents normalizes on read
+    val spark = graft.Session.local("graft-scalegen",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     run(spark, src, out, reps, only, splits)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured skew evidence for SCALE.md: times the same hot-key join three
@@ -25,15 +25,9 @@ import org.apache.spark.sql.functions._
   * and writes it to target/skewbench.json. */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus
+    val spark = graft.Session.local("graft-skewbench",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     import spark.implicits._
 
     val hotRows = 20000000L
@@ -90,10 +84,10 @@ object SkewBench {
     def maxPart(df: DataFrame): Long =
       df.select(spark_partition_id().as("p"))
         .groupBy("p").agg(count(lit(1)).as("n")).agg(max("n")).head().getLong(0)
-    val maxPlain = maxPart(fact.repartition(cpus.toInt, col("k")))
+    val maxPlain = maxPart(fact.repartition(cpus, col("k")))
     val maxSalted = maxPart(
       fact.withColumn("__salt", (rand(42L) * 32).cast("int"))
-        .repartition(cpus.toInt, col("k"), col("__salt")))
+        .repartition(cpus, col("k"), col("__salt")))
 
     // Locale.ROOT: the f interpolator's default-locale %.3f renders a comma
     // decimal point on e.g. de_DE and corrupts the JSON

@@ -110,7 +110,8 @@ class SparkEntryContractSpec extends SparkSpec {
   // scheduler jitter, yet orders of magnitude below the failure mode this
   // guards (a text or vector column crossing an exchange multiplies the
   // volume ~100x), so a fattening edit fails HERE instead of at the next
-  // sf100 sweep.
+  // sf100 sweep. ShuffleProbe is removed; its source is at
+  // `git show 21ce4b7:src/main/scala/graft/tools/ShuffleProbe.scala`.
   private val shuffleByteCeilings = Seq(
     "dedup_drop_exact_documents" -> 60_000L,
     "decontam_semantic_embeddings" -> 450_000L,

@@ -7,17 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup is ~5 s and ScalaTest suites run in one forked JVM). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val s = Session.local("graft-test",
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.dist.Binning.tuneSession(s)
     s
   }
 }

@@ -12,11 +12,16 @@ import org.apache.spark.sql.functions._
   * partition silently replaces the bounded-state hash combine with a full
   * external sort of the aggregate input — the exact sf100 ENOSPC class
   * fixed in r13. This suite drives both consumer paths on FRESH sessions
-  * (no tuneSession anywhere) and proves the hash path at runtime via the
-  * operator's own `numTasksFallBacked` metric. */
+  * (none of the shared test session's tuning) and proves the hash path at
+  * runtime via the operator's own `numTasksFallBacked` metric. Both paths
+  * must also leave the session in the same tuned state ([[assertTuned]]). */
 class SessionTuningSpec extends SparkSpec {
 
   private val FallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  private val ExcludedRulesKey = "spark.sql.optimizer.excludedRules"
+  private val InferFilters = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+  private val rewriteRules = Seq(graft.plans.RangeJoinRewrite,
+    graft.plans.IntervalJoinRewrite, graft.plans.BoxJoinRewrite).map(_.ruleName)
 
   /** Build a genuinely fresh session over the shared SparkContext —
     * getOrCreate returns the shared one unless active+default are cleared
@@ -66,6 +71,30 @@ class SessionTuningSpec extends SparkSpec {
     ns.map(_.metrics("numTasksFallBacked").value).sum
   }
 
+  /** `explode` over a projected (attribute) array: the shape on which
+    * `InferFiltersFromGenerate` adds a `size(a) > 0` filter. Returns the
+    * optimized plan's rule invocations and whether that filter is present. */
+  private def explodePlan(s: SparkSession): (Set[String], Boolean) = {
+    val qe = s.range(10).select(split(col("id").cast("string"), "").as("a"))
+      .select(explode(col("a"))).queryExecution
+    val inferred = qe.optimizedPlan.exists {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Size])
+      case _ => false
+    }
+    (qe.tracker.rules.keySet, inferred)
+  }
+
+  /** The tuned state both integration paths must produce. */
+  private def assertTuned(s: SparkSession): Unit = {
+    assert(s.conf.get(ExcludedRulesKey).split(',').contains(InferFilters))
+    assert(s.conf.get(FallbackKey) == SessionTuning.fallbackThreshold.toString,
+      "the object-agg tuning was not delivered")
+    val (rules, inferred) = explodePlan(s)
+    rewriteRules.foreach(r => assert(rules.contains(r), s"$r is not active"))
+    assert(!inferred, "InferFiltersFromGenerate still added a size(...) > 0 filter")
+  }
+
   test("the metric harness itself detects the 128-key fallback (guards " +
     "against a metric rename making this suite vacuous)") {
     val saved = spark.conf.get(FallbackKey)
@@ -87,10 +116,40 @@ class SessionTuningSpec extends SparkSpec {
       // the rule builders (our per-session hook) run when the optimizer is
       // first assembled — any query triggers it
       fresh.range(1).collect()
-      assert(fresh.conf.get(FallbackKey) == SessionTuning.fallbackThreshold.toString,
-        "GraftExtensions did not deliver the object-agg tuning")
+      assertTuned(fresh)
       assert(fallbackTasks(thousandKeyTopK(fresh)) == 0L,
         "extensions-wired session still degraded to sort-based aggregation")
+    }
+  }
+
+  test("GraftFunctions.register gives a vanilla session the same tuned " +
+    "state as the extensions path") {
+    withFreshSession(identity) { fresh =>
+      assert(explodePlan(fresh)._2,
+        "untuned session inferred no size(...) > 0 filter — the plan check proves nothing")
+      GraftFunctions.register(fresh)
+      assertTuned(fresh)
+      assert(fallbackTasks(thousandKeyTopK(fresh)) == 0L)
+    }
+  }
+
+  test("a user-excluded optimizer rule survives tuning on both paths, and " +
+    "repeated tuning adds no duplicate entries") {
+    val userRule = "org.apache.spark.sql.catalyst.optimizer.ReorderJoin"
+    val merged = s"$userRule,$InferFilters"
+    withFreshSession(_.withExtensions(new GraftExtensions)
+        .config(ExcludedRulesKey, userRule)) { fresh =>
+      fresh.range(1).collect()
+      SessionTuning.tune(fresh)
+      fresh.range(2).collect()
+      assert(fresh.conf.get(ExcludedRulesKey) == merged)
+    }
+    withFreshSession(identity) { fresh =>
+      fresh.conf.set(ExcludedRulesKey, userRule)
+      GraftFunctions.register(fresh)
+      GraftFunctions.register(fresh)
+      assert(fresh.conf.get(ExcludedRulesKey) == merged)
+      assert(fresh.experimental.extraOptimizations.map(_.ruleName) == rewriteRules)
     }
   }
 
