@@ -1,7 +1,14 @@
 package graft.dist
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
+
+import graft.functions.HistogramAgg
 
 /** Bin specification: either a bin count (edges derived from data min/max or
   * an explicit range) or an explicit, validated boundary list.
@@ -21,14 +28,19 @@ object Bins {
 
 /** Distributed histogram core.
   *
-  * Design (SURVEY.md §3/§4): everything stays in the DataFrame world — the
-  * scan is vectorized parquet, the null/range filter and the bin expression
-  * are codegen'd `Column`s, counting is one `groupBy(bin_id).count()` (hash
-  * aggregate, partial+final, shuffle of at most n_bins × n_series rows), and
-  * the dense-bin fill is a broadcast join against a tiny spine. Two Spark
-  * jobs total regardless of series count: one combined min/max agg, one
-  * counting job. This shape is scale-invariant: at 100 TB the scan dominates
-  * and both passes are embarrassingly parallel with O(n_bins) shuffle.
+  * Design (SURVEY.md §3/§4): everything stays in the DataFrame world. Every
+  * series-based entry point ([[Binning.histogram]], [[Binning.histogramManyBins]],
+  * [[Binning.histogramColumns]], [[Histogram.build]]) runs on one core:
+  * series that read the same source share one scan, each distinct
+  * (source, column) is one nullable double slot of a union, and counting
+  * is one global aggregate of one [[graft.functions.HistogramAgg]] count
+  * vector per slot (the rdd.py:2347-2366 distributed shape inside Tungsten:
+  * the shuffle carries one n_bins-long vector per slot and partition, and
+  * dense bins come free from the buffer). A data-derived range adds one
+  * combined min/max aggregate over the same union. Two actions for any
+  * number of series, i.e. 4 Spark jobs under AQE (each global aggregate is
+  * a shuffle-map job plus a result job), 2 with an explicit range or edges;
+  * `HistogramJobContractSpec` checks both budgets at 1, 4 and 16 series.
   */
 object Binning {
 
@@ -90,10 +102,13 @@ object Binning {
     }
   }
 
-  /** Null/NaN/range filter (rdd.py:2275-2282, 2350-2351). */
+  /** Null/NaN filter (rdd.py:2275-2282) over one column, renamed `x`. */
   private def cleaned(df: DataFrame, colName: String): DataFrame =
-    df.select(col(colName).cast("double").as("x"))
+    df.select(quoted(colName).cast("double").as("x"))
       .where(col("x").isNotNull && !isnan(col("x")))
+
+  /** A column by its exact name: dots and backticks in it are not parsed. */
+  private[dist] def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** bin_lo / bin_hi expressions for even-width bins, written so the exact
     * same arithmetic is expressible in the DuckDB oracle (bit-identical
@@ -120,192 +135,130 @@ object Binning {
     * Empty input with derived range raises (rdd.py:2290-2292).
     */
   def histogram(df: DataFrame, colName: String, bins: Bins = Bins.Count(10),
-                range: Option[(Double, Double)] = None): DataFrame = {
-    val clean = cleaned(df, colName)
-    bins match {
-      case Bins.Edges(es) =>
-        validateEdges(es)
-        histogramWithEdges(clean, es.toVector)
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        if (lo == hi || n == 1) singleBucket(clean, lo, hi)
-        else evenHistogram(clean, lo, hi, n)
-    }
-  }
+                range: Option[(Double, Double)] = None): DataFrame =
+    counted(Seq((df, colName)), Seq("cnt"), bins, range)
 
-  /** One combined min/max job (SURVEY.md §3 design target: the reference ran
-    * 2 collect jobs per series; we run 1 total). */
-  private[dist] def minMaxOf(clean: DataFrame): (Double, Double) = {
-    val r = clean.agg(min("x"), max("x")).head()
+  /** Combined min/max of a cleaned `x` frame in one aggregate (the
+    * reference ran 2 collect jobs per series). */
+  private[dist] def minMaxOf(clean: DataFrame): (Double, Double) = rangeOf(clean, Seq(col("x")))
+
+  /** Shared range of several columns of one frame in ONE aggregate: min of
+    * mins / max of maxes. Nulls are skipped and NaN is excluded
+    * (rdd.py:2275-2282); NaN would otherwise poison max (NaN sorts
+    * greatest). */
+  private def rangeOf(df: DataFrame, xs: Seq[Column]): (Double, Double) = {
+    val nanFree = xs.map(x => when(!isnan(x), x))
+    // least/greatest need >= 2 args — pass a single column through
+    def fold(f: Seq[Column] => Column, cs: Seq[Column]) = if (cs.size == 1) cs.head else f(cs)
+    val r = df.agg(fold(least(_: _*), nanFree.map(min)), fold(greatest(_: _*), nanFree.map(max))).head()
     if (r.isNullAt(0))
       throw new IllegalArgumentException("can not generate buckets from empty RDD") // rdd.py:2290-2292
     (r.getDouble(0), r.getDouble(1))
   }
 
-  private def evenHistogram(clean: DataFrame, lo: Double, hi: Double, n: Int): DataFrame = {
-    val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-    val counts = inRange
-      .groupBy(binId(col("x"), equalWidthEdges(lo, hi, n)).as("bin_id"))
-      .agg(count(lit(1)).as("cnt"))
-    val (binLo, binHi) = evenEdgeCols(col("bin_id"), lo, hi, n)
-    spine(clean, n).join(counts, Seq("bin_id"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .select(col("bin_id"), binLo, binHi, col("cnt"))
-      .orderBy("bin_id")
-  }
-
-  private def histogramWithEdges(clean: DataFrame, es: Vector[Double]): DataFrame = {
-    val n = es.size - 1
-    val inRange = clean.where(col("x") >= lit(es.head) && col("x") <= lit(es.last))
-    val counts = inRange
-      .groupBy(binId(col("x"), es).as("bin_id"))
-      .agg(count(lit(1)).as("cnt"))
-    val loArr = typedLit(es.dropRight(1))
-    val hiArr = typedLit(es.drop(1))
-    spine(clean, n).join(counts, Seq("bin_id"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .select(col("bin_id"),
-        element_at(loArr, col("bin_id") + 1).as("bin_lo"),
-        element_at(hiArr, col("bin_id") + 1).as("bin_hi"),
-        col("cnt"))
-      .orderBy("bin_id")
-  }
-
-  /** Degenerate single bucket [lo, hi] counting all in-range values
-    * (rdd.py:2295-2296). */
-  private def singleBucket(clean: DataFrame, lo: Double, hi: Double): DataFrame =
-    clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-      .agg(count(lit(1)).as("cnt"))
-      .select(lit(0).cast("int").as("bin_id"), lit(lo).as("bin_lo"), lit(hi).as("bin_hi"), col("cnt"))
-
-  /** Single-pass histogram: identical output contract to [[histogram]], but
-    * counting runs as one [[graft.functions.HistogramAgg]] typed aggregate —
-    * a dense per-partition count vector merged element-wise (the
-    * rdd.py:2347-2366 distributed shape inside Tungsten). No per-row shuffle,
-    * no spine join: the shuffle carries ONE n_bins-long vector per partition,
-    * the minimum possible traffic. Data-derived ranges still take the
-    * min/max pre-pass (unavoidable; SURVEY.md §4). */
+  /** Same output as [[histogram]], which already counts in one
+    * [[graft.functions.HistogramAgg]] aggregate. */
   def histogramOnePass(df: DataFrame, colName: String, bins: Bins = Bins.Count(10),
-                       range: Option[(Double, Double)] = None): DataFrame = {
-    val clean = cleaned(df, colName)
-    val es: Vector[Double] = bins match {
-      case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        equalWidthEdges(lo, hi, n)
-    }
-    if (es.head == es.last) return singleBucket(clean, es.head, es.last) // min==max degenerate
-    // range predicate stays in the plan for parquet pushdown; the aggregate
-    // re-checks (and drops) out-of-range values regardless
-    val inRange = clean.where(col("x") >= lit(es.head) && col("x") <= lit(es.last))
-    inRange.agg(graft.functions.HistogramAgg.hist_counts(col("x"), es).as("cnts"))
-      .select(posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
-      .select(col("bin_id").cast("int").as("bin_id"),
-        element_at(typedLit(es.dropRight(1)), col("bin_id") + 1).as("bin_lo"),
-        element_at(typedLit(es.drop(1)), col("bin_id") + 1).as("bin_hi"),
-        col("cnt"))
-      .orderBy("bin_id")
-  }
+                       range: Option[(Double, Double)] = None): DataFrame =
+    histogram(df, colName, bins, range)
 
   /** Multi-series histogram with a SHARED range across all series — the
     * reference's only cross-series interaction (global min of mins / max of
     * maxes unless `range=` given; pyspark_dist_explore.py ~L100-118).
-    *
-    * One tagged union → one min/max agg job → one counting job with
-    * `pivot(series)` (explicit value list for deterministic column order).
-    * Output: (bin_id, bin_lo, bin_hi, <label>_cnt ...), dense, sorted.
-    */
+    * Output: (bin_id, bin_lo, bin_hi, <label>_cnt ...), dense, sorted; the
+    * count columns follow the series order. */
   def histogramMany(series: Seq[(DataFrame, String, String)], n: Int = 10,
                     range: Option[(Double, Double)] = None): DataFrame =
     histogramManyBins(series, Bins.Count(n), range)
 
   /** [[histogramMany]] generalized to any [[Bins]] spec (explicit edges skip
-    * the min/max job entirely, mirroring the reference's `bins=list`). */
+    * the min/max aggregate, mirroring the reference's `bins=list`). Labels
+    * are de-duplicated ([[dedupeLabels]]) and only ever used as output
+    * names, so any string is a valid label. */
   def histogramManyBins(series: Seq[(DataFrame, String, String)], bins: Bins,
-                        range: Option[(Double, Double)] = None): DataFrame = {
+                        range: Option[(Double, Double)] = None): DataFrame =
+    counted(series.map(s => (s._1, s._2)), dedupeLabels(series.map(_._3)).map(_ + "_cnt"), bins, range)
+
+  /** Multi-column histogram over ONE frame: the reference's
+    * `add_data(multi_col_df)` split into per-column series with a SHARED
+    * range; all columns share one scan per action, as in
+    * [[histogramManyBins]]. Output: (bin_id, bin_lo, bin_hi, <col>_cnt ...),
+    * dense, sorted. */
+  def histogramColumns(df: DataFrame, cols: Seq[String], n: Int = 10,
+                       range: Option[(Double, Double)] = None): DataFrame =
+    counted(cols.map((df, _)), cols.map(_ + "_cnt"), Bins.Count(n), range)
+
+  /** The plan a series reads and the attribute it bins (by exact name): the
+    * frame's analyzed plan minus a top projection of plain columns, so
+    * `t.select("a")` and `t.select("b")` have the same source. A cached
+    * frame keeps its projection, which is what the cache lookup matches. */
+  private def sourceOf(df: DataFrame, colName: String): (LogicalPlan, Attribute) = {
+    val plan = df.queryExecution.analyzed
+    val attr = plan.resolve(Seq(colName), SQLConf.get.resolver) match {
+      case Some(a: Attribute) => a
+      case _ => throw new IllegalArgumentException(s"no column $colName")
+    }
+    plan match {
+      case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) &&
+          AttributeSet(list).subsetOf(child.outputSet) && df.storageLevel == StorageLevel.NONE =>
+        (child, attr)
+      case _ => (plan, attr)
+    }
+  }
+
+  /** The core behind every series-based histogram: `series(i)` is counted
+    * into the output column `names(i)`, all over one shared set of edges.
+    *
+    * Series whose sources ([[sourceOf]]) are equal and deterministic share
+    * one union child; each distinct (source, column) is one nullable double
+    * slot `s_k`, null in the children of the other sources, and a repeated
+    * pair reuses its slot. A data-derived range is one min/max aggregate
+    * over the union (first action); counting is one global aggregate of one
+    * `hist_counts(s_k, edges)` per slot (second action), which drops null,
+    * NaN and out-of-range values itself, so the union children carry no
+    * filter and are the same plan in both actions. The single result row
+    * is exploded into the dense bins and sorted locally: no pivot, no spine
+    * join, no range-partition sampling. */
+  private def counted(series: Seq[(DataFrame, String)], names: Seq[String], bins: Bins,
+                      range: Option[(Double, Double)]): DataFrame = {
     require(series.nonEmpty, "at least one series required")
-    val labels = dedupeLabels(series.map(_._3))
-    val tagged = series.zip(labels).map { case ((df, c, _), lbl) =>
-      df.select(col(c).cast("double").as("x"), lit(lbl).as("series"))
-    }.reduce(_ unionByName _)
-    val clean = tagged.where(col("x").isNotNull && !isnan(col("x")))
+    val located = series.map { case (df, c) => sourceOf(df, c) }
+    // a nondeterministic source is read once per series, as it was given
+    val srcIdx = located.indices.map { i =>
+      val p = located(i)._1
+      if (p.deterministic) located.indexWhere(_._1 == p) else i
+    }
+    val slotKeys = srcIdx.zip(located.map(_._2))
+    val slots = slotKeys.distinct
+    val xs = slots.indices.map(k => col(s"s$k"))
+    val spark = series.head._1.sparkSession
+    val union = slots.map(_._1).distinct.map { j =>
+      Bridge.ofRows(spark, located(j)._1).select(slots.zipWithIndex.map { case ((sj, a), k) =>
+        (if (sj == j) Bridge.column(a) else lit(null)).cast("double").as(s"s$k")
+      }: _*)
+    }.reduce(_ union _)
     val es: Vector[Double] = bins match {
       case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(nn) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
+      case Bins.Count(n) =>
+        val (lo, hi) = range.getOrElse(rangeOf(union, xs))
         require(lo <= hi, s"invalid range [$lo, $hi]")
-        equalWidthEdges(lo, hi, nn)
+        equalWidthEdges(lo, hi, n)
     }
-    val (lo, hi) = (es.head, es.last)
     val nb = es.size - 1
-    val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-    val counts = inRange
-      .groupBy(binId(col("x"), es).as("bin_id"))
-      .pivot("series", labels)
-      .count()
-    val cntCols = labels.map(l => coalesce(col(s"`$l`"), lit(0L)).as(s"${l}_cnt"))
+    val cnts = xs.zipWithIndex.map { case (x, k) => HistogramAgg.hist_counts(x, es).as(s"c$k") }
+    val b = col("pos")
     // user-supplied edges are echoed back verbatim (element_at literals);
     // derived edges keep the oracle-parity even-width arithmetic
     val (binLo, binHi) = bins match {
       case Bins.Edges(_) =>
-        (element_at(typedLit(es.dropRight(1)), col("bin_id") + 1).as("bin_lo"),
-          element_at(typedLit(es.drop(1)), col("bin_id") + 1).as("bin_hi"))
-      case _ => evenEdgeCols(col("bin_id"), lo, hi, nb)
+        (element_at(typedLit(es.init), b + 1).as("bin_lo"), element_at(typedLit(es.tail), b + 1).as("bin_hi"))
+      case _ if nb == 1 => (lit(es.head).as("bin_lo"), lit(es.last).as("bin_hi")) // [v, v] (rdd.py:2295-2296)
+      case _ => evenEdgeCols(b, es.head, es.last, nb)
     }
-    spine(clean, nb).join(counts, Seq("bin_id"), "left")
-      .select(Seq(col("bin_id"), binLo, binHi) ++ cntCols: _*)
-      .orderBy("bin_id")
-  }
-
-  /** Multi-column histogram over ONE frame in ONE scan: the reference's
-    * `add_data(multi_col_df)` splits into per-column series with a SHARED
-    * range; here all N columns ride a single pass — one combined min/max agg
-    * (shared lo/hi = min of mins / max of maxes), then one aggregate
-    * producing a dense [[graft.functions.HistogramAgg]] count vector per
-    * column. Two jobs total for any N (SURVEY.md §3 target), N× fewer scans
-    * than the union formulation. Output: (bin_id, bin_lo, bin_hi,
-    * <col>_cnt ...), dense, sorted. */
-  def histogramColumns(df: DataFrame, cols: Seq[String], n: Int = 10,
-                       range: Option[(Double, Double)] = None): DataFrame = {
-    require(cols.nonEmpty, "at least one column required")
-    val xs = cols.map(c => col(c).cast("double"))
-    val (lo, hi) = range.getOrElse {
-      // NaN excluded from range resolution (rdd.py:2275-2282); min/max skip
-      // nulls, and NaN would otherwise poison max (NaN sorts greatest).
-      // least/greatest need >= 2 args — pass through for a single column.
-      val nanFree = xs.map(x => when(!isnan(x), x))
-      val mins = nanFree.map(min)
-      val maxs = nanFree.map(max)
-      val loC = if (mins.size == 1) mins.head else least(mins: _*)
-      val hiC = if (maxs.size == 1) maxs.head else greatest(maxs: _*)
-      val r = df.agg(loC.as("lo"), hiC.as("hi")).head()
-      if (r.isNullAt(0))
-        throw new IllegalArgumentException("can not generate buckets from empty RDD")
-      (r.getDouble(0), r.getDouble(1))
-    }
-    require(lo <= hi, s"invalid range [$lo, $hi]")
-    val es = equalWidthEdges(lo, hi, n)
-    val nb = es.size - 1
-    if (lo == hi) { // degenerate: one closed bucket [v, v] per column
-      val aggs = cols.zip(xs).map { case (c, x) =>
-        count(when(!isnan(x) && x === lit(lo), 1)).as(s"${c}_cnt")
-      }
-      return df.agg(aggs.head, aggs.tail: _*)
-        .select(Seq(lit(0).cast("int").as("bin_id"), lit(lo).as("bin_lo"), lit(hi).as("bin_hi")) ++
-          cols.map(c => col(s"${c}_cnt")): _*)
-    }
-    val aggs = cols.zip(xs).map { case (c, x) =>
-      // null/NaN/out-of-range drops happen inside the aggregate (rdd.py:2350)
-      graft.functions.HistogramAgg.hist_counts(x, es).as(s"__cnts_$c")
-    }
-    val (binLo, binHi) = evenEdgeCols(col("bin_id"), lo, hi, nb)
-    val cntCols = cols.map(c => col("col").getField(s"__cnts_$c").as(s"${c}_cnt"))
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(posexplode(arrays_zip(cols.map(c => col(s"__cnts_$c")): _*)))
-      .select(Seq(col("pos").cast("int").as("bin_id")) ++ cntCols: _*)
-      .select(Seq(col("bin_id"), binLo, binHi) ++ cols.map(c => col(s"${c}_cnt")): _*)
+    val out = slotKeys.map(slots.indexOf).zip(names).map { case (k, nm) => col("col").getField(s"c$k").as(nm) }
+    union.agg(cnts.head, cnts.tail: _*)
+      .select(posexplode(arrays_zip(slots.indices.map(k => col(s"c$k")): _*)))
+      .select(Seq(b.as("bin_id"), binLo, binHi) ++ out: _*)
       .orderBy("bin_id")
   }
 
@@ -447,23 +400,25 @@ object Binning {
     * the exact lo/hi (absorbing float error, as the even-width path does);
     * binning is the standard explicit-edges bisect. Non-positive values are
     * dropped with nulls/NaNs (log scale is undefined there — documented
-    * divergence from the linear drop rule). Same two-job shape as
-    * [[histogram]]. */
+    * divergence from the linear drop rule). Same two-action shape as
+    * [[histogram]]: one min/max aggregate, one counting aggregate. */
   def histogramLog(df: DataFrame, colName: String, n: Int = 10,
                    range: Option[(Double, Double)] = None): DataFrame = {
     require(n >= 1, "bins must be >= 1")
-    val clean = cleaned(df, colName).where(col("x") > 0)
-    val (lo, hi) = range.getOrElse(minMaxOf(clean))
+    val positive = cleaned(df, colName).where(col("x") > 0)
+    val (lo, hi) = range.getOrElse(minMaxOf(positive))
     require(lo > 0 && lo <= hi, s"log bins need 0 < lo <= hi, got [$lo, $hi]")
-    if (lo == hi || n == 1) return singleBucket(clean, lo, hi)
-    val (llo, lhi) = (math.log(lo), math.log(hi))
-    val edges = (0 to n).map {
-      case 0 => lo
-      case `n` => hi
-      case i => math.exp(llo + i * (lhi - llo) / n)
-    }.toVector
-    validateEdges(edges)
-    histogramWithEdges(clean, edges)
+    val bins =
+      if (lo == hi || n == 1) Bins.Count(1)
+      else {
+        val (llo, lhi) = (math.log(lo), math.log(hi))
+        Bins.Edges((0 to n).map {
+          case 0 => lo
+          case `n` => hi
+          case i => math.exp(llo + i * (lhi - llo) / n)
+        })
+      }
+    histogram(positive, "x", bins, Some((lo, hi)))
   }
 
   /** 2-D histogram (heatmap grid): joint counts over an `nx × ny` equal-width

@@ -49,9 +49,12 @@ class Histogram(bins: Bins = Bins.Count(10), range: Option[(Double, Double)] = N
     this
   }
 
-  /** Idempotent materialization (reference build(), ~L95-120). Explicit
-    * edges bypass the min/max jobs entirely (~L104); either way, one union +
-    * one counting job for all series ([[Binning.histogramManyBins]]). */
+  /** Idempotent materialization (reference build(), ~L95-120) through
+    * [[Binning.histogramManyBins]]: one scan per distinct source per action,
+    * one min/max aggregate for a derived range and one count-vector
+    * aggregate for all series — 4 Spark jobs for any number of series, 2
+    * with an explicit range or edges, which skip the min/max (~L104).
+    * `HistogramJobContractSpec` holds it to that budget. */
   def build(): DataFrame = built.getOrElse {
     val b = Binning.histogramManyBins(series.toSeq, bins, range)
     built = Some(b)
@@ -67,7 +70,7 @@ class Histogram(bins: Bins = Bins.Count(10), range: Option[(Double, Double)] = N
   /** Density table: bin centers × per-series counts (to_pandas('density')). */
   def toDensityDF: DataFrame = {
     val b = build()
-    val cnts = b.columns.filter(_.endsWith("_cnt")).map(col)
+    val cnts = b.columns.filter(_.endsWith("_cnt")).map(Binning.quoted)
     b.select(Seq(col("bin_id"), ((col("bin_lo") + col("bin_hi")) / 2).as("bin_center")) ++ cnts: _*)
   }
 

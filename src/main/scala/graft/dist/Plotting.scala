@@ -174,7 +174,7 @@ object Plotting {
                    width: Int = 640, height: Int = 400,
                    overlapping: Boolean = false): String = {
     val series = cntCols(hist)
-    val rows = hist.select("bin_lo" +: "bin_hi" +: series map hist.col: _*)
+    val rows = hist.select("bin_lo" +: "bin_hi" +: series map Binning.quoted: _*)
       .orderBy("bin_lo").collect().toSeq
     require(rows.nonEmpty, "empty histogram frame")
     val f = Frame(title, width, height, series.size,
@@ -204,7 +204,7 @@ object Plotting {
   def svgDensity(density: DataFrame, title: String = "",
                  width: Int = 640, height: Int = 400): String = {
     val series = cntCols(density)
-    val rows = density.select("bin_center" +: series map density.col: _*)
+    val rows = density.select("bin_center" +: series map Binning.quoted: _*)
       .orderBy("bin_center").collect().toSeq
     require(rows.nonEmpty, "empty density frame")
     val f = Frame(title, width, height, series.size,

@@ -104,9 +104,10 @@ case class HistogramAgg(
 
 object HistogramAgg {
   /** Column facade: `hist_counts(x, edges)` → array<long> of n dense bucket
-    * counts (aggregate function). */
+    * counts (aggregate function). `edges = [v, v]` is the degenerate
+    * min == max bucket: one count of the values equal to v. */
   def hist_counts(x: Column, edges: Seq[Double]): Column = {
-    graft.dist.Binning.validateEdges(edges)
+    if (!(edges.size == 2 && edges.head == edges.last)) graft.dist.Binning.validateEdges(edges)
     // consumer-path tuning (r13 verdict #1): keep the hash-agg path on
     // untuned sessions — see SessionTuning
     SessionTuning.ensureActiveSession()

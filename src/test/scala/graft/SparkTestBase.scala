@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test run (JVM-wide; Spark
@@ -19,4 +21,22 @@ object SparkTestBase {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before the listener is added (no earlier job leaks in) and before
+    * counting (no late event is missed), never slept on. */
+  def jobsOf(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Bridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

@@ -93,6 +93,19 @@ class BinningSpec extends SparkSpec {
     assert(rows == Seq((2L, 0L), (1L, 0L), (0L, 0L), (0L, 0L), (0L, 3L)))
   }
 
+  test("multi-series: a cached series frame is read from the cache") {
+    val t = Seq((1.0, 2.0), (3.0, 4.0)).toDF("a", "b")
+    val a = t.select("a").cache()
+    try {
+      val h = Binning.histogramMany(Seq((a, "a", "a"), (t.select("b"), "b", "b")), n = 2)
+      val cached = h.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(cached.size == 1)
+      assert(h.select("a_cnt", "b_cnt").as[(Long, Long)].collect().toSeq == Seq((1L, 1L), (1L, 1L)))
+    } finally a.unpersist()
+  }
+
   test("duplicate series names get ' (k)' suffixes") {
     assert(Binning.dedupeLabels(Seq("v", "v", "w", "v")) == Seq("v", "v (1)", "w", "v (2)"))
   }

@@ -53,4 +53,24 @@ class HistogramBuilderSpec extends SparkSpec {
     assert(DistExplore.hist(dfs, Bins.Count(2)).count() == 2)
     assert(DistExplore.distplot(dfs, Bins.Count(2)).columns.contains("bin_center"))
   }
+
+  test("a column name with a dot is binned by its exact name") {
+    val df = Seq(1.0, 9.0, 10.0).toDF("price.usd")
+    val hist = new Histogram(Bins.Count(2)).addData(df)
+    val h = hist.build()
+    assert(h.columns.toSeq == Seq("bin_id", "bin_lo", "bin_hi", "price.usd_cnt"))
+    assert(h.collect().map(r => (r.getInt(0), r.getLong(3))).toSeq == Seq((0, 1L), (1, 2L)))
+    assert(hist.toDensityDF.columns.last == "price.usd_cnt")
+  }
+
+  test("labels with backticks and dots are output names only, never parsed") {
+    val a = Seq(1.0, 2.0).toDF("v")
+    val b = Seq(9.0).toDF("w")
+    val hist = new Histogram(Bins.Count(2)).addColumn(a, "v", "a`b").addColumn(b, "w", "c.d")
+    val h = hist.build()
+    assert(h.columns.toSeq == Seq("bin_id", "bin_lo", "bin_hi", "a`b_cnt", "c.d_cnt"))
+    assert(h.collect().map(r => (r.getLong(3), r.getLong(4))).toSeq == Seq((2L, 0L), (0L, 1L)))
+    assert(hist.toDensityDF.select("bin_center").count() == 2)
+    assert(hist.plotHist().contains("a`b"))
+  }
 }

@@ -1,0 +1,61 @@
+package graft.dist
+
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+
+/** The paper's performance claim as a checked contract: the reference pays
+  * ~3 Spark jobs per histogram series (rdd.py:2214-2366 plus two min/max
+  * collects); here a multi-series histogram pays a fixed number of jobs for
+  * any number of series. The budget is 2 actions, each a shuffle-map job
+  * plus a result job under AQE: 4 jobs with a data-derived range (min/max
+  * aggregate, then the count-vector aggregate) and 2 with an explicit
+  * range or explicit edges (the count-vector aggregate only). The series
+  * mix two parquet sources and several columns of one source; at N = 16
+  * every (source, column) pair repeats. */
+class HistogramJobContractSpec extends SparkSpec {
+
+  private lazy val sources: (DataFrame, DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("hist_jobs").toString
+    spark.range(2000).selectExpr("id % 50 AS a", "id * 0.5 AS b", "CAST(id % 7 AS DOUBLE) AS c")
+      .write.parquet(s"$dir/t")
+    spark.range(500).selectExpr("id * 3.0 AS d").write.parquet(s"$dir/u")
+    (spark.read.parquet(s"$dir/t"), spark.read.parquet(s"$dir/u"))
+  }
+
+  /** N series cycling t.a, t.b, u.d, t.c, t.a: at N = 16 every pair repeats. */
+  private def series(n: Int): Seq[(DataFrame, String)] = {
+    val (t, u) = sources
+    val pool = Seq((t, "a"), (t, "b"), (u, "d"), (t, "c"), (t, "a"))
+    (0 until n).map(i => pool(i % pool.size))
+  }
+
+  private val sizes = Seq(1, 4, 16)
+
+  /** Jobs of `DistExplore.hist` (one `select` per series, as a caller
+    * passes frames) and of `Histogram.build`, collected, at each N. */
+  private def jobs(bins: Bins, range: Option[(Double, Double)]): Seq[(String, Int)] =
+    sizes.flatMap { n =>
+      val ss = series(n)
+      val viaHist = jobsOf(DistExplore.hist(ss.map { case (df, c) => df.select(c) }, bins, range).collect())
+      val viaBuild = jobsOf {
+        val h = new Histogram(bins, range)
+        ss.foreach { case (df, c) => h.addColumn(df, c) }
+        h.build().collect()
+      }
+      Seq(s"hist N=$n" -> viaHist, s"build N=$n" -> viaBuild)
+    }
+
+  test("derived range: 4 jobs at N = 1, 4 and 16 series") {
+    val js = jobs(Bins.Count(10), None)
+    assert(js.map(_._2).distinct == Seq(4), js)
+    val (t, _) = sources
+    assert(jobsOf(Binning.histogram(t, "b").collect()) == 4)
+  }
+
+  test("explicit range or explicit edges: 2 jobs at N = 1, 4 and 16 series") {
+    val ranged = jobs(Bins.Count(10), Some((0.0, 500.0)))
+    assert(ranged.map(_._2).distinct == Seq(2), ranged)
+    val edged = jobs(Bins.Edges(Seq(0.0, 1.0, 10.0, 100.0, 1000.0)), None)
+    assert(edged.map(_._2).distinct == Seq(2), edged)
+  }
+}

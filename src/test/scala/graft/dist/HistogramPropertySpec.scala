@@ -1,6 +1,7 @@
 package graft.dist
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -41,16 +42,19 @@ class HistogramPropertySpec extends SparkSpec {
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
 
+  /** Expected counts of a derived-range histogram: the degenerate
+    * min == max (or one-bin) bucket holds every value (rdd.py:2295-2296). */
+  private def derivedOracle(vs: Seq[Double], n: Int): Seq[Long] = {
+    val lo = vs.min; val hi = vs.max
+    if (lo == hi || n == 1) Seq(vs.size.toLong)
+    else oracleCounts(vs, Binning.equalWidthEdges(lo, hi, n))
+  }
+
   test("property: engine == literal rdd.py oracle on derived-range histograms") {
     for (((vs, n), i) <- samples(Gen.zip(valuesGen, nBinsGen), 30).zipWithIndex) {
-      val df = vs.toDF("v")
-      val h = Binning.histogram(df, "v", Bins.Count(n))
+      val h = Binning.histogram(vs.toDF("v"), "v", Bins.Count(n))
         .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      val lo = vs.min; val hi = vs.max
-      val expected =
-        if (lo == hi || n == 1) Seq(vs.size.toLong)
-        else oracleCounts(vs, Binning.equalWidthEdges(lo, hi, n))
-      assert(h == expected, s"case $i: n=$n values=$vs")
+      assert(h == derivedOracle(vs, n), s"case $i: n=$n values=$vs")
     }
   }
 
@@ -63,18 +67,59 @@ class HistogramPropertySpec extends SparkSpec {
     }
   }
 
-  test("property: one-pass aggregate == groupBy formulation == rdd.py oracle") {
+  test("property: one-pass aggregate == literal rdd.py oracle on derived and uneven edges") {
     val edges = Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0)
     for (((vs, n), i) <- samples(Gen.zip(valuesGen, nBinsGen), 20).zipWithIndex) {
       val df = vs.toDF("v")
-      val viaAgg = Binning.histogramOnePass(df, "v", Bins.Count(n))
+      val derived = Binning.histogramOnePass(df, "v", Bins.Count(n))
         .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      val viaGroupBy = Binning.histogram(df, "v", Bins.Count(n))
+      assert(derived == derivedOracle(vs, n), s"case $i derived: n=$n values=$vs")
+      val uneven = Binning.histogramOnePass(df, "v", Bins.Edges(edges))
         .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      assert(viaAgg == viaGroupBy, s"case $i derived: n=$n values=$vs")
-      val unevenAgg = Binning.histogramOnePass(df, "v", Bins.Edges(edges))
-        .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
-      assert(unevenAgg == oracleCounts(vs, edges), s"case $i uneven: values=$vs")
+      assert(uneven == oracleCounts(vs, edges), s"case $i uneven: values=$vs")
+    }
+  }
+
+  test("property: multi-series over shared sources == independent reads == rdd.py oracle") {
+    val edges = Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0)
+    // case kinds by i % 4: mixed values, min == max, one row, empty (a, b)
+    for (i <- 0 until 12) {
+      val rnd = new scala.util.Random(100 + i)
+      def value(dirty: Boolean): java.lang.Double = rnd.nextInt(8) match {
+        case 0 if dirty => null
+        case 1 if dirty => Double.NaN
+        case _ => if (i % 4 == 1) 3.0 else math.round(rnd.nextDouble() * 2000 - 1000) / 10.0
+      }
+      val ab = i % 4 match {
+        case 2 => Seq((value(false), value(false)))
+        case 3 => Seq.empty
+        case _ => Seq.fill(1 + rnd.nextInt(40))((value(true), value(true)))
+      }
+      val cs = Seq.fill(1 + rnd.nextInt(20))(value(i % 4 != 2))
+      val bins = if (i % 4 == 3 || i == 4) Bins.Edges(edges) else Bins.Count(1 + rnd.nextInt(8))
+      // one frame for (a, b) read through two selects and itself, (a)
+      // repeated; against a fresh, unequal plan of the same rows per series
+      def abFrame(): DataFrame = ab.toDF("a", "b")
+      val t = abFrame()
+      val merged = Binning.histogramManyBins(Seq((t.select("a"), "a", "a"), (t, "b", "b"),
+        (cs.toDF("c"), "c", "c"), (t.select("a", "b"), "a", "a")), bins)
+      val apart = Binning.histogramManyBins(Seq((abFrame(), "a", "a"), (abFrame(), "b", "b"),
+        (cs.toDF("c"), "c", "c"), (abFrame(), "a", "a")), bins)
+      assert(merged.columns.toSeq == Seq("bin_id", "bin_lo", "bin_hi", "a_cnt", "b_cnt", "c_cnt", "a (1)_cnt"))
+      val rows = merged.collect().toSeq
+      assert(rows == apart.collect().toSeq, s"case $i: merged != independent reads")
+      val valid = (xs: Seq[java.lang.Double]) => xs.filter(x => x != null && !x.isNaN).map(_.doubleValue)
+      val perSeries = Seq(valid(ab.map(_._1)), valid(ab.map(_._2)), valid(cs), valid(ab.map(_._1)))
+      val expected = bins match {
+        case Bins.Edges(es) => perSeries.map(oracleCounts(_, es))
+        case Bins.Count(n) =>
+          val all = perSeries.flatten
+          val (lo, hi) = (all.min, all.max)
+          if (lo == hi || n == 1) perSeries.map(vs => Seq(vs.size.toLong))
+          else perSeries.map(oracleCounts(_, Binning.equalWidthEdges(lo, hi, n)))
+      }
+      for (k <- perSeries.indices)
+        assert(rows.map(_.getLong(3 + k)) == expected(k), s"case $i series $k: bins=$bins ab=$ab c=$cs")
     }
   }
 
