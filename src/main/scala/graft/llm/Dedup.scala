@@ -176,10 +176,17 @@ object Dedup {
     * filter runs *before* the shingle projection, so nothing expensive sits
     * under a pushable filter. */
   private[llm] def shingleDF(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame =
-    docs.select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("toks"))
+    shingled(docs.select(col(idCol).as("id"), col(textCol).as("text")), w)
+
+  /** [[shingleDF]]'s two stages over a frame with a `text` column: `text`
+    * becomes `sh`, docs under `w` tokens drop, other columns pass through. */
+  private def shingled(docs: DataFrame, w: Int): DataFrame = {
+    val keep = docs.columns.toSeq.filter(_ != "text").map(col)
+    docs.select(keep :+ TextAnalysis.tokens(col("text")).as("toks"): _*)
       .where(size(col("toks")) >= w)
-      .select(col("id"), array_distinct(
-        graft.functions.functions.shingle_window_hashes(col("toks"), w)).as("sh"))
+      .select(keep :+ array_distinct(
+        graft.functions.functions.shingle_window_hashes(col("toks"), w)).as("sh"): _*)
+  }
 
   /** Exact n-gram Jaccard near-duplicate pairs (similarity >= threshold).
     *
@@ -525,7 +532,7 @@ object Dedup {
     * [[minHashBucketRegistry]] and the streaming
     * `DocStreams.nearDupStream` (identical expressions, so all three
     * bucket identically). */
-  private def bandedMinHash(sh: DataFrame, k: Int, bands: Int, seed: Long): DataFrame = {
+  private[llm] def bandedMinHash(sh: DataFrame, k: Int, bands: Int, seed: Long): DataFrame = {
     val r = k / bands
     val sig = sh.select(col("id"), minHashSignature(col("sh"), k, seed).as("sig"))
     val bandStructs = (0 until bands).map(bIdx =>
@@ -576,14 +583,20 @@ object Dedup {
     *     the bucket min — the id-ordered fold the stream runs per
     *     micro-batch. One `min` aggregate, NO collect_list and NO
     *     `maxBucket` cap needed: a boilerplate bucket costs one row here.
-    * Every candidate is verified with EXACT shingle Jaccard; the prior
-    * corpus is tokenized only for the candidate reps (semi-join pushdown)
-    * — prior text never shuffles, and all pre-verify exchanges carry slim
-    * (band, bh, id) rows.
+    *
+    * One candidate pass: the distinct (id, cand) pairs are planned once
+    * and BROADCAST — at most `2 · bands` 16 B pairs per batch doc (one
+    * registry rep + one batch bucket-min per band: ≤ 512 B at 16 bands).
+    * Streamed (newDocs ∪ priorDocs) (id, text) rows join them map-side,
+    * so only candidate docs are shingled and no text crosses a shuffle;
+    * each pair gets EXACT shingle Jaccard against the persisted batch
+    * shingles. Every other exchange carries (band, bh, id) rows or
+    * shingle-hash arrays.
     *
     * Output: one row per batch doc — (idCol, dup_of, jaccard) with
     * dup_of = min verified match (NULL ⇒ the doc survives). Requires
-    * globally unique ids across `newDocs` and `priorDocs`.
+    * globally unique ids across `newDocs` and `priorDocs`; a registry rep
+    * missing from `priorDocs` is no candidate.
     *
     * Seeded-hash tier (xxhash64 signatures — no SQL mirror, declared
     * **omit**); [[nearDupCleanAgainstPrior]] is the oracle-bearing exact
@@ -596,21 +609,17 @@ object Dedup {
                                   w: Int = 3): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     graft.functions.SessionTuning.ensureActiveSession()
-    // the batch shingle frame feeds banding + both verify sides: one
-    // tokenize pass, not three (same lifecycle note as minHashNearDup)
+    // the batch shingle frame feeds banding and the verify join: one
+    // tokenize pass, not two (same lifecycle note as minHashNearDup)
     val sh = shingleDF(newDocs, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persist the slim (id, band, bh) banding too (r15, guide §1.2 step 2):
-    // three consumers read it (registry-collision probe, bucket-min agg,
-    // within-batch probe), and without this each re-ran the k-permutation
-    // MinHash signature loop — the query's single most expensive expression
-    // — from the persisted shingles. ~20 B/row, batch-sized. Cache
-    // lifecycle (ADVICE r15): both persists are owned by the SESSION, like
-    // minHashNearDup's — the returned frame is lazy, so there is no "after
-    // the final action" hook here; a steady-state per-batch driver should
-    // `spark.catalog.clearCache()` (or unpersist via the storage UI ids)
-    // between batches. Both caches are batch-sized (~20 B/row), not
-    // corpus-sized, so accumulation is bounded by batches per session.
+    // persist the slim (id, band, bh) banding too (r15): the collision
+    // probe, the bucket-min agg, the within-batch probe and a same-batch
+    // `minHashBucketRegistry` fold all read it instead of re-running the
+    // MinHash signature loop. Both persists are owned by the SESSION, like
+    // minHashNearDup's (the returned frame is lazy, so there is no "after
+    // the final action" hook): a per-batch driver should
+    // `spark.catalog.clearCache()` between batches. Both are batch-sized.
     val banded = bandedMinHash(sh, k, bands, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cross = banded
@@ -620,27 +629,17 @@ object Dedup {
     val within = banded.join(bmin, Seq("band", "bh"))
       .select(col("id"), col("cand")).where(col("id") =!= col("cand"))
     val cand = cross.unionByName(within).distinct()
-    // exact-Jaccard verify: candidate side = batch shingles ∪ shingles of
-    // ONLY the prior docs some candidate names (left_semi pushes the id
-    // filter into the prior scan)
-    val candIds = cand.select(col("cand")).distinct()
-    val priorSh = shingleDF(
-      priorDocs.join(candIds.select(col("cand").as(idCol)), Seq(idCol), "left_semi"),
-      idCol, textCol, w)
-    val candSide = sh.unionByName(priorSh)
-      .join(candIds.select(col("cand").as("id")), Seq("id"), "left_semi")
-    val verified = cand
-      .join(sh.select(col("id"), col("sh").as("sh_a")), Seq("id"))
-      .join(candSide.select(col("id").as("cand"), col("sh").as("sh_b")), Seq("cand"))
+    val text = (d: DataFrame) => d.select(col(idCol).as("cand"), col(textCol).as("text"))
+    val verified = shingled(text(newDocs).unionByName(text(priorDocs))
+        .join(broadcast(cand), "cand"), w)
+      .select(col("id"), col("cand"), col("sh").as("sh_b"))
+      .join(sh.select(col("id"), col("sh").as("sh_a")), "id")
       .select(col("id"), col("cand"),
         (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    // one-pass winner election (r15, guide §2.4): verified is unique per
-    // (id, cand), so min_by elects (min cand, its jaccard) in a single
-    // aggregate — the previous min + join-back referenced `verified` twice,
-    // which re-executed the whole candidate/verify subtree (and everything
-    // under it) a second time. Identical output: ties are impossible.
+    // one-pass winner election (r15): verified is unique per (id, cand), so
+    // min_by elects (min cand, its jaccard) in one aggregate, tie-free
     val best = verified.groupBy("id")
       .agg(min_by(struct(col("cand"), col("jaccard")), col("cand")).as("m"))
       .select(col("id"), col("m.cand").as("dup_of"), col("m.jaccard").as("jaccard"))

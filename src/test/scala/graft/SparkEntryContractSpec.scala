@@ -124,9 +124,9 @@ class SparkEntryContractSpec extends SparkSpec {
     "dedup_substrings_incremental_documents" -> 1_600_000L,
     // r15 incremental LSH near-dedup: banding/candidate exchanges carry
     // (band, bh, id) rows and the verify join shingle-hash ARRAYS of the
-    // batch + candidate reps only — text never crosses (ShuffleProbe
-    // sf0.001: 613,658 B)
-    "dedup_near_incremental_documents" -> 2_500_000L)
+    // batch + candidate docs only — text never crosses (ShuffleProbe
+    // sf0.001: 613,658 B; one-pass candidate verify, 4 cores: 129,313 B)
+    "dedup_near_incremental_documents" -> 550_000L)
 
   test("flagship slim-exchange queries stay under their shuffle-byte ceilings") {
     assume(testdataPresent)

@@ -39,4 +39,16 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     jobs.get
   }
+
+  /** Runs `body` with the given SQL confs set, restoring the previous
+    * values (or unsetting) afterwards. */
+  def withSQLConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

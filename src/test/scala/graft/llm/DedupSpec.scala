@@ -1,7 +1,10 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.functions.MinHashSig
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -613,6 +616,67 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val textCarriers = shuffles.filter(_.output.exists(_.name == "text"))
     assert(textCarriers.isEmpty,
       "document text crossed a shuffle exchange in the incremental LSH face")
+  }
+
+  test("minHashDedupAgainstRegistry: no shuffle exchange carries document " +
+    "text when prior, batch and registry are parquet and nothing auto-broadcasts") {
+    val dir = java.nio.file.Files.createTempDirectory("registry_text").toString
+    val docs = RegistryDedupFixtures.parquetDocs(spark,
+      RegistryDedupFixtures.nearDups(seed = 3L, prior = 300, dups = 60), s"$dir/docs")
+    val prior = docs.where(col("doc_id") < 300)
+    val batch = docs.where(col("doc_id") >= 300)
+    val registry = RegistryDedupFixtures.fold(spark,
+      RegistryDedupFixtures.emptyRegistry(spark), prior, s"$dir/registry")
+    // a corpus too big to auto-broadcast: the static plan's only broadcast
+    // is the one the operator asks for
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
+      val drops = df.where(col("dup_of").isNotNull).count()
+      assert(drops >= 50, s"only $drops of 60 planted near-dups dropped")
+      df.collect()
+      val shuffles = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: ShuffleExchangeExec => s
+      }
+      val textCarriers = shuffles.filter(_.output.exists(_.name == "text"))
+      assert(textCarriers.isEmpty,
+        s"document text crossed a shuffle exchange:\n${textCarriers.mkString("\n")}")
+    }
+  }
+
+  test("registry fold after minHashDedupAgainstRegistry on the same batch " +
+    "reads the persisted banding, not a second MinHash pass") {
+    // a literal registry, as read back from storage: no MinHash under it
+    val built = Dedup.minHashBucketRegistry(nearIncPrior)
+    val registry = spark.createDataFrame(java.util.Arrays.asList(built.collect(): _*), built.schema)
+    Dedup.minHashDedupAgainstRegistry(nearIncBatch, registry, nearIncPrior).collect()
+    val folded = Dedup.mergeMinHashRegistries(registry, Dedup.minHashBucketRegistry(nearIncBatch))
+    val plan = folded.queryExecution.withCachedData
+    val hasSig = (p: LogicalPlan) => p.expressions.exists(_.exists(_.isInstanceOf[MinHashSig]))
+    val cached = plan.collect { case r: InMemoryRelation => r }
+    assert(cached.exists(_.cacheBuilder.logicalPlan.exists(hasSig)),
+      s"fold did not read the cached banding:\n$plan")
+    assert(!plan.exists(hasSig), s"fold re-plans the batch's MinHash loop:\n$plan")
+  }
+
+  test("job budget: one warm ingest batch against a parquet registry runs a " +
+    "constant, budgeted number of Spark jobs") {
+    val budget = 16
+    val dir = java.nio.file.Files.createTempDirectory("registry_jobs").toString
+    val docs = RegistryDedupFixtures.parquetDocs(spark,
+      RegistryDedupFixtures.stream(seed = 11L, n = 400), s"$dir/docs")
+    var registry = RegistryDedupFixtures.emptyRegistry(spark)
+    val jobs = (0 until 4).map { b =>
+      val (lo, hi) = (b * 100L, (b + 1) * 100L)
+      val batch = docs.where(col("doc_id") >= lo && col("doc_id") < hi)
+      val prior = docs.where(col("doc_id") < lo)
+      val cleaned = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
+      val n = jobsOf(cleaned.collect())
+      registry = RegistryDedupFixtures.fold(spark, registry, batch, s"$dir/registry/$b")
+      n
+    }
+    info(s"jobs per batch: ${jobs.mkString(", ")}")
+    assert(jobs(2) == jobs(3), s"jobs per batch not constant: ${jobs.mkString(", ")}")
+    assert(jobs(2) <= budget, s"batch ran ${jobs(2)} jobs (budget $budget)")
   }
 
   test("editDistanceNearDup: SymSpell blocking finds all pairs within maxDist, none beyond") {

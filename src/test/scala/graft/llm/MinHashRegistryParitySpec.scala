@@ -1,0 +1,156 @@
+package graft.llm
+
+import scala.collection.mutable.ArrayBuffer
+import scala.util.Random
+
+import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** Seeded incremental near-dedup streams and the retained two-pass
+  * formulation of [[Dedup.minHashDedupAgainstRegistry]]. */
+object RegistryDedupFixtures {
+  // three-letter words: the tokenizer keeps only letters
+  private val vocab = (0 until 3000).map(i =>
+    Seq(i / 676, i / 26 % 26, i % 26).map(c => ('a' + c).toChar).mkString)
+
+  private def fresh(rnd: Random): String =
+    Seq.fill(40)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+
+  private def mutate(rnd: Random, text: String, edits: Int): String = {
+    val t = text.split(" ")
+    (1 to edits).foreach(_ => t(rnd.nextInt(t.length)) = vocab(rnd.nextInt(vocab.size)))
+    t.mkString(" ")
+  }
+
+  /** Texts of ids 0 until n. Each doc is fresh 40-token text, a 1–4 token
+    * edit of an earlier doc (J from ~0.5 to ~0.9, so the threshold cuts
+    * both ways), an exact copy of an earlier doc, or shingle-less. Earlier
+    * docs include the same batch's, so within-batch copies occur. */
+  def stream(seed: Long, n: Int): IndexedSeq[String] = {
+    val rnd = new Random(seed)
+    val texts = ArrayBuffer.empty[String]
+    (0 until n).foreach { i =>
+      val r = rnd.nextDouble()
+      texts += (
+        if (i == 0 || r < 0.45) fresh(rnd)
+        else if (r < 0.75) mutate(rnd, texts(rnd.nextInt(texts.size)), 1 + rnd.nextInt(4))
+        else if (r < 0.9) texts(rnd.nextInt(texts.size))
+        else if (r < 0.95) "short"
+        else "two words")
+    }
+    texts.toIndexedSeq
+  }
+
+  /** `prior` fresh docs (ids 0 until prior), then `dups` one-token edits of
+    * random prior docs (J ≥ 35/41 ≈ 0.85). */
+  def nearDups(seed: Long, prior: Int, dups: Int): IndexedSeq[String] = {
+    val rnd = new Random(seed)
+    val base = IndexedSeq.fill(prior)(fresh(rnd))
+    base ++ IndexedSeq.fill(dups)(mutate(rnd, base(rnd.nextInt(prior)), 1))
+  }
+
+  /** `texts` as (doc_id, text) parquet under `dir`, read back. */
+  def parquetDocs(spark: SparkSession, texts: Seq[String], dir: String): DataFrame = {
+    import spark.implicits._
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  def emptyRegistry(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(Seq(
+      StructField("band", IntegerType), StructField("bh", LongType),
+      StructField("rep_id", LongType))))
+
+  /** Folds `batch`'s buckets into `registry` through parquet at `dir`. */
+  def fold(spark: SparkSession, registry: DataFrame, batch: DataFrame, dir: String): DataFrame = {
+    Dedup.mergeMinHashRegistries(registry, Dedup.minHashBucketRegistry(batch))
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** The two-pass formulation the one-pass verify replaced: the candidate
+    * frame is planned twice (the verify join, and its distinct ids for a
+    * semi-join over the prior docs and over batch ∪ prior shingles).
+    * Default parameters and column names only. */
+  def reference(newDocs: DataFrame, registry: DataFrame, priorDocs: DataFrame): DataFrame = {
+    val (threshold, k, bands, seed, w) = (0.8, 128, 16, 42L, 3)
+    val sh = Dedup.shingleDF(newDocs, "doc_id", "text", w)
+    val banded = Dedup.bandedMinHash(sh, k, bands, seed)
+    val cross = banded
+      .join(registry.select(col("band"), col("bh"), col("rep_id")), Seq("band", "bh"))
+      .select(col("id"), col("rep_id").as("cand"))
+    val bmin = banded.groupBy("band", "bh").agg(min(col("id")).as("cand"))
+    val within = banded.join(bmin, Seq("band", "bh"))
+      .select(col("id"), col("cand")).where(col("id") =!= col("cand"))
+    val cand = cross.unionByName(within).distinct()
+    val candIds = cand.select(col("cand")).distinct()
+    val priorSh = Dedup.shingleDF(
+      priorDocs.join(candIds.select(col("cand").as("doc_id")), Seq("doc_id"), "left_semi"),
+      "doc_id", "text", w)
+    val candSide = sh.unionByName(priorSh)
+      .join(candIds.select(col("cand").as("id")), Seq("id"), "left_semi")
+    val verified = cand
+      .join(sh.select(col("id"), col("sh").as("sh_a")), Seq("id"))
+      .join(candSide.select(col("id").as("cand"), col("sh").as("sh_b")), Seq("cand"))
+      .select(col("id"), col("cand"),
+        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+    val best = verified.groupBy("id")
+      .agg(min_by(struct(col("cand"), col("jaccard")), col("cand")).as("m"))
+      .select(col("id"), col("m.cand").as("dup_of"), col("m.jaccard").as("jaccard"))
+    newDocs.select(col("doc_id").as("id"))
+      .join(best, Seq("id"), "left")
+      .select(col("id").as("doc_id"), col("dup_of"), col("jaccard"))
+      .orderBy("doc_id")
+  }
+}
+
+/** The one-pass verify of [[Dedup.minHashDedupAgainstRegistry]] must return
+  * exactly the rows, in order, of the retained two-pass reference over a
+  * seeded stream whose registry is folded through parquet batch by batch. */
+class MinHashRegistryParitySpec extends SparkSpec {
+  import RegistryDedupFixtures._
+
+  test("one-pass verify == two-pass reference, row for row, over a seeded " +
+    "4-batch stream with the registry folded through parquet") {
+    val dir = java.nio.file.Files.createTempDirectory("registry_parity").toString
+    val batchSize = 100
+    val docs = parquetDocs(spark, stream(seed = 7L, n = 4 * batchSize), s"$dir/docs")
+    // docs with id % 13 == 5 are deleted from the prior corpus but stay in
+    // the registry, so some registry reps are absent from priorDocs
+    val deleted = col("doc_id") % 13 === 5
+    var registry = emptyRegistry(spark)
+    val seen = scala.collection.mutable.Set.empty[String]
+    (0 until 4).foreach { b =>
+      val (lo, hi) = (b * batchSize.toLong, (b + 1) * batchSize.toLong)
+      val batch = docs.where(col("doc_id") >= lo && col("doc_id") < hi)
+      val prior = docs.where(col("doc_id") < lo && !deleted)
+      val got = Dedup.minHashDedupAgainstRegistry(batch, registry, prior).collect().toSeq
+      val want = reference(batch, registry, prior).collect().toSeq
+      assert(got.size == batchSize)
+      assert(got == want, s"batch $b differs from the reference")
+
+      // the cases the stream must cover
+      if (registry.isEmpty) seen += "empty registry"
+      val dupOf = got.filterNot(_.isNullAt(1)).map(r => r.getLong(0) -> r.getLong(1))
+      if (dupOf.exists { case (_, d) => d >= lo }) seen += "within-batch match"
+      if (dupOf.exists { case (_, d) => d < lo }) seen += "registry match"
+      if (batch.where(size(split(col("text"), " ")) < 3).count() > 0) seen += "shingle-less doc"
+      if (registry.where(col("rep_id") % 13 === 5).count() > 0) seen += "rep absent from prior"
+      val banded = Dedup.bandedMinHash(Dedup.shingleDF(batch, "doc_id", "text", 3), 128, 16, 42L)
+      val crossIds = banded.join(registry, Seq("band", "bh")).select("id")
+      val withinIds = banded
+        .join(banded.groupBy("band", "bh").agg(min("id").as("m")), Seq("band", "bh"))
+        .where(col("id") =!= col("m")).select("id")
+      if (!crossIds.intersect(withinIds).isEmpty) seen += "registry and batch candidates"
+
+      registry = fold(spark, registry, batch, s"$dir/registry/$b")
+    }
+    assert(seen == Set("empty registry", "within-batch match", "registry match",
+      "shingle-less doc", "rep absent from prior", "registry and batch candidates"))
+  }
+}
