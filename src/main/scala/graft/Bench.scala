@@ -141,28 +141,13 @@ object Bench {
     // hide behind an undocumented skip.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.r)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val sorted = all.filter { case (n, _) =>
-      only.forall(_.findFirstIn(n).isDefined) && skip.forall(_.findFirstIn(n).isEmpty) }
-    // declared design reasons for the standing sweep exclusions (SCALE.md);
-    // anything else dropped by a filter gets the generic subset reason
-    val exclusionReason: Map[String, String] = Map(
-      "emb_cosine_neardup" -> "exact all-pairs cosine verifier tier, quadratic by design; LSH sibling is the scale path",
-      "knn_graph_embeddings" -> "exact all-pairs kNN verifier tier, quadratic by design; knn_graph_lsh is the scale path",
-      "pagerank_knn_embeddings" -> "edge list built by the exact all-pairs kNN tier; rank iterations themselves are edge-join-bound (scale-safe), swap in knn_graph_lsh edges at scale",
-      "cosine_topk_embeddings" -> "exact brute-force top-k verifier; ann_lsh/ann_ivf are the scale path",
-      "events_value_quartiles" -> "exact global-percentile tier (sort-bound by design); quantiles_approx is the scale sibling",
-      "events_value_pctrank" -> "global-rank window (sort-bound by design); swept siblings cover window growth",
-      "debias_embeddings" -> "multi-iteration exact PC verifier tier; debias_fast (one-scan Gram) is the swept scale path",
-      "top_pc_fast_embeddings" -> "driver-side power iteration on the one-scan Gram matrix; cost is the Gram scan already swept via debias_fast",
-      "dedup_components" -> "log-round star contraction: locally job-count-bound, not data-bound; convergence rounds are property-tested instead",
-      "dedup_cluster_sizes" -> "rollup over dedup_components, same job-count-bound shape",
-      "dedup_clean_corpus_cc" -> "pipeline over dedup_components, same job-count-bound shape",
-      "mm_phash_neardup_documents" -> "aHash signatures over opaque synthetic payloads (the fallback path, not a real codec) feeding a bucketed near-dup; the real-codec cost signal lives in the swept mm_features/mm_video tiers",
-      "semdedup_seeded_embeddings" -> "oracle-verifier tier with FIXED k=8 cells (the price of an unrolled SQL mirror) — pair work is quadratic-over-8 by design; the corpus-adaptive semdedup_embeddings is the swept scale face",
-      "ann_ivf_seeded_topk_embeddings" -> "oracle-verifier tier with FIXED 8 cells/nprobe=4 (each query scores ~half the corpus by design, the price of an unrolled SQL mirror); ann_ivf_topk with corpus-tunable cells is the swept scale face")
-    val excluded = all.map(_._1).filterNot(sorted.map(_._1).toSet)
-      .map(n => n -> exclusionReason.getOrElse(n,
+    val all = SparkEntry.specs.sortBy(_.name)
+    val sorted = all.filter { q =>
+      only.forall(_.findFirstIn(q.name).isDefined) && skip.forall(_.findFirstIn(q.name).isEmpty) }
+    val names = sorted.map(_.name)
+    val kept = names.toSet
+    val excluded = all.filterNot(q => kept(q.name))
+      .map(q => q.name -> q.sweepNote.getOrElse(
         "out of this sweep subset (overhead-bound at the target SF or covered by a swept sibling; see SCALE.md)"))
     // ---- interleaved canary sweeps (r13 verdict #3). Each pass samples
     // the CPU canary at its start, after every `canaryEvery` queries, and
@@ -175,7 +160,7 @@ object Bench {
     // Overhead: ~1.1 s per sample, every 32 queries ≈ 8 samples per full
     // pass ≈ 3-4% of a full sf0.1 run.
     val canaryEvery = 32
-    def sweep(queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
+    def sweep(queries: Seq[QuerySpec])
         : (Map[String, Double], Map[String, Double], Seq[Double]) = {
       val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
       def sample(): Unit =
@@ -183,36 +168,26 @@ object Bench {
       sample()
       val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
       val basis = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      queries.zipWithIndex.foreach { case ((n, f), i) =>
+      queries.zipWithIndex.foreach { case (q, i) =>
         if (i > 0 && i % canaryEvery == 0) sample()
-        basis(n) = if (samples.nonEmpty) samples.last else Double.NaN
-        times(n) = once(n, f)
+        basis(q.name) = if (samples.nonEmpty) samples.last else Double.NaN
+        times(q.name) = once(q.name, q.build)
       }
       sample()
       (times.toMap, basis.toMap, samples.toSeq)
     }
     val (pass1, basis1, series1) = sweep(sorted)
     val (pass2, basis2, series2) = sweep(sorted)
-    // iterative multi-job queries (star-contraction rounds, Lloyd/power
-    // iterations) jitter run-to-run far more than single-job plans —
-    // r3 saw semdedup move 2.55→4.40 s on byte-identical code. A third
-    // pass for that tier makes the reported min a stable round-over-round
-    // signal instead of scheduler noise.
-    val iterative = Set(
-      "dedup_components", "dedup_cluster_sizes", "dedup_clean_corpus_cc",
-      "semdedup_embeddings", "semdedup_seeded_embeddings",
-      "debias_embeddings", "debias_fast_embeddings",
-      "top_pc_embeddings", "top_pc_fast_embeddings",
-      "ann_ivf_topk_embeddings", "ann_ivf_seeded_topk_embeddings")
-    val (pass3, basis3, series3) = sweep(sorted.filter { case (n, _) => iterative(n) })
+    // a third pass for the iterative tier (see QuerySpec.iterative)
+    val (pass3, basis3, series3) = sweep(sorted.filter(_.iterative))
     val passes: Map[String, Seq[Double]] =
-      sorted.map { case (n, _) => n -> (Seq(pass1(n), pass2(n)) ++ pass3.get(n)) }.toMap
+      names.map { n => n -> (Seq(pass1(n), pass2(n)) ++ pass3.get(n)) }.toMap
     // per-query normalization basis: the canary sample preceding the PASS
     // that produced the reported min (NaN-time passes never win)
     val passBases: Map[String, Seq[Double]] =
-      sorted.map { case (n, _) =>
+      names.map { n =>
         n -> (Seq(basis1(n), basis2(n)) ++ basis3.get(n)) }.toMap
-    val queryCalib: Map[String, Double] = sorted.flatMap { case (n, _) =>
+    val queryCalib: Map[String, Double] = names.flatMap { n =>
       val ts = passes(n)
       val ok = ts.zip(passBases(n)).filterNot(_._1.isNaN)
       if (ok.isEmpty) None else Some(n -> ok.minBy(_._1)._2)
@@ -223,7 +198,7 @@ object Bench {
     // a query with NO successful pass contributes nothing to the per-query
     // map or the total — a regression must make the bench number scream
     // (missing query + "failed" entry), not whisper (tiny failure time)
-    val results = sorted.flatMap { case (n, _) =>
+    val results = names.flatMap { n =>
       minSuccessful(passes(n)).map(n -> _) }
     // 3-decimal per-query times keep the emitted line compact (~140 queries
     // at full double precision overflow the driver's stdout tail window)

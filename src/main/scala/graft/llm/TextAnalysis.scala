@@ -23,14 +23,9 @@ object TextAnalysis {
     * one `filter(split(lower(text), "[^a-z]+"), _ != "")` produces (same
     * `Lower` code path, a-z byte runs of the lowercased string ≡ the regex
     * split's non-empty segments; equality property-pinned in
-    * TextAnalysisSpec against the original tree). */
+    * TokenShingleParitySpec against the original tree). */
   def tokens(text: Column): Column =
     graft.functions.functions.ascii_tokens(text)
-
-  /** The pre-r16 regex tokenizer tree — kept as the parity reference the
-    * spec checks [[tokens]] against (never used in a query path). */
-  private[llm] def tokensRegex(text: Column): Column =
-    filter(split(lower(text), "[^a-z]+"), t => t =!= lit(""))
 
   /** Top-k tokens by frequency, ties broken by token ascending.
     * Scale: explode + groupBy(token) hash-agg with map-side combine; the

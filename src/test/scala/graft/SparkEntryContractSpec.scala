@@ -1,17 +1,19 @@
 package graft
 
 /** Guards the driver contract itself: SparkEntry is what the harness runs,
-  * so a query that throws, an oracle key without a query, or a column-name
-  * mismatch between the two maps is a round-losing bug this suite catches
-  * at test time. Executes every declared query end-to-end on sf0.001. */
+  * so a query that throws, a name declared twice, or a spec out of step
+  * with its SURVEY §2.4 row is a round-losing bug this suite catches at
+  * test time. Executes every declared query end-to-end on sf0.001. */
 class SparkEntryContractSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def testdataPresent = new java.io.File(s"$sfDir/lineitem.parquet").exists()
 
-  test("every oracleSql key names a declared query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
+  test("declared query names are unique") {
+    // a Map literal silently kept the last of two equal keys; the specs Seq
+    // keeps both, so a duplicate name fails here
+    val dups = SparkEntry.specs.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
   }
 
   test("flagship entry() returns rows (driver t1 smoke)") {
@@ -26,7 +28,6 @@ class SparkEntryContractSpec extends SparkSpec {
   private val bnljAllowed = Set(
     // all-pairs verifier tier (scale tier = srpBucket/lshAnn/knnGraphLSH)
     "cosine_topk_embeddings", "emb_cosine_neardup", "knn_graph_embeddings",
-    "pagerank_knn_embeddings", // edges built by the exact kNN verifier tier
     "ann_brute_topk_embeddings", // broadcast(query-side), non-equi condition
     "centroid_sim_embeddings",   // pair join over a one-row-per-GROUP frame
     // crossJoin with a 1-row aggregate (corpus totals / bounds / stats row)
@@ -82,7 +83,7 @@ class SparkEntryContractSpec extends SparkSpec {
   test("every declared query executes end-to-end at sf0.001; no undeclared" +
     " nested-loop or cartesian plans") {
     assume(testdataPresent)
-    val failures = forEveryQuery { case (name, fn) =>
+    val results = forEveryQuery { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         assert(df.schema.nonEmpty)
@@ -92,13 +93,20 @@ class SparkEntryContractSpec extends SparkSpec {
         val plan = df.queryExecution.executedPlan.toString
         if (plan.contains("CartesianProduct"))
           throw new AssertionError("plans a CartesianProduct")
-        if (plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name))
+        val bnlj = plan.contains("BroadcastNestedLoopJoin")
+        if (bnlj && !bnljAllowed(name))
           throw new AssertionError("plans an undeclared BroadcastNestedLoopJoin")
         df.limit(5).collect()
-        None
-      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-    }.flatten
-    assert(failures.isEmpty, failures.mkString("\n"))
+        Right(name -> bnlj)
+      } catch { case e: Throwable => Left(s"$name: ${e.getMessage}") }
+    }
+    val failures = results.collect { case Left(msg) => msg }
+    // an allowance whose query no longer plans a BNLJ would silently admit
+    // a future one, so it must go
+    val planned = results.collect { case Right((name, true)) => name }.toSet
+    val stale = (bnljAllowed -- planned).toSeq.sorted
+      .map(n => s"$n allowed a BroadcastNestedLoopJoin but no longer plans one — prune the entry")
+    assert(failures.isEmpty && stale.isEmpty, (failures ++ stale).mkString("\n"))
   }
 
   // Slim-exchange contract (r12 verdict #8): these five flagship queries
@@ -573,13 +581,27 @@ class SparkEntryContractSpec extends SparkSpec {
     val survey = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
     val s24 = survey.split("### §2\\.4")(1).split("### §2\\.5")(0)
-    val rowName = """(?m)^\| `([a-z0-9_]+)` \|""".r
-    val documented = rowName.findAllMatchIn(s24).map(_.group(1)).toSet
+    val row = """(?m)^\| `([a-z0-9_]+)` \|(.*)$""".r
+    // name → the row's last (Oracle) cell
+    val oracleCell = row.findAllMatchIn(s24).map { m =>
+      m.group(1) -> m.group(2).trim.stripSuffix("|").split('|').last.trim
+    }.toMap
+    val documented = oracleCell.keySet
     val declared = SparkEntry.queries.keySet
     val undocumented = declared -- documented
     val phantom = documented -- declared
     assert(undocumented.isEmpty, s"queries missing a SURVEY §2.4 row: $undocumented")
     assert(phantom.isEmpty, s"SURVEY §2.4 rows without a query: $phantom")
+    // the Oracle cell is the one home of "why no oracle": yes/oracle ⇔ the
+    // spec carries SQL, **omit** ⇔ it does not
+    val mismatched = SparkEntry.specs.sortBy(_.name).flatMap { q =>
+      val cell = oracleCell(q.name)
+      val says = if (cell.startsWith("yes") || cell.startsWith("oracle")) Some(true)
+        else if (cell.startsWith("**omit**")) Some(false) else None
+      if (says.contains(q.oracle.isDefined)) None
+      else Some(s"${q.name}: Oracle cell '${cell.take(40)}' but oracle = ${q.oracle.isDefined}")
+    }
+    assert(mismatched.isEmpty, mismatched.mkString("\n"))
   }
 
   test("oracle SQL strings are DuckDB-shaped (no Spark-only escapes)") {
