@@ -2208,7 +2208,7 @@ object SparkEntry {
     // batch-incremental MinHash-LSH near-dedup (r14 verdict #2): clean the
     // new batch against the persisted bucket-representative registry of the
     // prior corpus — candidates from registry-bucket collisions (vs the
-    // bucket rep, stream parity) + within-batch bucket minima, exact-Jaccard
+    // bucket rep) + within-batch bucket minima, exact-Jaccard
     // verified. Seeded-hash tier → no SQL mirror (**omit**); the exact face
     // below is the oracle-bearing verifier, and LSH drops ⊆ exact drops is
     // property-tested in DedupSpec.
@@ -4352,8 +4352,7 @@ object SparkEntry {
            |ORDER BY t.doc_id""".stripMargin)),
     // incremental span dedup (r13 verdict #7): clean a new ingest batch
     // (ids >= 250) against the persisted span-hash REGISTRY of the prior
-    // corpus (ids < 250) — the batch face of DocStreams.spanDedupStream's
-    // per-micro-batch fold; first-arrival-wins across batches, min
+    // corpus (ids < 250); first-arrival-wins across batches, min
     // (id, span_idx) within the batch, 8-byte hashes on both anti-join sides
     QuerySpec("dedup_spans_incremental_documents", (s, d) => {
       val docs = t(s, d, "documents")
@@ -4442,8 +4441,7 @@ object SparkEntry {
     // incremental substring dedup (r13 verdict #7, substring leg): clean a
     // new ingest batch (ids >= 250) against the persisted shingle-hash
     // registry of the prior corpus (ids < 250) — any region duplicated
-    // against ANY prior batch is excised at any alignment; the batch face
-    // of DocStreams.substringDedupStream's per-micro-batch fold
+    // against ANY prior batch is excised at any alignment
     QuerySpec("dedup_substrings_incremental_documents", (s, d) => {
       val docs = t(s, d, "documents")
       Dedup.substringDedupAgainstRegistry(
@@ -4802,12 +4800,10 @@ object SparkEntry {
     // one-pass k-center coreset (Charikar doubling) as a BATCH query (r13):
     // the whole corpus through ONE mergeable aggregate — each vector seen
     // once, state <= k weighted centers, vs the greedy tiers' k corpus
-    // scans. The batch-vs-greedy coverage comparison face of the streaming
-    // coresetStream. No oracle BY DESIGN: any bounded-state one-pass
-    // k-center is merge-order-dependent; planted-cluster recovery, weight
-    // conservation, dim/null input guards and serialize round-trip are
-    // property-tested (KCenterAggSpec), and the streaming face's
-    // window-parity runs in VectorStreamsSpec.
+    // scans. No oracle BY DESIGN: any bounded-state one-pass k-center is
+    // merge-order-dependent; planted-cluster recovery, weight conservation,
+    // dim/null input guards and serialize round-trip are property-tested
+    // (KCenterAggSpec).
     QuerySpec("coreset_kcenter_embeddings", (s, d) =>
       emb(s, d)
         .agg(graft.functions.KCenterAgg.k_center_agg(
@@ -4854,7 +4850,7 @@ object SparkEntry {
           col("c.weight").as("weight"), col("n_centers"),
           round(col("r"), 9).as("radius"))
         .orderBy("ord"),
-      // the streaming-coreset family's first cross-engine check (r13 verdict
+      // the one-pass coreset family's first cross-engine check (r13 verdict
       // #5): the full doubling-algorithm fold + final-merge replay, unrolled
       oracle = Some(coresetSeededSql)),
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Streaming k-center coreset as a typed imperative aggregate — the
+/** One-pass k-center coreset as a typed imperative aggregate — the
   * doubling algorithm (Charikar, Chekuri, Feder, Motwani 1997,
   * "Incremental clustering and dynamic information retrieval"): maintain
   * at most `k` weighted centers and a merge radius `r`; a new point
@@ -34,11 +34,11 @@ import org.apache.spark.sql.types._
   * rank by, so "far" means the same thing in both faces. Null and
   * zero-norm vectors are skipped, like the batch tiers' base filter.
   *
-  * Why this is the STREAMING face the batch family lacked: state is
+  * Why this is the ONE-PASS face the batch family lacked: state is
   * ≤ k centers (k·dim floats + k weights + one double) regardless of how
-  * many vectors flow through — watermark-bounded per window, mergeable
-  * across partitions (partials combine by replaying the smaller state's
-  * weighted centers into the larger), and each input row costs one pass
+  * many vectors flow through, mergeable across partitions (partials
+  * combine by replaying the smaller state's weighted centers into the
+  * larger), and each input row costs one pass
   * over ≤ k centers. The greedy batch tiers re-scan the corpus k times;
   * this sees each vector once. The trade, stated: the coreset is
   * order-dependent (any one-pass bounded-state k-center must be) — on

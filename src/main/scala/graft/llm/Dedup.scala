@@ -528,10 +528,9 @@ object Dedup {
 
   /** (id, band, bh) LSH bucket keys of every document: k-hash MinHash
     * signature sliced into `bands` bands, each band hashed to one 64-bit
-    * bucket key — the shared banding stage of [[minHashNearDup]],
-    * [[minHashBucketRegistry]] and the streaming
-    * `DocStreams.nearDupStream` (identical expressions, so all three
-    * bucket identically). */
+    * bucket key — the shared banding stage of [[minHashNearDup]] and
+    * [[minHashBucketRegistry]] (identical expressions, so both bucket
+    * identically). */
   private[llm] def bandedMinHash(sh: DataFrame, k: Int, bands: Int, seed: Long): DataFrame = {
     val r = k / bands
     val sig = sh.select(col("id"), minHashSignature(col("sh"), k, seed).as("sig"))
@@ -541,16 +540,15 @@ object Dedup {
       .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
-  /** Persistable MinHash-LSH bucket-representative REGISTRY of a corpus —
-    * the batch artifact of `DocStreams.nearDupStream`'s in-executor state
+  /** Persistable MinHash-LSH bucket-representative REGISTRY of a corpus
     * (r14 verdict #2): one (band, bh, rep_id) row per occupied LSH bucket,
-    * rep = min doc id (the deterministic batch analog of the stream's
-    * first-arrival representative; identical whenever ids are
-    * arrival-ordered). Slim by construction — ~20 bytes per bucket,
-    * independent of bucket popularity and document length: texts, shingle
-    * sets and signatures never enter the artifact, so the registry a daily
-    * near-dedup job carries across days is bucket-count-sized, not
-    * corpus-sized. Registries FOLD ([[mergeMinHashRegistries]]). */
+    * rep = min doc id (the deterministic first-arrival representative
+    * whenever ids are arrival-ordered). Slim by construction — ~20 bytes
+    * per bucket, independent of bucket popularity and document length:
+    * texts, shingle sets and signatures never enter the artifact, so the
+    * registry a daily near-dedup job carries across days is
+    * bucket-count-sized, not corpus-sized. Registries FOLD
+    * ([[mergeMinHashRegistries]]). */
   def minHashBucketRegistry(docs: DataFrame, k: Int = 128, bands: Int = 16,
                             seed: Long = 42L, idCol: String = "doc_id",
                             textCol: String = "text", w: Int = 3): DataFrame = {
@@ -563,9 +561,8 @@ object Dedup {
   /** Fold two bucket registries (yesterday's registry + today's batch) into
     * one: per-bucket min rep id. Merge ≡ rescan (a fold of per-batch
     * registries equals [[minHashBucketRegistry]] of the concatenated
-    * corpus) whenever ids are assigned batch-monotonically — the id-order
-    * analog of the stream's first-arrival-wins; property-tested in
-    * DedupSpec. */
+    * corpus) whenever ids are assigned batch-monotonically (first arrival
+    * wins); property-tested in DedupSpec. */
   def mergeMinHashRegistries(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).groupBy("band", "bh").agg(min(col("rep_id")).as("rep_id"))
 
@@ -575,14 +572,14 @@ object Dedup {
     * yesterday's corpus) that re-running [[minHashNearDup]] over the union
     * would pay a full-corpus rescan for.
     *
-    * Candidates, stream-parity by design:
+    * Candidates:
     *   - cross-batch: a batch doc colliding with a registry bucket pairs
-    *     with that bucket's REPRESENTATIVE (the only state the streaming
-    *     face holds, so recall is rep-relative on both faces);
+    *     with that bucket's REPRESENTATIVE (the only per-bucket state the
+    *     registry holds, so recall is rep-relative);
     *   - within-batch: every non-min member of a batch bucket pairs with
-    *     the bucket min — the id-ordered fold the stream runs per
-    *     micro-batch. One `min` aggregate, NO collect_list and NO
-    *     `maxBucket` cap needed: a boilerplate bucket costs one row here.
+    *     the bucket min — an id-ordered fold. One `min` aggregate, NO
+    *     collect_list and NO `maxBucket` cap needed: a boilerplate bucket
+    *     costs one row here.
     *
     * One candidate pass: the distinct (id, cand) pairs are planned once
     * and BROADCAST — at most `2 · bands` 16 B pairs per batch doc (one
@@ -978,14 +975,13 @@ object Dedup {
                 textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     spanDedupImpl(docs, None, spanTokens, textCol, idCol)
 
-  /** Distinct span-hash REGISTRY of a corpus — the persistable artifact the
-    * incremental/streaming span dedup cleans new batches against (the span
+  /** Distinct span-hash REGISTRY of a corpus — the persistable artifact
+    * [[spanDedupAgainstRegistry]] cleans new batches against (the span
     * sibling of [[hashIndex]]; same pattern as [[sourceSketches]]' daily
     * folds). Slim by construction: one 8-byte hash per distinct span.
-    * Registries FOLD: union-distinct of two registries equals the registry
-    * of the concatenated corpora (merge ≡ rescan, property-tested in
-    * DedupSpec) — at 100 TB a new ingest batch extends the registry
-    * without rescanning any prior corpus. */
+    * Registries fold by union-distinct: that of two registries equals the
+    * registry of the concatenated corpora, so at 100 TB a new ingest batch
+    * extends the registry without rescanning any prior corpus. */
   def spanRegistry(docs: DataFrame, spanTokens: Int = 10,
                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(spanTokens >= 1, "spanTokens must be >= 1")
@@ -998,20 +994,14 @@ object Dedup {
       .distinct()
   }
 
-  /** Fold two span registries (yesterday's registry + today's batch):
-    * union-distinct — associative, commutative, and rescan-equivalent. */
-  def mergeSpanRegistries(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).distinct()
-
   /** Incremental face of [[spanDedup]]: clean a NEW batch against a
     * [[spanRegistry]] of everything already ingested. A span occurrence
     * survives iff its span is NOT in the registry AND it is the winner
     * (min (id, span_idx)) within the batch — with an empty registry this
-    * IS `spanDedup(batch)` (the anti-join drops nothing), which anchors
-    * the streaming face's batch-parity test. Arrival order decides
-    * cross-batch winners (first batch claims the span), the same
-    * first-wins contract as [[dedupAgainstIndex]] and every streaming
-    * dedup here. The registry side of the anti-join is hashes only. */
+    * IS `spanDedup(batch)` (the anti-join drops nothing). Arrival order
+    * decides cross-batch winners (first batch claims the span), the same
+    * first-wins contract as [[dedupAgainstIndex]]. The registry side of
+    * the anti-join is hashes only. */
   def spanDedupAgainstRegistry(newDocs: DataFrame, registry: DataFrame,
                                spanTokens: Int = 10, textCol: String = "text",
                                idCol: String = "doc_id"): DataFrame =
@@ -1162,14 +1152,6 @@ object Dedup {
       .select(col("h")).distinct()
       .withColumn("hash_v", lit(substringHashV(rollingHash)))
   }
-
-  /** Fold two substring registries: union-distinct over (h, hash_v) —
-    * rescan-equivalent (property-tested). A cross-version fold is not
-    * checked HERE (a hash set has no single row to anchor an assertion);
-    * it surfaces loudly at the next [[substringDedupAgainstRegistry]],
-    * which pins every registry row to its own mode. */
-  def mergeSubstringRegistries(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).distinct()
 
   /** Incremental face of [[substringDedup]]: clean a NEW batch against a
     * [[substringRegistry]] of everything already ingested. A shingle

@@ -1,19 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One media item: opaque bytes + typed metadata. The engine treats
   * image/audio/video as `binary` columns; decode happens per-partition in
   * executor code (the Scala analogue of `mapInPandas` batch UDFs). */
 case class MediaRecord(doc_id: Long, media: Array[Byte], kind: String)
-
-/** Extracted features. With real codec libraries, width/height/channels come
-  * from the decoded image header; here the decode step is STUBBED (see
-  * [[Multimodal.decodeStub]]) with a deterministic fake so the Spark-side
-  * plumbing — schema, partitioning, batch iteration — is real and testable. */
-case class MediaFeatures(doc_id: Long, n_bytes: Int, width: Int, height: Int,
-                         channels: Int, byte_sum: Long)
 
 /** Extracted audio features: decoded via the JDK's javax.sound.sampled when
   * the payload is a real RIFF/WAV container; all-zero register block (with
@@ -57,20 +50,6 @@ object Multimodal {
   def withFakeMedia(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.select(col("doc_id"), encode(col(textCol), "UTF-8").as("media"), lit("image").as("kind"))
 
-  /** STUB decoder for opaque (non-image) payloads — the fake derives
-    * plausible dimensions deterministically from the byte length, and
-    * byte_sum actually reads every byte so the per-partition data path is
-    * exercised end-to-end. Real encoded images take the [[decode]] path
-    * (javax.imageio), WAV audio [[decodeAudio]] (javax.sound), and
-    * MJPEG/AVI video [[decodeVideoFrames]] (RIFF walk + JDK JPEG);
-    * interframe codecs (H.264 etc.) would need ffmpeg bindings, absent in
-    * this container. */
-  def decodeStub(r: MediaRecord): MediaFeatures = {
-    val n = r.media.length
-    MediaFeatures(r.doc_id, n, 64 + n % 576, 64 + (n / 7) % 336, 3,
-      r.media.foldLeft(0L)((acc, b) => acc + (b & 0xff)))
-  }
-
   /** Magic-byte sniff for formats javax.imageio ships decoders for
     * (PNG, JPEG, GIF, BMP). Cheap guard so the ImageIO reader lookup —
     * stream probing over a registry — only runs on plausible payloads. */
@@ -82,41 +61,6 @@ object Multimodal {
       (b(0) == 'G' && b(1) == 'I' && b(2) == 'F') ||                 // GIF
       (b(0) == 'B' && b(1) == 'M')                                   // BMP
     }
-
-  /** Real decode via the JDK's javax.imageio when the payload is an actual
-    * encoded image; deterministic stub fallback for opaque payloads (or
-    * corrupt headers — ImageIO returns null / throws, never crashes a task).
-    * This is the capability-checked decode the judge's round-1 item 8 asked
-    * for: the container has no ffmpeg/imageio-ext, but PNG/JPEG/GIF/BMP
-    * decoding is in the JDK itself. */
-  def decode(r: MediaRecord): MediaFeatures = {
-    val img =
-      if (!looksLikeImage(r.media)) null
-      else
-        // NonFatal only: an OOM from a decompression-bomb image or a
-        // linkage error must fail the task, not silently fall back to
-        // the opaque-bytes hashing path
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.media))
-        catch { case scala.util.control.NonFatal(_) => null }
-    if (img == null) decodeStub(r)
-    else MediaFeatures(r.doc_id, r.media.length, img.getWidth, img.getHeight,
-      img.getColorModel.getNumComponents,
-      r.media.foldLeft(0L)((acc, b) => acc + (b & 0xff)))
-  }
-
-  /** Feature extraction as a per-partition batch pass (mapPartitions — the
-    * Scala analogue of mapInPandas: one iterator per partition, streaming,
-    * no per-row task overhead beyond the lambda). */
-  def extractFeatures(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(decode))
-  }
-
-  /** End-to-end: documents → fake media → per-partition decode → features. */
-  def documentFeatures(spark: SparkSession, docs: DataFrame): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    extractFeatures(withFakeMedia(docs).as[MediaRecord])
-  }
 
   /** 8×8 average-hash (aHash) perceptual signature: 64 cells, bit k set
     * when cell k's mean is at or above the global mean. Real encoded
@@ -201,55 +145,6 @@ object Multimodal {
                    maxBucket: Int = 200): DataFrame =
     Dedup.hammingNearDup(perceptualHashes(media), maxHamming, maxBucket)
 
-  /** STUB resize for OPAQUE payloads — keeps the contract honest when the
-    * bytes aren't a decodable image: output byte budget is exactly `w*h*3`
-    * (3 bytes/pixel), derived deterministically by truncating or
-    * zero-padding the payload. Real encoded images take [[resizeImage]]. */
-  def resizeStub(r: MediaRecord, w: Int, h: Int): MediaRecord =
-    MediaRecord(r.doc_id, java.util.Arrays.copyOf(r.media, w * h * 3), r.kind)
-
-  /** Real resize via the JDK imaging stack (no external codec needed):
-    * decode (javax.imageio) → bilinear rescale onto a w×h RGB canvas
-    * (java.awt Graphics2D) → re-encode as PNG. Deterministic for a fixed
-    * JDK (software raster pipeline, no GPU path); output is a valid PNG
-    * that round-trips through [[decode]] with the requested dimensions.
-    * Opaque / corrupt payloads fall back to [[resizeStub]] so the batch
-    * never throws on a bad record — the same quarantine-not-crash posture
-    * as [[Readers.splitCorrupt]]. Audio resampling would need ffmpeg
-    * bindings, absent in this container, and stays stubbed; video frames
-    * go through [[decodeVideoFrames]]. */
-  def resizeImage(r: MediaRecord, w: Int, h: Int): MediaRecord = {
-    val img =
-      if (!looksLikeImage(r.media)) null
-      else
-        // NonFatal only: decompression-bomb OOMs must fail the task loudly
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.media))
-        catch { case scala.util.control.NonFatal(_) => null }
-    if (img == null) resizeStub(r, w, h)
-    else {
-      val out = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = out.createGraphics()
-      try {
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, w, h, null)
-      } finally g.dispose()
-      val baos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(out, "png", baos)
-      MediaRecord(r.doc_id, baos.toByteArray, r.kind)
-    }
-  }
-
-  /** Resize as a per-partition batch pass (see [[extractFeatures]]): media
-    * bytes never hit the driver, and downstream operators see the same
-    * (doc_id, media, kind) schema — real images re-encoded at w×h, opaque
-    * payloads at the stub's exact `w*h*3` byte budget. */
-  def resize(media: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map(resizeImage(_, w, h)))
-  }
-
   /** Attach a fake image column: a REAL PNG per document (the image sibling
     * of [[withFakeAudio]]/[[withFakeVideo]]) — horizontal gray bands with
     * row-y gray level `(doc_id + y) % 256`, width `16 + octet_len(text)%48`,
@@ -319,8 +214,9 @@ object Multimodal {
     }
   }
 
-  /** Image feature extraction as a per-partition batch pass (the real-codec
-    * replacement for the [[decodeStub]] plumbing tier). */
+  /** Image feature extraction as a per-partition batch pass (mapPartitions
+    * — the Scala analogue of mapInPandas: one iterator per partition, no
+    * per-row task overhead beyond the lambda). */
   def extractImageFeatures(media: Dataset[MediaRecord]): Dataset[ImageFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap(decodeImageFeatures))
@@ -483,8 +379,8 @@ object Multimodal {
   }
 
   /** Audio feature extraction as a per-partition batch pass (see
-    * [[extractFeatures]]): bytes decoded exactly once per record, features
-    * (not bytes) are what shuffles downstream. */
+    * [[extractImageFeatures]]): bytes decoded exactly once per record,
+    * features (not bytes) are what shuffles downstream. */
   def extractAudioFeatures(media: Dataset[MediaRecord]): Dataset[AudioFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(decodeAudio))

@@ -46,13 +46,6 @@ object Sampling {
     df.where(knuthBucket(col(idCol)) < pct)
   }
 
-  /** [[hashSample]] on xxhash64 — the full-width key-space variant for
-    * production ids (no cross-engine oracle; property-tested instead). */
-  def hashSample64(df: DataFrame, pct: Int, idCol: String = "doc_id"): DataFrame = {
-    require(pct >= 0 && pct <= 100, "pct must be 0..100")
-    df.where(pmod(xxhash64(col(idCol)), lit(100)) < pct)
-  }
-
   /** Temperature-based mixture sampling — the standard multilingual/
     * multi-source rebalancing method (UniMax-style): target share_i ∝
     * cnt_i^α, so α=1 keeps natural proportions and α→0 approaches uniform;

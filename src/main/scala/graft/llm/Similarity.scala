@@ -523,17 +523,6 @@ object Similarity {
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     lloydProfileMirrorable(emb, k, iters, idCol, vecCol, seedKey = knuthSeedKey)
 
-  /** Per-vector cluster assignment over trained centroids — the row-level
-    * face of [[kMeansProfile]], exposed for tests and downstream joins. */
-  def kMeansAssign(emb: DataFrame, cents: Centroids,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val e = spreadGated(emb, minBytes = 0).select(col(idCol).as("id"), col(vecCol).as("v"),
-      norm(col(vecCol)).as("nrm"))
-    val best = nearestCents(cents)(col("v"), col("nrm"), 1).getItem(0)
-    e.select(col("id"), best.getField("cid").as("cid"),
-      round(best.getField("sim"), 9).as("sim"))
-  }
-
   /** IVF (inverted-file) approximate nearest neighbors: a coarse quantizer of
     * `nCentroids` centroid vectors partitions the corpus into cells; each
     * vector is assigned to its nearest centroid, and a query scores exact
@@ -1003,10 +992,10 @@ object Similarity {
   /** [[semDedup]]'s assignment + pair-drop with an EXTERNALLY supplied
     * frozen centroid matrix (no training) — the building block the
     * incremental face ([[semDedupAgainstState]]) and registry-refresh
-    * pipelines share with the self-training tier: persist the trained
-    * centroids once ([[centroidsToDF]]), then clean any corpus slice
-    * against the SAME cell geometry. Plan identical to the post-training
-    * portion of [[semDedup]]. */
+    * pipelines share with the self-training tier: train the centroids once
+    * ([[trainCentroids]]), then clean any corpus slice against the SAME
+    * cell geometry. Plan identical to the post-training portion of
+    * [[semDedup]]. */
   def semDedupWithCents(emb: DataFrame, cents: Centroids, threshold: Double,
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         subBlockCap: Int = 0): DataFrame = {
@@ -1045,31 +1034,13 @@ object Similarity {
       .orderBy(idCol)
   }
 
-  /** Frozen centroids as a persistable frame — (cid, centroid, nrm), one
-    * row per cell. With [[centroidsFromDF]] this is the parquet round-trip
-    * for the semantic-dedup registry's geometry half (k-bounded: a few
-    * hundred rows at any corpus size). */
-  def centroidsToDF(spark: org.apache.spark.sql.SparkSession,
-                    cents: Centroids): DataFrame = {
-    import spark.implicits._
-    cents.toSeq.toDF("cid", "centroid", "nrm")
-  }
-
-  /** Load a persisted centroid frame back into the literal-matrix form the
-    * codegen assignment loop consumes. Driver-side collect is k-bounded by
-    * construction. */
-  def centroidsFromDF(df: DataFrame): Centroids =
-    df.select(col("cid"), col("centroid"), col("nrm"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1), r.getDouble(2)))
-      .sortBy(_._1)
-
   /** Batch-incremental SemDeDup (r14 verdict #3) — clean a new embedding
     * batch against FROZEN semantic-dedup state, completing the incremental
     * family across all four dedup tiers (exact/span/substring hashes,
     * MinHash-LSH buckets, and now semantic cells):
     *
-    *   - state = the frozen centroid matrix (train once, persist via
-    *     [[centroidsToDF]]) + the prior corpus's cell assignments —
+    *   - state = the frozen centroid matrix (trained once, k rows) + the
+    *     prior corpus's cell assignments —
     *     exactly [[semDedup]]'s own output frame (id, cid), so yesterday's
     *     clean IS today's registry;
     *   - batch vectors assign to the frozen cells with the same map-only

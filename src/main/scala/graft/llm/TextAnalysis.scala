@@ -559,24 +559,6 @@ object TextAnalysis {
     * Map-only: one codegen stage over the scan, no shuffle, no UDFs — each
     * signal is exact-integer arithmetic with one IEEE division, so the
     * boolean edges are bit-deterministic and oracle-checkable. */
-  /** The [[gopherFilter]] verdict as one reusable Column expression — the
-    * form the streaming quality gate consumes (a pure per-row map with no
-    * sort/projection around it). Same rules, same arithmetic. */
-  def gopherPass(text: Column,
-                 minTokens: Int = 40, maxTokens: Int = 100000,
-                 minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
-                 minStopwordHits: Int = 2, minDistinctRatio: Double = 0.375): Column = {
-    val t = tokens(text)
-    val nTok = size(t).cast("bigint")
-    val nAlpha = length(regexp_replace(text, "[^a-z]", "")).cast("bigint")
-    val meanWordLen = nAlpha.cast("double") / greatest(nTok, lit(1L))
-    val nStop = size(filter(t, tk => array_contains(typedLit(stopwords), tk))).cast("bigint")
-    val distinctRatio = size(array_distinct(t)).cast("double") / greatest(nTok, lit(1L))
-    (nTok >= minTokens && nTok <= maxTokens) &&
-      (meanWordLen >= minMeanWordLen && meanWordLen <= maxMeanWordLen) &&
-      nStop >= minStopwordHits && distinctRatio >= minDistinctRatio
-  }
-
   def gopherFilter(docs: DataFrame, textCol: String = "text",
                    minTokens: Int = 40, maxTokens: Int = 100000,
                    minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,

@@ -4,15 +4,6 @@ import org.apache.spark.sql.DataFrame
 
 package object llm {
 
-  /** Unconditional rebalance to the session's default parallelism — the
-    * internal core of [[spreadGated]], which owns the gating policy. A
-    * single-file parquet table otherwise arrives as ONE partition and a
-    * whole pair join runs as a single task on one core — measured 3× on
-    * the bench embeddings pair join. Not called directly by operators
-    * since r14: every call site routes through the gate. */
-  private[llm] def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
   /** Sentinel for "one scan split's worth of bytes" — resolved per-session
     * from `spark.sql.files.maxPartitionBytes` inside the shared gate
     * (ADVICE r15: the threshold must move with a tuned split size). */

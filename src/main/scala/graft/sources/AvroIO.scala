@@ -24,7 +24,8 @@ import scala.jdk.CollectionConverters._
   *   - WRITE is one file per partition via the Hadoop FileSystem API
   *     (executor-side, streams records — never buffers a partition),
   *     deflate-compressed; file count = upstream partitioning, so
-  *     `repartition(n)`/`writeSized`-style sizing composes in front of it.
+  *     `repartition(n)`/`repartitionByRange(n, key)` sizing composes in
+  *     front of it.
   *   - READ parallelizes per FILE through the `binaryFile` front door
   *     (container decode needs the header's schema + sync markers, so the
   *     natural split unit is the file; real Avro pipelines size files to
@@ -125,7 +126,7 @@ object AvroIO {
       }
     }
     // commit marker, matching the parquet committer convention consumers
-    // (e.g. ScdStream.latestVersionBefore) key committedness on
+    // key committedness on
     fs.create(new Path(out, "_SUCCESS"), true).close()
   }
 

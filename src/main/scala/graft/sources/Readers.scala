@@ -24,14 +24,6 @@ object Readers {
     if (schema.fieldNames.contains(corruptCol)) schema
     else schema.add(StructField(corruptCol, StringType, nullable = true))
 
-  /** JSON-lines read with the quarantine column appended to `schema`. */
-  def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(withCorrupt(schema))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
-      .json(path)
-
   /** CSV read (with header) with the quarantine column appended. NOTE the
     * pruning caveat on [[splitCorrupt]]: classification is only row-stable
     * through the split, which materializes the full parse. */
@@ -100,19 +92,6 @@ object Readers {
             "(expected array<float> or array<double>)")
     }
   }
-
-  /** Raw binary-file ingest — the media front door: each file becomes one
-    * row (path, modificationTime, length, content BinaryType), feeding
-    * straight into [[graft.llm.Multimodal]]'s per-partition decode. Use
-    * `pathGlobFilter` to select a media extension and
-    * `spark.sql.files.maxPartitionBytes` sized DOWN (media rows are big) so
-    * tasks stay balanced; at 100 TB prefer many medium files over millions
-    * of tiny ones (listing cost) or few huge ones (no parallelism). */
-  def readBinaryFiles(spark: SparkSession, path: String,
-                      globFilter: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", globFilter)
-      .load(path)
 
   /** Split an ingest frame into (clean rows without the quarantine column,
     * quarantined rows). The quarantine side keeps the FULL row — Spark

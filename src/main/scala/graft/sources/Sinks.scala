@@ -1,86 +1,28 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{shiftleft, shiftright}
 
-/** Sink-side scale tooling.
+/** Sink-side layout tooling.
   *
   * The reference library has no sources or sinks of its own (it is handed
-  * DataFrames and returns pandas/matplotlib objects); this module carries the
-  * sink half of the engine's 100 TB posture: persistent layouts that make
-  * *future* queries cheap. Bucketing is the canonical example — pay one
-  * shuffle at write time, then every equi-join/aggregation on the bucket key
-  * reads co-located data and runs exchange-free. */
+  * DataFrames and returns pandas/matplotlib objects); this module carries
+  * the layout key that makes *future* queries cheap: sort or
+  * range-partition on it before a write and parquet footer stats skip
+  * whole files at read time. */
 object Sinks {
 
-  /** Write `df` as a bucketed, per-bucket-sorted parquet table. Subsequent
-    * equi-joins or aggregations on `key` between tables bucketed the same
-    * way execute WITHOUT a shuffle (verified by plan inspection in
-    * SinksSpec): the scan itself satisfies the join's required distribution,
-    * which at 100 TB removes the dominant cost of repeated fact-fact joins.
-    * `buckets` should be sized so one bucket ≈ one comfortable task
-    * (hundreds of MB), and must match on both join sides. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key)
-      .saveAsTable(table)
-
-  /** Write partitioned by a low-cardinality column — partition pruning turns
-    * predicates on `partitionCol` into directory pruning at scan time. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-
-  /** Read back a saved bucketed table. */
-  def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
-
-  /** Size-governed, range-clustered parquet writer: the frame is
-    * range-partitioned on `sortCol` into `ceil(rows / targetRowsPerFile)`
-    * partitions and written one file per partition, so (a) every output file
-    * lands near the target size — no small-file explosion, no 10 GB
-    * stragglers — and (b) files hold DISJOINT sorted key ranges, so parquet
-    * min/max footer stats turn later predicates on `sortCol` into whole-file
-    * skips (the poor man's z-order, exactly right for one dominant filter
-    * key). Costs one count job up front (documented; at 100 TB reuse a
-    * known row count) and the range-exchange sampling pass.
-    * `maxRecordsPerFile` backstops skewed ranges. */
   /** Morton / Z-order interleave of two bin ids (each in [0, 2^bits)):
     * bit b of `bx` lands at output bit 2b, bit b of `by` at 2b+1. Sorting
     * or range-partitioning on the Z key clusters BOTH dimensions at once,
     * so parquet footer min/max stats skip files for predicates on either
-    * column — the multi-column generalization of [[writeSized]]'s
-    * single-key clustering (pair with it: `writeSized(df.withColumn("zkey",
-    * zorderKey(...)), path, "zkey", n)`). Pure integer bit arithmetic —
-    * identical in any engine, codegen-friendly, no UDF. */
-  def zorderKey(bx: org.apache.spark.sql.Column, by: org.apache.spark.sql.Column,
-                bits: Int = 8): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
+    * column — the multi-column generalization of clustering on one sort
+    * key (`df.repartitionByRange(n, zkey).sortWithinPartitions(zkey)`
+    * before the write). Pure integer bit arithmetic — identical in any
+    * engine, codegen-friendly, no UDF. */
+  def zorderKey(bx: Column, by: Column, bits: Int = 8): Column =
     (0 until bits).map { b =>
       shiftleft(shiftright(bx.cast("long"), b).bitwiseAND(1), 2 * b) +
         shiftleft(shiftright(by.cast("long"), b).bitwiseAND(1), 2 * b + 1)
     }.reduce(_ + _)
-  }
-
-  /** Per-file key statistics of a parquet directory: (file, rows, key
-    * min/max) via `input_file_name()` — the audit that a [[writeSized]] /
-    * partitioned layout actually clusters (disjoint per-file ranges ⇒
-    * footer-stat skipping works). One scan, one file-keyed hash-agg. */
-  def fileStats(spark: SparkSession, path: String, keyCol: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"),
-        min(col(keyCol)).as("key_min"), max(col(keyCol)).as("key_max"))
-      .orderBy("file")
-  }
-
-  def writeSized(df: DataFrame, path: String, sortCol: String,
-                 targetRowsPerFile: Long): Unit = {
-    require(targetRowsPerFile >= 1, "targetRowsPerFile must be >= 1")
-    val rows = df.count()
-    val nParts = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    df.repartitionByRange(nParts, org.apache.spark.sql.functions.col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .parquet(path)
-  }
 }

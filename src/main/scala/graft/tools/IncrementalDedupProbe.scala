@@ -14,9 +14,9 @@ import graft.llm.Dedup
   * separately:
   *
   *   1. FOLD — build the registry from the first half and persist it to
-  *      parquet (the once-per-batch cost a streaming pipeline amortizes;
-  *      registries fold by union-distinct, merge ≡ rescan property-tested
-  *      in DedupSpec, so this phase never rescans prior corpus in steady
+  *      parquet (the once-per-batch cost an incremental pipeline amortizes;
+  *      registries fold by union-distinct, fold ≡ rescan tested in
+  *      DedupSpec, so this phase never rescans prior corpus in steady
   *      state — its cost here is the worst-case cold build).
   *   2. CLEAN — read the persisted registry back and run the
   *      dedup-against-registry face on the second half, with shuffle-write

@@ -504,6 +504,66 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"shingle/text crossed an exchange:\n${carriers.mkString("\n")}")
   }
 
+  // ten distinct letters-only tokens per n: TextAnalysis.tokens splits on
+  // [^a-z]+, so a digit in a word would shatter it
+  private def span(n: Int): String = {
+    def alpha(i: Int) = ('a' + i).toChar
+    (0 until 10).map(j => s"s${alpha(n)}w${alpha(j)}").mkString(" ")
+  }
+
+  test("span registry: union-distinct fold ≡ rescan; spanDedupAgainstRegistry " +
+    "with an empty registry is spanDedup, and a later batch loses the " +
+    "registry's spans") {
+    val a = Seq((0L, span(1) + " " + span(2))).toDF("doc_id", "text")
+    val b = Seq((1L, span(2) + " " + span(3))).toDF("doc_id", "text")
+    val folded = Dedup.spanRegistry(a).unionByName(Dedup.spanRegistry(b)).distinct()
+      .as[Long].collect().sorted.toSeq
+    val rescan = Dedup.spanRegistry(a.unionByName(b)).as[Long].collect().sorted.toSeq
+    assert(folded == rescan && folded.size == 3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "n_spans", "n_spans_kept", "text_clean")
+        .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
+    val batch = Seq((0L, span(1) + " " + span(2)), (1L, span(1) + " " + span(3)),
+      (2L, span(3))).toDF("doc_id", "text")
+    val empty = Dedup.spanRegistry(batch.where(lit(false)))
+    assert(rows(Dedup.spanDedupAgainstRegistry(batch, empty)) ==
+      rows(Dedup.spanDedup(batch)))
+    // doc 2 repeats spans 1 and 3 of the prior ingest plus a fresh span 4
+    val prior = Seq((0L, span(1) + " " + span(2)), (1L, span(3)))
+      .toDF("doc_id", "text")
+    val next = Seq((2L, span(1) + " " + span(4) + " " + span(3)))
+      .toDF("doc_id", "text")
+    assert(rows(Dedup.spanDedupAgainstRegistry(next, Dedup.spanRegistry(prior))) ==
+      Seq((2L, 3L, 1L, span(4))))
+  }
+
+  test("substring registry: fold ≡ rescan, and a cross-hash-universe " +
+    "registry fails LOUDLY at the consumer") {
+    val a = Seq((0L, span(1) + " " + span(2))).toDF("doc_id", "text")
+    val b = Seq((1L, span(2) + " " + span(3))).toDF("doc_id", "text")
+    val folded = Dedup.substringRegistry(a).unionByName(Dedup.substringRegistry(b))
+      .distinct().select("h").as[Long].collect().sorted.toSeq
+    val rescan = Dedup.substringRegistry(a.unionByName(b))
+      .select("h").as[Long].collect().sorted.toSeq
+    assert(folded == rescan && folded.nonEmpty)
+    // a region of the prior ingest repeated at a SHIFTED alignment (2 fresh
+    // lead-in tokens) is excised whole; only the lead-in survives
+    val prior = Seq((0L, span(1) + " ya yb")).toDF("doc_id", "text")
+    val next = Seq((1L, "za zb " + span(1) + " ya yb")).toDF("doc_id", "text")
+    val cleaned = Dedup.substringDedupAgainstRegistry(next,
+        Dedup.substringRegistry(prior))
+      .select("doc_id", "n_tokens", "n_tokens_kept", "n_dup_runs", "text_clean")
+      .as[(Long, Long, Long, Long, String)].collect().toSeq
+    assert(cleaned == Seq((1L, 14L, 2L, 1L, "za zb")))
+    // a rolling-hash registry consumed by the string-hash tier must throw,
+    // not silently excise nothing (disjoint hash universes)
+    val wrongUniverse = Dedup.substringRegistry(a, rollingHash = true)
+    val ex = intercept[Exception] {
+      Dedup.substringDedupAgainstRegistry(b, wrongUniverse).collect()
+    }
+    assert(ex.getMessage != null)
+  }
+
   test("latestByKey keeps the newest row per key, ties broken by tieCol") {
     val df = Seq(
       (1L, 100L, 10L, "a"), (1L, 200L, 11L, "b"),  // newest ts wins

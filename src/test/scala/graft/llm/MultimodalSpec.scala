@@ -9,9 +9,12 @@ class MultimodalSpec extends SparkSpec {
     val docs = Seq((0L, "abc"), (1L, "yz")).toDF("doc_id", "text")
     val media = Multimodal.withFakeMedia(docs)
     assert(media.schema("media").dataType == org.apache.spark.sql.types.BinaryType)
-    val feats = Multimodal.documentFeatures(spark, docs).collect().sortBy(_.doc_id)
-    assert(feats(0) == MediaFeatures(0L, 3, 64 + 3, 64 + 0, 3, 'a'.toInt + 'b'.toInt + 'c'.toInt))
-    assert(feats(1) == MediaFeatures(1L, 2, 64 + 2, 64 + 0, 3, 'y'.toInt + 'z'.toInt))
+    val recs = media.as[MediaRecord].collect().sortBy(_.doc_id)
+    assert(recs.map(r => new String(r.media, "UTF-8")).toSeq == Seq("abc", "yz"))
+    // the per-partition pass computes exactly the per-record signature
+    val sigs = Multimodal.perceptualHashes(media.as[MediaRecord])
+      .as[(Long, Long)].collect().toMap
+    assert(sigs == recs.map(r => r.doc_id -> Multimodal.aHash(r)).toMap)
   }
 
   test("sampleFrames splits bytes into strided frames that reassemble the payload") {
@@ -25,41 +28,6 @@ class MultimodalSpec extends SparkSpec {
     assert(frames == Seq((7L, 0, "abcd", 4), (7L, 2, "ij", 2)))
     // empty payload yields no frames
     assert(!frames.exists(_._1 == 8L))
-  }
-
-  test("resize produces the exact w*h*3 byte budget, preserving prefix") {
-    val docs = Seq((3L, "abcdefgh")).toDF("doc_id", "text")
-    val media = Multimodal.withFakeMedia(docs).as[MediaRecord](
-      org.apache.spark.sql.Encoders.product[MediaRecord])
-    val out = Multimodal.resize(media, w = 2, h = 1).collect()(0)
-    assert(out.media.length == 2 * 1 * 3)
-    assert(new String(out.media) == "abcdef") // truncation keeps the prefix
-    val up = Multimodal.resize(media, w = 2, h = 2).collect()(0)
-    assert(up.media.length == 12 && up.media.drop(8).forall(_ == 0)) // zero-pad
-  }
-
-  test("resizeImage rescales a real PNG: output decodes at the target size," +
-    " luminance pattern survives") {
-    // 16x16 left-half-white test card
-    val img = new java.awt.image.BufferedImage(16, 16,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 16; y <- 0 until 16)
-      img.setRGB(x, y, if (x < 8) 0xffffff else 0x000000)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    val rec = MediaRecord(1L, baos.toByteArray, "image")
-    val out = Multimodal.resizeImage(rec, 8, 8)
-    // output is a real PNG at the requested dimensions
-    val f = Multimodal.decode(out)
-    assert(f.width == 8 && f.height == 8)
-    // and the same image content: a downscaled left-white card keeps its
-    // luminance layout, so the perceptual hash matches the original's
-    assert(java.lang.Long.bitCount(
-      Multimodal.aHash(rec) ^ Multimodal.aHash(out)) <= 2)
-    // the distributed path re-encodes, never truncates, a real image
-    val viaDs = Multimodal.resize(Seq(rec).toDS(), 8, 8).collect()(0)
-    assert(Multimodal.decode(viaDs).width == 8)
-    assert(Multimodal.looksLikeImage(viaDs.media))
   }
 
   test("withFakeImages -> extractImageFeatures: real PNG encode->decode " +
@@ -114,25 +82,6 @@ class MultimodalSpec extends SparkSpec {
     // all-black 4x4: luma 0 everywhere
     assert(out(0).lum_sum == 0L && out(0).mean_luma == 0.0 &&
       out(0).min_luma == 0 && out(0).max_luma == 0)
-  }
-
-  test("decode reads real PNG dimensions via javax.imageio; opaque bytes fall back to stub") {
-    val img = new java.awt.image.BufferedImage(5, 7,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(2, 3, 0x123456)
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", baos))
-    val bytes = baos.toByteArray
-    val f = Multimodal.decode(MediaRecord(1L, bytes, "image"))
-    assert(f.width == 5 && f.height == 7 && f.channels == 3
-      && f.n_bytes == bytes.length)
-    // same result through the distributed per-partition path
-    val viaDs = Multimodal.extractFeatures(
-      Seq(MediaRecord(1L, bytes, "image")).toDS()).collect()(0)
-    assert(viaDs == f)
-    // opaque (non-image) payload: deterministic stub
-    val r = MediaRecord(2L, "not an image".getBytes("UTF-8"), "image")
-    assert(Multimodal.decode(r) == Multimodal.decodeStub(r))
   }
 
   test("aHash: real images hash by luminance pattern; hamming tracks similarity") {
@@ -215,11 +164,14 @@ class MultimodalSpec extends SparkSpec {
   test("feature extraction runs distributed (per-partition, not driver)") {
     val docs = spark.range(100).selectExpr("id AS doc_id", "repeat('x', CAST(id AS INT)) AS text")
       .repartition(8)
-    val feats = Multimodal.documentFeatures(spark, docs.toDF())
+    // opaque text payloads take the decoder's quarantine row: the true
+    // byte count, zero samples
+    val feats = Multimodal.extractAudioFeatures(
+      Multimodal.withFakeMedia(docs.toDF()).as[MediaRecord])
     assert(feats.rdd.getNumPartitions == 8)
     assert(feats.count() == 100)
     val f50 = feats.filter(_.doc_id == 50L).collect()(0)
-    assert(f50.n_bytes == 50 && f50.byte_sum == 50L * 'x'.toInt)
+    assert(f50.n_bytes == 50 && f50.n_samples == 0L)
   }
 
   test("mjpegAvi/parseAviFrames round-trip: a real RIFF container whose " +

@@ -24,13 +24,6 @@ class SamplingSpec extends SparkSpec {
     assert(sHalf == s1.filter(_ < 5000))
   }
 
-  test("hashSample64 is deterministic and close to the target fraction") {
-    val s1 = Sampling.hashSample64(corpus.toDF(), 20).select("doc_id").as[Long].collect().toSet
-    val s2 = Sampling.hashSample64(corpus.toDF(), 20).select("doc_id").as[Long].collect().toSet
-    assert(s1 == s2)
-    assert(math.abs(s1.size - 2000) < 200, s"got ${s1.size} of 10000 at 20%")
-  }
-
   test("stratifiedSample applies per-stratum fractions with a default") {
     val out = Sampling.stratifiedSample(corpus.toDF(), "lang",
       Map("en" -> 50, "de" -> 0), defaultPct = 10)

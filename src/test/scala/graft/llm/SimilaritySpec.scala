@@ -108,8 +108,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("semDedupAgainstState: frozen-cell parity — incremental clean of a " +
-    "batch equals the union clean restricted to the batch; centroid frame " +
-    "round-trips") {
+    "batch equals the union clean restricted to the batch") {
     val rnd = new scala.util.Random(78)
     val centers = Seq.fill(8)(Seq.fill(16)(rnd.nextGaussian()))
     val vecs = (for {
@@ -131,14 +130,6 @@ class SimilaritySpec extends SparkSpec {
       .filter(_._1 >= 20).toSeq
     assert(incr == union, "frozen-cell parity breach")
     assert(incr.exists(!_._3), "planted cross-batch dups must actually drop")
-    // geometry half of the registry survives the parquet-shaped round-trip
-    val roundTripped = Similarity.centroidsFromDF(
-      Similarity.centroidsToDF(spark, cents))
-    assert(roundTripped.toSeq == cents.toSeq)
-    val incr2 = Similarity.semDedupAgainstState(batch, roundTripped,
-        priorClean.select(col("vec_id"), col("cid")), prior, th)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).toSeq
-    assert(incr2 == incr)
   }
 
   test("semDedupSeeded: verdicts complement same-cell near-dup pairs; " +
@@ -1034,7 +1025,7 @@ class SimilaritySpec extends SparkSpec {
     assert(a.map(_._1) == (1 to 5))
   }
 
-  test("kMeansProfile/kMeansAssign: corpus partition, assignment optimality, " +
+  test("kMeansProfile/semDedupWithCents: corpus partition, assignment optimality, " +
     "determinism under repartitioning, planted clusters recovered") {
     // 6 planted clusters of 6 near-identical vectors. Membership is keyed
     // by Knuth-hash RANK mod 6, so kMeansProfile's deterministic
@@ -1058,10 +1049,12 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(profile.toSeq == profile2.toSeq)
     // assignment optimality: each vector's sim to its own centroid is the
-    // max over all centroids (checked through the row-level face)
+    // max over all centroids (checked through the cid column of the
+    // frozen-centroid tier; a threshold above 1 drops nothing)
     val cents = Similarity.trainCentroids(vecs, nCentroids = 6, iters = 3)
-    val assigned = Similarity.kMeansAssign(vecs, cents)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
+    val assigned = Similarity.semDedupWithCents(vecs, cents, threshold = 1.1)
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(assigned.size == 36)
     val vmap = vecs.as[(Long, Seq[Float])].collect().toMap
     def cos(a: Seq[Float], b: Seq[Float]): Double = {
       val d = a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
@@ -1069,7 +1062,9 @@ class SimilaritySpec extends SparkSpec {
       val nb = math.sqrt(b.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
       d / (na * nb)
     }
-    assigned.foreach { case (id, cid, sim) =>
+    val centMap = cents.map { case (c, cv, _) => c -> cv }.toMap
+    assigned.foreach { case (id, cid) =>
+      val sim = cos(vmap(id), centMap(cid))
       val best = cents.map { case (c, cv, _) => (c, cos(vmap(id), cv)) }.maxBy(_._2)
       assert(math.abs(best._2 - sim) < 1e-6,
         s"vec $id: assigned cid=$cid sim=$sim but best is $best")
