@@ -1729,46 +1729,26 @@ object SparkEntry {
           |GROUP BY band_id ORDER BY band_id""".stripMargin)),
 
     // 2-D box-overlap join: per-row (quantity, price) rectangles × literal
-    // query zones, written as the NAIVE 4-inequality overlap join and
-    // rewritten by plans.BoxJoinRewrite into a grid-cell hash equi-join —
-    // never a BNLJ (plan-asserted). The manual API with explicit dimensions
-    // is graft.dist.Joins.boxJoin (same cell machinery, JoinsSpec-tested).
+    // query zones through graft.dist.Joins.boxJoin — a grid-cell hash
+    // equi-join, never a BNLJ (plan-asserted).
     QuerySpec("box_join_lineitem", (s, d) => {
       import s.implicits._
-      // the cell-width confs arm BoxJoinRewrite for ANY later no-equi-key
-      // 4-inequality inner join in this (long-lived) session, with widths
-      // tuned for lineitem scales — a mismatched-scale box join elsewhere
-      // could explode its per-row cell sequence. Scope them to this query:
-      // optimize eagerly while armed, return a frame over the REWRITTEN
-      // plan (a later .write spins up a fresh QueryExecution, which would
-      // otherwise re-optimize with the confs already unset and fall back
-      // to the BNLJ), then unset in finally.
-      s.conf.set(graft.plans.BoxJoinRewrite.cellWidthXConf, "2.0")
-      s.conf.set(graft.plans.BoxJoinRewrite.cellWidthYConf, "1000.0")
-      try {
-        val zones = Seq(
-          (0, 0.0, 10.0, 0.0, 20000.0), (1, 5.0, 20.0, 15000.0, 40000.0),
-          (2, 18.0, 35.0, 30000.0, 70000.0), (3, 30.0, 50.0, 60000.0, 120000.0))
-          .toDF("zone_id", "zxlo", "zxhi", "zylo", "zyhi")
-        val boxes = t(s, d, "lineitem").select(
-            col("l_quantity").cast("double").as("q"),
-            col("l_extendedprice").cast("double").as("p"))
-          .select(col("p"),
-            (col("q") - 1.0).as("xlo"), (col("q") + 1.0).as("xhi"),
-            (col("p") - 500.0).as("ylo"), (col("p") + 500.0).as("yhi"))
-        val joined = boxes.join(zones,
-            col("xlo") <= col("zxhi") && col("zxlo") <= col("xhi") &&
-            col("ylo") <= col("zyhi") && col("zylo") <= col("yhi"))
-          .groupBy("zone_id")
-          .agg(count(lit(1)).as("n_boxes"),
-            sum(col("p").cast("decimal(18,6)")).cast("double").as("sum_price"))
-          .orderBy("zone_id")
-        org.apache.spark.sql.graftbridge.Bridge.ofRows(
-          s, joined.queryExecution.optimizedPlan)
-      } finally {
-        s.conf.unset(graft.plans.BoxJoinRewrite.cellWidthXConf)
-        s.conf.unset(graft.plans.BoxJoinRewrite.cellWidthYConf)
-      }
+      val zones = Seq(
+        (0, 0.0, 10.0, 0.0, 20000.0), (1, 5.0, 20.0, 15000.0, 40000.0),
+        (2, 18.0, 35.0, 30000.0, 70000.0), (3, 30.0, 50.0, 60000.0, 120000.0))
+        .toDF("zone_id", "zxlo", "zxhi", "zylo", "zyhi")
+      val boxes = t(s, d, "lineitem").select(
+          col("l_quantity").cast("double").as("q"),
+          col("l_extendedprice").cast("double").as("p"))
+        .select(col("p"),
+          (col("q") - 1.0).as("xlo"), (col("q") + 1.0).as("xhi"),
+          (col("p") - 500.0).as("ylo"), (col("p") + 500.0).as("yhi"))
+      graft.dist.Joins.boxJoin(boxes, "xlo", "xhi", "ylo", "yhi",
+          zones, "zxlo", "zxhi", "zylo", "zyhi", 2.0, 1000.0)
+        .groupBy("zone_id")
+        .agg(count(lit(1)).as("n_boxes"),
+          sum(col("p").cast("decimal(18,6)")).cast("double").as("sum_price"))
+        .orderBy("zone_id")
     },
       oracle = Some(
         """WITH zones(zone_id, zxlo, zxhi, zylo, zyhi) AS (VALUES

@@ -50,9 +50,8 @@ object Checks {
       extends Check { val name = s"subset_of($colName)" }
 
   /** Row-local violation predicate for `c`, or None when the rule needs its
-    * own aggregate/join (Unique, SubsetOf). Shared with the streaming gate,
-    * which can only evaluate row-local rules inside a windowed aggregate. */
-  private[graft] def isViolated(df: DataFrame, c: Check): Option[Column] = c match {
+    * own aggregate/join (Unique, SubsetOf). */
+  private def isViolated(df: DataFrame, c: Check): Option[Column] = c match {
     case NotNull(cn, _) =>
       import org.apache.spark.sql.types.{DoubleType, FloatType}
       val x = df(cn)
@@ -67,13 +66,12 @@ object Checks {
     case _ => None // needs its own aggregate/join
   }
 
-  /** The shared conditional-count aggregation columns and per-rule result
-    * structs for a set of row-local rules — used by both [[validate]] and
-    * the streaming gate so the two stay semantically identical. The sum is
-    * coalesced: over a 0-row frame `sum` is NULL while a rule over nothing
-    * has zero violations. Internal aliases are positional (rule names carry
-    * dots, which column resolution would read as nested-field access). */
-  private[graft] def ruleCounts(rowLocal: Seq[(Check, Column)])
+  /** The conditional-count aggregation columns and per-rule result structs
+    * for a set of row-local rules, for [[validate]]. The sum is coalesced:
+    * over a 0-row frame `sum` is NULL while a rule over nothing has zero
+    * violations. Internal aliases are positional (rule names carry dots,
+    * which column resolution would read as nested-field access). */
+  private def ruleCounts(rowLocal: Seq[(Check, Column)])
       : (Seq[Column], Seq[Column]) = {
     val aggs = count(lit(1)).as("n") +:
       rowLocal.zipWithIndex.map { case ((_, v), i) =>

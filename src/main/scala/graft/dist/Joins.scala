@@ -103,21 +103,6 @@ object Joins {
         rightPayload.map(c => col(s"__match.$c").as(s"r_$c")): _*)
   }
 
-  /** Range join: match each point row to every interval row with
-    * `lo <= point <= hi` (both ends inclusive) — points-to-intervals is the
-    * other join Spark lacks natively (IP-to-geolocation blocks, values to
-    * overlapping bands, timestamps to campaign windows).
-    *
-    * Implementation is cell bucketing, not a nested-loop join: intervals
-    * explode to the fixed-width cells they cover, points map to their ONE
-    * containing cell, the sides equi-join on the cell id (hash join — the
-    * naive `BETWEEN` condition plans as an O(points × intervals) BNLJ), and
-    * the exact predicate filters inside the join. A point lives in exactly
-    * one cell, so no dedup is needed. `cellWidth` trades replication for
-    * selectivity: intervals replicate `(hi-lo)/cellWidth + 1` times, points
-    * never replicate — size it near the typical interval width. A single
-    * enormous interval (≫ cellWidth) replicates proportionally; cap or
-    * split such outliers upstream. */
   /** Interval-overlap join: pairs whose CLOSED intervals [loA, hiA] and
     * [loB, hiB] overlap — sessions × maintenance windows, downtime ×
     * requests, any two interval sets. Spark's native plan for the overlap
@@ -157,13 +142,8 @@ object Joins {
     * [xlo, xhi] × [ylo, yhi] intersect — bounding boxes × query regions,
     * value/time band products, the join behind `zorder_lineitem`'s
     * locality story. Spark plans the 4-inequality conjunction as a
-    * nested-loop join (quadratic). The automatic plan path is
-    * [[graft.plans.BoxJoinRewrite]], which rewrites the naive WHERE-clause
-    * form when its column-name-affinity heuristic finds an unambiguous
-    * axis pairing (and refuses otherwise — see its scaladoc); this
-    * operator takes the dimensions EXPLICITLY, so it has no naming
-    * restriction, and plans as the same hash equi-join on a 2-D grid
-    * cell id.
+    * nested-loop join (quadratic); this operator takes the dimensions
+    * explicitly and plans as a hash equi-join on a 2-D grid cell id.
     *
     * The 1-D cell-bucketing of [[intervalJoin]] lifted to a grid: each
     * rectangle explodes to every (x-cell, y-cell) it covers, the sides
@@ -203,6 +183,21 @@ object Joins {
       .drop("__cx", "__cy")
   }
 
+  /** Range join: match each point row to every interval row with
+    * `lo <= point <= hi` (both ends inclusive) — points-to-intervals is the
+    * other join Spark lacks natively (IP-to-geolocation blocks, values to
+    * overlapping bands, timestamps to campaign windows).
+    *
+    * Implementation is cell bucketing, not a nested-loop join: intervals
+    * explode to the fixed-width cells they cover, points map to their ONE
+    * containing cell, the sides equi-join on the cell id (hash join — the
+    * naive `BETWEEN` condition plans as an O(points × intervals) BNLJ), and
+    * the exact predicate filters inside the join. A point lives in exactly
+    * one cell, so no dedup is needed. `cellWidth` trades replication for
+    * selectivity: intervals replicate `(hi-lo)/cellWidth + 1` times, points
+    * never replicate — size it near the typical interval width. A single
+    * enormous interval (≫ cellWidth) replicates proportionally; cap or
+    * split such outliers upstream. */
   def rangeJoin(points: DataFrame, ptCol: String, intervals: DataFrame,
                 loCol: String, hiCol: String, cellWidth: Double): DataFrame = {
     require(cellWidth > 0, "cellWidth must be positive")

@@ -17,16 +17,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    // no-ops unless their spark.graft.*.cellWidth confs are set
-    ext.injectOptimizerRule { session =>
-      // rule BUILDERS are the extensions path's only per-session hook, so
-      // the session tuning rides here — the same `SessionTuning.tune` the
-      // imperative path runs. Idempotent; user-set values respected.
+    // rule BUILDERS are the extensions path's only per-session hook, so the
+    // session tuning rides on a check-rule builder that checks nothing —
+    // the same `SessionTuning.tune` the imperative path runs. Idempotent;
+    // user-set values respected.
+    ext.injectCheckRule { session =>
       SessionTuning.tune(session)
-      graft.plans.RangeJoinRewrite
+      _ => ()
     }
-    ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.BoxJoinRewrite)
   }
 }
 
@@ -100,19 +98,13 @@ object GraftFunctions {
       })
   )
 
-  /** Register into an existing session (idempotent): the functions, the
-    * [[SessionTuning.tune]] session tuning and the three `graft.plans`
-    * rewrite rules — the imperative sibling of [[GraftExtensions]], giving
-    * the same confs and optimizer rules. */
+  /** Register into an existing session (idempotent): the functions and the
+    * [[SessionTuning.tune]] session tuning — the imperative sibling of
+    * [[GraftExtensions]], giving the same confs. */
   def register(spark: SparkSession): Unit = {
     SessionTuning.tune(spark)
     descriptors.foreach { case (id, fi, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, fi, builder)
     }
-    // each rule is a no-op unless its spark.graft.*.cellWidth conf is set
-    val rules = Seq(graft.plans.RangeJoinRewrite,
-      graft.plans.IntervalJoinRewrite, graft.plans.BoxJoinRewrite)
-    val cur = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = cur ++ rules.filterNot(cur.contains)
   }
 }

@@ -32,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   * Delivery is idempotent and consumer-path-complete:
   *   - `spark.sql.extensions=graft.functions.GraftExtensions` — the
   *     documented production wiring — applies it when the session builds
-  *     its optimizer ([[GraftExtensions]]).
+  *     its analyzer ([[GraftExtensions]]).
   *   - Each Column facade over a graft TypedImperativeAggregate calls
   *     [[ensureObjectAggHashPath]] against the active session at query
   *     BUILD time, so a vanilla untuned session calling any operator

@@ -365,19 +365,15 @@ class SparkEntryContractSpec extends SparkSpec {
         "narrow-scan-rooted gate regressed")
   }
 
-  test("box_join_lineitem scopes its rewrite confs: no spark.graft residue," +
-    " rewritten plan survives the unset") {
+  test("box_join_lineitem: a cell-bucketed join, no conf residue, 4 zones") {
     assume(testdataPresent)
     val df = SparkEntry.queries("box_join_lineitem")(spark, sfDir)
-    // the cell-width confs must not outlive the query build — a later
-    // mismatched-scale box join in this long-lived session would inherit
-    // lineitem-tuned widths and explode its per-row cell sequence
+    // the query sets no session conf, so no spark.graft.* key is left behind
     val residue = spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
     assert(residue.isEmpty, s"conf residue after box_join_lineitem: $residue")
-    // the rewrite must still be baked into the returned frame (a fresh
-    // QueryExecution after the unset would otherwise fall back to a BNLJ)
+    // Joins.boxJoin plans the overlap as a hash equi-join on grid cells
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), "rewrite did not survive conf unset")
+    assert(!plan.contains("BroadcastNestedLoopJoin"), "box join planned as a BNLJ")
     assert(df.count() == 4) // all four zones match rows at sf0.001
   }
 
