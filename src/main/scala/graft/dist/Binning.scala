@@ -1,11 +1,15 @@
 package graft.dist
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.HistogramAgg
@@ -28,19 +32,21 @@ object Bins {
 
 /** Distributed histogram core.
   *
-  * Design (SURVEY.md §3/§4): everything stays in the DataFrame world. Every
-  * series-based entry point ([[Binning.histogram]], [[Binning.histogramManyBins]],
-  * [[Binning.histogramColumns]], [[Histogram.build]]) runs on one core:
-  * series that read the same source share one scan, each distinct
-  * (source, column) is one nullable double slot of a union, and counting
-  * is one global aggregate of one [[graft.functions.HistogramAgg]] count
-  * vector per slot (the rdd.py:2347-2366 distributed shape inside Tungsten:
-  * the shuffle carries one n_bins-long vector per slot and partition, and
-  * dense bins come free from the buffer). A data-derived range adds one
-  * combined min/max aggregate over the same union. Two actions for any
-  * number of series, i.e. 4 Spark jobs under AQE (each global aggregate is
-  * a shuffle-map job plus a result job), 2 with an explicit range or edges;
-  * `HistogramJobContractSpec` checks both budgets at 1, 4 and 16 series.
+  * Design (SURVEY.md §3/§4): every series-based entry point
+  * ([[Binning.histogram]], [[Binning.histogramManyBins]],
+  * [[Binning.histogramColumns]], [[Binning.histogramLog]],
+  * [[Histogram.build]]) runs on one core: series that read the same source
+  * share one scan, and each distinct (source, column) is one nullable double
+  * slot of a union. The union is planned and code-generated once; its rows
+  * are then read in rdd.py's own shape (rdd.py:2347-2366, `mapPartitions`
+  * plus a driver-side merge): one job for a data-derived range and one job
+  * of one dense `long[n_bins]` count vector per slot and partition, both
+  * merged on the driver with no shuffle. So a histogram is 2 Spark jobs
+  * for any number of series, 1 with an explicit range or edges (each
+  * Catalyst global aggregate would be 2 under AQE: a shuffle-map job plus a
+  * result job); `HistogramJobContractSpec` checks both budgets at 1, 4 and
+  * 16 series. The result is built eagerly, like the reference's `build()`:
+  * a small local DataFrame whose collection runs no job.
   */
 object Binning {
 
@@ -110,17 +116,6 @@ object Binning {
   /** A column by its exact name: dots and backticks in it are not parsed. */
   private[dist] def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
-  /** bin_lo / bin_hi expressions for even-width bins, written so the exact
-    * same arithmetic is expressible in the DuckDB oracle (bit-identical
-    * doubles): lo_i = i*step + lo; hi_i = hi for the last bin else
-    * (i+1)*step + lo. */
-  private def evenEdgeCols(binId: Column, lo: Double, hi: Double, n: Int): (Column, Column) = {
-    val step = (hi - lo) / n
-    val binLo = binId * lit(step) + lit(lo)
-    val binHi = when(binId === lit(n - 1), lit(hi)).otherwise((binId + lit(1)) * lit(step) + lit(lo))
-    (binLo.as("bin_lo"), binHi.as("bin_hi"))
-  }
-
   /** Dense spine of bin ids 0..n-1 (tiny; the post-agg join against it is a
     * broadcast over at most n rows — never a scale concern). */
   private def spine(df: DataFrame, n: Int): DataFrame =
@@ -138,22 +133,79 @@ object Binning {
                 range: Option[(Double, Double)] = None): DataFrame =
     counted(Seq((df, colName)), Seq("cnt"), bins, range)
 
-  /** Combined min/max of a cleaned `x` frame in one aggregate (the
+  /** Min/max of the double column `x` of `df` in one Spark job (the
     * reference ran 2 collect jobs per series). */
-  private[dist] def minMaxOf(clean: DataFrame): (Double, Double) = rangeOf(clean, Seq(col("x")))
+  private[dist] def minMaxOf(df: DataFrame): (Double, Double) = executed(df.select("x"))(rangeOf(_, 1))
 
-  /** Shared range of several columns of one frame in ONE aggregate: min of
-    * mins / max of maxes. Nulls are skipped and NaN is excluded
-    * (rdd.py:2275-2282); NaN would otherwise poison max (NaN sorts
-    * greatest). */
-  private def rangeOf(df: DataFrame, xs: Seq[Column]): (Double, Double) = {
-    val nanFree = xs.map(x => when(!isnan(x), x))
-    // least/greatest need >= 2 args — pass a single column through
-    def fold(f: Seq[Column] => Column, cs: Seq[Column]) = if (cs.size == 1) cs.head else f(cs)
-    val r = df.agg(fold(least(_: _*), nanFree.map(min)), fold(greatest(_: _*), nanFree.map(max))).head()
-    if (r.isNullAt(0))
+  /** Runs `body` over the code-generated rows of `df` as one SQL execution
+    * named "histogram", so the UI and `QueryExecutionListener`s see the
+    * jobs it runs; `df` is planned once however many jobs `body` runs. */
+  private def executed[T](df: DataFrame)(body: RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("histogram"))(body(qe.toRdd))
+  }
+
+  /** Shared range of the first `width` double columns of `rows` in ONE job:
+    * min of mins / max of maxes, per partition and then on the driver in
+    * partition order. Nulls are skipped and NaN is excluded
+    * (rdd.py:2275-2282): it fails every comparison, so it never becomes a
+    * bound. An equal value never replaces a bound (the first of 0.0 and
+    * -0.0 is kept, as Spark's `min`/`max` keep it). */
+  private def rangeOf(rows: RDD[InternalRow], width: Int): (Double, Double) = {
+    val bounds = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      var (lo, hi) = (Double.PositiveInfinity, Double.NegativeInfinity)
+      it.foreach { r =>
+        var k = 0
+        while (k < width) {
+          if (!r.isNullAt(k)) {
+            val v = r.getDouble(k)
+            if (v < lo) lo = v
+            if (v > hi) hi = v
+          }
+          k += 1
+        }
+      }
+      (lo, hi)
+    })
+    val (lo, hi) = bounds.foldLeft((Double.PositiveInfinity, Double.NegativeInfinity)) {
+      case ((lo, hi), (l, h)) => (if (l < lo) l else lo, if (h > hi) h else hi)
+    }
+    if (lo > hi) // no value at all
       throw new IllegalArgumentException("can not generate buckets from empty RDD") // rdd.py:2290-2292
-    (r.getDouble(0), r.getDouble(1))
+    (lo, hi)
+  }
+
+  /** Dense counts of the first `slots` double columns of `rows` against
+    * `edges` in ONE job: slot k's counts are `counts(k * n until (k + 1) * n)`.
+    * Each partition fills one `long[slots * n]` through
+    * [[graft.functions.HistogramAgg.bucket]], which drops NaN and
+    * out-of-range values. The driver adds each task's vector into one
+    * total that starts at zeros as the task finishes (exact long sums, so
+    * the order does not matter and only one vector is held), and an input
+    * without partitions gives dense zeros. */
+  private def countsOf(rows: RDD[InternalRow], slots: Int, edges: Vector[Double]): Array[Long] = {
+    val n = edges.size - 1
+    val es = edges.toArray
+    val step = HistogramAgg.evenStep(edges)
+    val total = new Array[Long](slots * n)
+    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val c = new Array[Long](slots * n)
+      it.foreach { r =>
+        var k = 0
+        while (k < slots) {
+          if (!r.isNullAt(k)) {
+            val b = HistogramAgg.bucket(r.getDouble(k), es, step)
+            if (b >= 0) c(k * n + b) += 1L
+          }
+          k += 1
+        }
+      }
+      c
+    }, (_: Int, c: Array[Long]) => {
+      var i = 0
+      while (i < total.length) { total(i) += c(i); i += 1 }
+    })
+    total
   }
 
   /** Same output as [[histogram]], which already counts in one
@@ -172,7 +224,7 @@ object Binning {
     histogramManyBins(series, Bins.Count(n), range)
 
   /** [[histogramMany]] generalized to any [[Bins]] spec (explicit edges skip
-    * the min/max aggregate, mirroring the reference's `bins=list`). Labels
+    * the min/max job, mirroring the reference's `bins=list`). Labels
     * are de-duplicated ([[dedupeLabels]]) and only ever used as output
     * names, so any string is a valid label. */
   def histogramManyBins(series: Seq[(DataFrame, String, String)], bins: Bins,
@@ -212,13 +264,15 @@ object Binning {
     * Series whose sources ([[sourceOf]]) are equal and deterministic share
     * one union child; each distinct (source, column) is one nullable double
     * slot `s_k`, null in the children of the other sources, and a repeated
-    * pair reuses its slot. A data-derived range is one min/max aggregate
-    * over the union (first action); counting is one global aggregate of one
-    * `hist_counts(s_k, edges)` per slot (second action), which drops null,
-    * NaN and out-of-range values itself, so the union children carry no
-    * filter and are the same plan in both actions. The single result row
-    * is exploded into the dense bins and sorted locally: no pivot, no spine
-    * join, no range-partition sampling. */
+    * pair reuses its slot. The union is planned once and its rows read by
+    * at most two jobs in one SQL execution: [[rangeOf]] for a data-derived
+    * range, then [[countsOf]], which drops null, NaN and out-of-range values
+    * itself, so the union children carry no filter. The result is a local
+    * DataFrame of the dense, sorted bins: `bin_lo`/`bin_hi` are the edges
+    * themselves, user-supplied edges verbatim and derived ones as
+    * [[equalWidthEdges]] computes them (`i * step + lo`, `hi` last, the
+    * oracle's arithmetic), `[v, v]` for the one degenerate bucket. No
+    * column of it is nullable. */
   private def counted(series: Seq[(DataFrame, String)], names: Seq[String], bins: Bins,
                       range: Option[(Double, Double)]): DataFrame = {
     require(series.nonEmpty, "at least one series required")
@@ -230,36 +284,31 @@ object Binning {
     }
     val slotKeys = srcIdx.zip(located.map(_._2))
     val slots = slotKeys.distinct
-    val xs = slots.indices.map(k => col(s"s$k"))
     val spark = series.head._1.sparkSession
     val union = slots.map(_._1).distinct.map { j =>
       Bridge.ofRows(spark, located(j)._1).select(slots.zipWithIndex.map { case ((sj, a), k) =>
         (if (sj == j) Bridge.column(a) else lit(null)).cast("double").as(s"s$k")
       }: _*)
     }.reduce(_ union _)
-    val es: Vector[Double] = bins match {
-      case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(rangeOf(union, xs))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        equalWidthEdges(lo, hi, n)
+    val (es, counts) = executed(union) { rows =>
+      val es: Vector[Double] = bins match {
+        case Bins.Edges(e) => validateEdges(e); e.toVector
+        case Bins.Count(n) =>
+          val (lo, hi) = range.getOrElse(rangeOf(rows, slots.size))
+          require(lo <= hi, s"invalid range [$lo, $hi]")
+          equalWidthEdges(lo, hi, n)
+      }
+      (es, countsOf(rows, slots.size, es))
     }
     val nb = es.size - 1
-    val cnts = xs.zipWithIndex.map { case (x, k) => HistogramAgg.hist_counts(x, es).as(s"c$k") }
-    val b = col("pos")
-    // user-supplied edges are echoed back verbatim (element_at literals);
-    // derived edges keep the oracle-parity even-width arithmetic
-    val (binLo, binHi) = bins match {
-      case Bins.Edges(_) =>
-        (element_at(typedLit(es.init), b + 1).as("bin_lo"), element_at(typedLit(es.tail), b + 1).as("bin_hi"))
-      case _ if nb == 1 => (lit(es.head).as("bin_lo"), lit(es.last).as("bin_hi")) // [v, v] (rdd.py:2295-2296)
-      case _ => evenEdgeCols(b, es.head, es.last, nb)
+    val slotOf = slotKeys.map(slots.indexOf)
+    val out = (0 until nb).map { i =>
+      Row.fromSeq(Seq[Any](i, es(i), es(i + 1)) ++ slotOf.map(k => counts(k * nb + i)))
     }
-    val out = slotKeys.map(slots.indexOf).zip(names).map { case (k, nm) => col("col").getField(s"c$k").as(nm) }
-    union.agg(cnts.head, cnts.tail: _*)
-      .select(posexplode(arrays_zip(slots.indices.map(k => col(s"c$k")): _*)))
-      .select(Seq(b.as("bin_id"), binLo, binHi) ++ out: _*)
-      .orderBy("bin_id")
+    val schema = StructType(Seq(StructField("bin_id", IntegerType, nullable = false),
+      StructField("bin_lo", DoubleType, nullable = false), StructField("bin_hi", DoubleType, nullable = false)) ++
+      names.map(StructField(_, LongType, nullable = false)))
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /** Duplicate series names get " (k)" suffixes, mirroring the reference's
@@ -278,38 +327,24 @@ object Binning {
     }
   }
 
-  /** Grouped histogram: shared global range over the whole column, counts per
-    * (group, bin). Dense over distinct-groups × bins.
+  /** Grouped histogram: shared global range over the whole column (rows
+    * with a null group included), counts per (group, bin). Dense over
+    * non-null groups × bins.
     *
-    * Counting is one [[graft.functions.HistogramAgg]] vector per group — the
-    * shuffle carries n_groups fixed-width count vectors instead of
-    * n_groups × n_bins rows, and dense bins come free from the buffer (a
-    * group with zero in-range rows is back-filled with a literal zero
-    * vector), so no bins-spine cross join is needed. */
+    * One grouped aggregate of one [[graft.functions.HistogramAgg]] vector
+    * per group — the shuffle carries n_groups fixed-width count vectors
+    * instead of n_groups × n_bins rows. `hist_counts` drops null, NaN and
+    * out-of-range values and counts the degenerate `[v, v]` bucket, and
+    * every group's buffer is dense from its first row, so a group whose
+    * values are all dropped still gets its zero bins. */
   def histogramByGroup(df: DataFrame, valueCol: String, groupCol: String, n: Int = 10,
                        range: Option[(Double, Double)] = None): DataFrame = {
-    val clean = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
-      .where(col("x").isNotNull && !isnan(col("x")))
-    val (lo, hi) = range.getOrElse(minMaxOf(clean))
+    val x = col(valueCol).cast("double")
+    val (lo, hi) = range.getOrElse(minMaxOf(df.select(x.as("x"))))
     val es = equalWidthEdges(lo, hi, n)
-    val nb = es.size - 1
-    if (lo == hi) { // degenerate: fall back to the row formulation
-      val counts = clean.where(col("x") === lit(lo))
-        .groupBy(col("grp")).agg(count(lit(1)).as("cnt"))
-        .select(col("grp"), lit(0).cast("int").as("bin_id"), col("cnt"))
-      return df.select(col(groupCol).as("grp")).where(col("grp").isNotNull).distinct()
-        .join(counts, Seq("grp"), "left").na.fill(0L, Seq("cnt"))
-        .select(col("grp").as(groupCol), coalesce(col("bin_id"), lit(0)).as("bin_id"), col("cnt"))
-        .orderBy(groupCol, "bin_id")
-    }
-    val counts = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-      .groupBy(col("grp"))
-      .agg(graft.functions.HistogramAgg.hist_counts(col("x"), es).as("cnts"))
-    val grpSpine = df.select(col(groupCol).as("grp")).where(col("grp").isNotNull).distinct()
-    grpSpine.join(counts, Seq("grp"), "left")
-      .withColumn("cnts", coalesce(col("cnts"), typedLit(Vector.fill(nb)(0L))))
-      .select(col("grp"), posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
-      .select(col("grp").as(groupCol), col("bin_id").cast("int").as("bin_id"), col("cnt"))
+    df.where(col(groupCol).isNotNull).groupBy(col(groupCol).as("grp"))
+      .agg(HistogramAgg.hist_counts(x, es).as("cnts"))
+      .select(col("grp").as(groupCol), posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
       .orderBy(groupCol, "bin_id")
   }
 
@@ -332,8 +367,8 @@ object Binning {
     * histogram for heavy-tailed columns where equal-width bins put
     * everything in one bucket.
     *
-    * Two jobs, like the data-derived-range path: one quantile aggregate
-    * (n+1 doubles to the driver) and one counting pass. The exact
+    * One quantile aggregate (n+1 doubles to the driver), then one
+    * counting job ([[histogram]] at explicit edges). The exact
     * percentile buffers the column per partition — at 100 TB compute edges
     * with `approx_percentile` instead (sketch tier, same downstream
     * binning); this is the oracle-checkable verifier tier. Fails fast if
@@ -400,8 +435,9 @@ object Binning {
     * the exact lo/hi (absorbing float error, as the even-width path does);
     * binning is the standard explicit-edges bisect. Non-positive values are
     * dropped with nulls/NaNs (log scale is undefined there — documented
-    * divergence from the linear drop rule). Same two-action shape as
-    * [[histogram]]: one min/max aggregate, one counting aggregate. */
+    * divergence from the linear drop rule). Two Spark jobs: one for the
+    * min/max of the positive values, one for the counts ([[histogram]] at
+    * that explicit range). */
   def histogramLog(df: DataFrame, colName: String, n: Int = 10,
                    range: Option[(Double, Double)] = None): DataFrame = {
     require(n >= 1, "bins must be >= 1")
@@ -427,8 +463,8 @@ object Binning {
     * the rdd.py:2350-2351 drop rule, applied per axis; each axis keeps the
     * closed-last-bucket clamp.
     *
-    * Same two-job shape as the 1-D path: one combined min/max agg for both
-    * axes, one counting pass (`groupBy(bin_x, bin_y)` hash-agg — shuffle of
+    * Two actions: one combined min/max agg for both axes, one counting
+    * pass (`groupBy(bin_x, bin_y)` hash-agg — shuffle of
     * at most nx × ny rows), then a dense-grid spine join (tiny broadcast).
     * Degenerate axes (min == max) collapse to a single closed bucket on that
     * axis. Output: (bin_x, bin_y, x_lo, x_hi, y_lo, y_hi, cnt), dense,
@@ -480,8 +516,9 @@ object Binning {
     *
     * The weight sum aggregates as `decimal(28,6)` casts so it is
     * order-independent under any partitioning (double summation would drift
-    * with the shuffle schedule), surfaced as a double. Same two-job,
-    * n_bins-row-shuffle shape as [[histogram]]. Output: (bin_id, bin_lo,
+    * with the shuffle schedule), surfaced as a double. A derived range is one job
+    * ([[minMaxOf]]); the counts are one grouped aggregate, an n_bins-row
+    * shuffle. Output: (bin_id, bin_lo,
     * bin_hi, cnt, wsum), dense, sorted. */
   def histogramWeighted(df: DataFrame, colName: String, weightCol: String,
                         bins: Bins = Bins.Count(10),
@@ -512,8 +549,11 @@ object Binning {
       .orderBy("bin_id")
   }
 
-  /** One-job min/max over several columns of one frame (combined agg) —
-    * the reference ran 2 collect jobs PER series (SURVEY.md §3 step 2). */
+  /** Min/max over several columns of one frame in one combined aggregate —
+    * the reference ran 2 collect jobs PER series (SURVEY.md §3 step 2). It
+    * stays a Spark aggregate (2 jobs under AQE) because it returns Spark's
+    * `min`/`max`, where NaN is the greatest value; a histogram's range
+    * skips NaN instead ([[rangeOf]]). */
   def minMax(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"${c}_min"),

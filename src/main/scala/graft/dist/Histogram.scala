@@ -49,12 +49,13 @@ class Histogram(bins: Bins = Bins.Count(10), range: Option[(Double, Double)] = N
     this
   }
 
-  /** Idempotent materialization (reference build(), ~L95-120) through
-    * [[Binning.histogramManyBins]]: one scan per distinct source per action,
-    * one min/max aggregate for a derived range and one count-vector
-    * aggregate for all series — 4 Spark jobs for any number of series, 2
-    * with an explicit range or edges, which skip the min/max (~L104).
-    * `HistogramJobContractSpec` holds it to that budget. */
+  /** Idempotent, eager materialization (reference build(), ~L95-120)
+    * through [[Binning.histogramManyBins]]: one scan per distinct source
+    * per job, one min/max job for a derived range and one count-vector job
+    * for all series — 2 Spark jobs for any number of series, 1 with an
+    * explicit range or edges, which skip the min/max (~L104). The result
+    * is a local DataFrame; `HistogramJobContractSpec` holds the build to
+    * that budget. */
   def build(): DataFrame = built.getOrElse {
     val b = Binning.histogramManyBins(series.toSeq, bins, range)
     built = Some(b)

@@ -22,7 +22,8 @@ package object dist {
     def histogramBy(valueCol: String, groupCol: String, bins: Int = 10): DataFrame =
       Binning.histogramByGroup(df, valueCol, groupCol, bins)
 
-    /** One-job min/max over several numeric columns. */
+    /** Min/max over several numeric columns in one aggregate (2 jobs under
+      * AQE; NaN counts as the greatest value, as in Spark's `max`). */
     def minMax(cols: String*): DataFrame = Binning.minMax(df, cols)
 
     /** Density points (bin centers × counts) — reference distplot data. */

@@ -22,10 +22,9 @@ import org.apache.spark.sql.types._
   * n_bins-long vector per partition (or per group key when grouped). At
   * 100 TB that is the minimum possible traffic for this computation.
   *
-  * Bucket semantics identical to [[graft.dist.Binning.binId]]: even-width
-  * fast path `min(floor((x-lo)/step), n-1)` (closed last bucket), uneven
-  * boundaries by binary search; null/NaN/out-of-range silently dropped
-  * (rdd.py:2350-2356). */
+  * Bucket semantics identical to [[graft.dist.Binning.binId]], in one
+  * place, [[HistogramAgg.bucket]], which the driver-merged histogram loop
+  * of [[graft.dist.Binning]] calls too; null input is dropped here. */
 case class HistogramAgg(
     child: Expression,
     edges: Seq[Double],
@@ -34,13 +33,8 @@ case class HistogramAgg(
   extends TypedImperativeAggregate[Array[Long]] {
 
   private val n = edges.size - 1
-  private val lo = edges.head
-  private val hi = edges.last
-  private val evenStep: Double = {
-    val steps = edges.sliding(2).map(p => p(1) - p(0)).toVector
-    if (steps.max - steps.min < 1e-10) (hi - lo) / n else Double.NaN // rdd.py:2340-2342
-  }
   private val edgeArr = edges.toArray
+  private val step = HistogramAgg.evenStep(edges)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case DoubleType => TypeCheckResult.TypeCheckSuccess
@@ -58,19 +52,8 @@ case class HistogramAgg(
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val x = v.asInstanceOf[Double]
-      if (!x.isNaN && x >= lo && x <= hi) {
-        val bin =
-          if (n == 1) 0 // degenerate min==max bucket (rdd.py:2295-2296)
-          else if (!evenStep.isNaN) math.min(((x - lo) / evenStep).toInt, n - 1)
-          else {
-            // bisect_right(edges, x) - 1, clamped to the closed last bucket
-            var b = java.util.Arrays.binarySearch(edgeArr, x)
-            if (b < 0) b = -b - 2 // insertion point - 1
-            math.min(b, n - 1)
-          }
-        buf(bin) += 1L
-      }
+      val bin = HistogramAgg.bucket(v.asInstanceOf[Double], edgeArr, step)
+      if (bin >= 0) buf(bin) += 1L
     }
     buf
   }
@@ -103,6 +86,29 @@ case class HistogramAgg(
 }
 
 object HistogramAgg {
+  /** The common bin width of `edges` when they are evenly spaced within
+    * rdd.py's 1e-10 tolerance (rdd.py:2340-2342), else NaN. */
+  def evenStep(edges: Seq[Double]): Double =
+    if (graft.dist.Binning.isEvenWidth(edges)) (edges.last - edges.head) / (edges.size - 1) else Double.NaN
+
+  /** The bucket of `x` against `edges` (rdd.py:2350-2360), or -1 when `x`
+    * is NaN or out of range (dropped). `step` is [[evenStep]] of the edges:
+    * even widths take the fast path `min(int((x - lo) / step), n - 1)`,
+    * uneven ones `bisect_right(edges, x) - 1`, both clamped into the closed
+    * last bucket; `[v, v]` is the one degenerate min == max bucket
+    * (rdd.py:2295-2296). */
+  def bucket(x: Double, edges: Array[Double], step: Double): Int = {
+    val n = edges.length - 1
+    if (!(x >= edges(0) && x <= edges(n))) -1 // NaN fails both tests
+    else if (n == 1) 0
+    else if (!step.isNaN) math.min(((x - edges(0)) / step).toInt, n - 1)
+    else {
+      var b = java.util.Arrays.binarySearch(edges, x)
+      if (b < 0) b = -b - 2 // insertion point - 1
+      math.min(b, n - 1)
+    }
+  }
+
   /** Column facade: `hist_counts(x, edges)` → array<long> of n dense bucket
     * counts (aggregate function). `edges = [v, v]` is the degenerate
     * min == max bucket: one count of the values equal to v. */

@@ -13,10 +13,9 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** DataFrame over an already-built logical plan — the escape hatch for
-    * capturing a plan produced under scoped session confs (e.g. a
-    * conf-armed rewrite rule) so it survives the fresh QueryExecution that
-    * `df.write`/`df.collect` spin up after the confs are unset. */
+  /** DataFrame over an already-built logical plan: the histogram core
+    * reads a series' source plan (a frame's analyzed plan minus a top
+    * projection) back as a DataFrame this way. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)

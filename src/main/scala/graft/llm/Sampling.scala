@@ -235,12 +235,13 @@ object Sampling {
     // one copy of the threshold logic: the representative frame goes
     // through plain assignSplits keyed on the min-id column
     val rep = assignSplits(
-      df.groupBy(col(groupCol)).agg(min(col(idCol)).as("__rep")),
+      df.groupBy(col(groupCol).as("__grp")).agg(min(col(idCol)).as("__rep")),
       splits, idCol = "__rep").drop("__rep")
     // null-safe join: rows with a null group key form ONE group (keyed by
     // the smallest id among them) rather than silently vanishing — a split
-    // assigner must never drop rows
-    df.join(broadcast(rep), df(groupCol) <=> rep(groupCol))
-      .drop(rep(groupCol))
+    // assigner must never drop rows. The key is renamed on `rep`'s side so
+    // the condition names two different columns.
+    df.join(broadcast(rep), df(groupCol) <=> rep("__grp"))
+      .drop("__grp")
   }
 }

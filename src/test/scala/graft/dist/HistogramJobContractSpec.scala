@@ -6,12 +6,12 @@ import org.apache.spark.sql.DataFrame
 /** The paper's performance claim as a checked contract: the reference pays
   * ~3 Spark jobs per histogram series (rdd.py:2214-2366 plus two min/max
   * collects); here a multi-series histogram pays a fixed number of jobs for
-  * any number of series. The budget is 2 actions, each a shuffle-map job
-  * plus a result job under AQE: 4 jobs with a data-derived range (min/max
-  * aggregate, then the count-vector aggregate) and 2 with an explicit
-  * range or explicit edges (the count-vector aggregate only). The series
-  * mix two parquet sources and several columns of one source; at N = 16
-  * every (source, column) pair repeats. */
+  * any number of series, each one job in rdd.py's own mapPartitions plus
+  * driver-merge shape: 2 jobs with a data-derived range (the min/max job,
+  * then the count-vector job) and 1 with an explicit range or explicit
+  * edges (the count-vector job only). Collecting the result, a local
+  * DataFrame, runs none. The series mix two parquet sources and several
+  * columns of one source; at N = 16 every (source, column) pair repeats. */
 class HistogramJobContractSpec extends SparkSpec {
 
   private lazy val sources: (DataFrame, DataFrame) = {
@@ -45,17 +45,17 @@ class HistogramJobContractSpec extends SparkSpec {
       Seq(s"hist N=$n" -> viaHist, s"build N=$n" -> viaBuild)
     }
 
-  test("derived range: 4 jobs at N = 1, 4 and 16 series") {
+  test("derived range: 2 jobs at N = 1, 4 and 16 series") {
     val js = jobs(Bins.Count(10), None)
-    assert(js.map(_._2).distinct == Seq(4), js)
+    assert(js.map(_._2).distinct == Seq(2), js)
     val (t, _) = sources
-    assert(jobsOf(Binning.histogram(t, "b").collect()) == 4)
+    assert(jobsOf(Binning.histogram(t, "b").collect()) == 2)
   }
 
-  test("explicit range or explicit edges: 2 jobs at N = 1, 4 and 16 series") {
+  test("explicit range or explicit edges: 1 job at N = 1, 4 and 16 series") {
     val ranged = jobs(Bins.Count(10), Some((0.0, 500.0)))
-    assert(ranged.map(_._2).distinct == Seq(2), ranged)
+    assert(ranged.map(_._2).distinct == Seq(1), ranged)
     val edged = jobs(Bins.Edges(Seq(0.0, 1.0, 10.0, 100.0, 1000.0)), None)
-    assert(edged.map(_._2).distinct == Seq(2), edged)
+    assert(edged.map(_._2).distinct == Seq(1), edged)
   }
 }

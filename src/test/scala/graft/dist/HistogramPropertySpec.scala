@@ -1,7 +1,10 @@
 package graft.dist
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import graft.functions.HistogramAgg
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -9,9 +12,65 @@ import org.scalacheck.rng.Seed
   * in-memory transcription of RDD.histogram's counting loop
   * (rdd.py:2347-2361) on arbitrary inputs, and counts must be invariant
   * under partitioning. Uses raw ScalaCheck Gens with a fixed seed (the
-  * scalatest-plus bridge isn't in the offline cache). */
+  * scalatest-plus bridge isn't in the offline cache). Multi-series results
+  * must also match, row for row and bit for bit, the Catalyst aggregate
+  * formulation the driver-merged core replaced ([[aggregatePath]]). */
 class HistogramPropertySpec extends SparkSpec {
   import spark.implicits._
+
+  /** The Catalyst formulation of a multi-series histogram, kept as the
+    * parity reference: one nullable double slot per series in a union, a
+    * derived range from one `least(min)`/`greatest(max)` global aggregate
+    * over the NaN-free slots, one global `hist_counts` aggregate per slot,
+    * `posexplode(arrays_zip(..))` into the bins, even-width edges as
+    * `i * step + lo` (`hi` on the last bin), explicit edges echoed by
+    * `element_at`, `[lo, hi]` for one bin, sorted by bin id. */
+  private def aggregatePath(series: Seq[(DataFrame, String, String)], bins: Bins): DataFrame = {
+    val xs = series.indices.map(k => col(s"s$k"))
+    val union = series.zipWithIndex.map { case ((df, c, _), j) =>
+      df.select(series.indices.map(k => (if (k == j) col(c) else lit(null)).cast("double").as(s"s$k")): _*)
+    }.reduce(_ union _)
+    val es: Vector[Double] = bins match {
+      case Bins.Edges(e) => e.toVector
+      case Bins.Count(n) =>
+        val nanFree = xs.map(x => when(!isnan(x), x))
+        def fold(f: Seq[Column] => Column, cs: Seq[Column]) = if (cs.size == 1) cs.head else f(cs)
+        val r = union.agg(fold(least(_: _*), nanFree.map(min)), fold(greatest(_: _*), nanFree.map(max))).head()
+        Binning.equalWidthEdges(r.getDouble(0), r.getDouble(1), n)
+    }
+    val nb = es.size - 1
+    val b = col("pos")
+    val (binLo, binHi) = bins match {
+      case Bins.Edges(_) => (element_at(typedLit(es.init), b + 1), element_at(typedLit(es.tail), b + 1))
+      case _ if nb == 1 => (lit(es.head), lit(es.last))
+      case _ =>
+        val (lo, hi) = (es.head, es.last)
+        val step = (hi - lo) / nb
+        (b * lit(step) + lit(lo), when(b === lit(nb - 1), lit(hi)).otherwise((b + lit(1)) * lit(step) + lit(lo)))
+    }
+    val names = Binning.dedupeLabels(series.map(_._3)).map(_ + "_cnt")
+    val cnts = xs.zipWithIndex.map { case (x, k) => HistogramAgg.hist_counts(x, es).as(s"c$k") }
+    union.agg(cnts.head, cnts.tail: _*)
+      .select(posexplode(arrays_zip(series.indices.map(k => col(s"c$k")): _*)))
+      .select(Seq(b.as("bin_id"), binLo.as("bin_lo"), binHi.as("bin_hi")) ++
+        names.zipWithIndex.map { case (nm, k) => col("col").getField(s"c$k").as(nm) }: _*)
+      .orderBy("bin_id")
+  }
+
+  /** `got` == `ref`: column names and types, then every row's bin id and
+    * counts, and its edges bit for bit. Nullability is not compared. */
+  private def assertSameHistogram(got: DataFrame, ref: DataFrame, clue: String): Unit = {
+    assert(got.columns.toSeq == ref.columns.toSeq, clue)
+    assert(got.schema.map(_.dataType) == ref.schema.map(_.dataType), clue)
+    val (g, r) = (got.collect().toSeq, ref.collect().toSeq)
+    assert(g.size == r.size, s"$clue: ${g.size} rows != ${r.size}")
+    def bits(row: Row, i: Int) = java.lang.Double.doubleToRawLongBits(row.getDouble(i))
+    for ((x, y) <- g.zip(r)) {
+      assert(x.getInt(0) == y.getInt(0), clue)
+      assert(bits(x, 1) == bits(y, 1) && bits(x, 2) == bits(y, 2), s"$clue: edges $x != $y")
+      assert((3 until x.length).map(x.getLong) == (3 until y.length).map(y.getLong), s"$clue: $x != $y")
+    }
+  }
 
   /** Literal port of rdd.py:2347-2361 (the counting closure): even fast path
     * with int((x-min)/inc) and overflow fold; else bisect_right - 1. */
@@ -101,13 +160,15 @@ class HistogramPropertySpec extends SparkSpec {
       // repeated; against a fresh, unequal plan of the same rows per series
       def abFrame(): DataFrame = ab.toDF("a", "b")
       val t = abFrame()
-      val merged = Binning.histogramManyBins(Seq((t.select("a"), "a", "a"), (t, "b", "b"),
-        (cs.toDF("c"), "c", "c"), (t.select("a", "b"), "a", "a")), bins)
+      val mergedSeries = Seq((t.select("a"), "a", "a"), (t, "b", "b"),
+        (cs.toDF("c"), "c", "c"), (t.select("a", "b"), "a", "a"))
+      val merged = Binning.histogramManyBins(mergedSeries, bins)
       val apart = Binning.histogramManyBins(Seq((abFrame(), "a", "a"), (abFrame(), "b", "b"),
         (cs.toDF("c"), "c", "c"), (abFrame(), "a", "a")), bins)
       assert(merged.columns.toSeq == Seq("bin_id", "bin_lo", "bin_hi", "a_cnt", "b_cnt", "c_cnt", "a (1)_cnt"))
       val rows = merged.collect().toSeq
       assert(rows == apart.collect().toSeq, s"case $i: merged != independent reads")
+      assertSameHistogram(merged, aggregatePath(mergedSeries, bins), s"case $i: merged != aggregate path")
       val valid = (xs: Seq[java.lang.Double]) => xs.filter(x => x != null && !x.isNaN).map(_.doubleValue)
       val perSeries = Seq(valid(ab.map(_._1)), valid(ab.map(_._2)), valid(cs), valid(ab.map(_._1)))
       val expected = bins match {
@@ -120,6 +181,27 @@ class HistogramPropertySpec extends SparkSpec {
       }
       for (k <- perSeries.indices)
         assert(rows.map(_.getLong(3 + k)) == expected(k), s"case $i series $k: bins=$bins ab=$ab c=$cs")
+    }
+  }
+
+  test("parity: no partitions gives dense zeros; counts do not depend on partitioning") {
+    val schema = StructType(Seq(StructField("v", DoubleType)))
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(none.rdd.getNumPartitions == 0)
+    val edges = Bins.Edges(Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0))
+    val h = Binning.histogramManyBins(Seq((none, "v", "v")), edges)
+    assert(h.select("v_cnt").as[Long].collect().toSeq == Seq.fill(5)(0L))
+    assertSameHistogram(h, aggregatePath(Seq((none, "v", "v")), edges), "no partitions")
+    val rnd = new scala.util.Random(11)
+    val vs = Seq.fill(200)(math.round(rnd.nextDouble() * 2000 - 1000) / 10.0)
+    val df = vs.toDF("v")
+    for (bins <- Seq(Bins.Count(9), edges); parts <- Seq(1, 3, 8)) {
+      val spread = rnd.shuffle(vs).toDF("v").repartition(parts)
+      val ss = Seq((spread, "v", "v"), (df, "v", "w"))
+      assertSameHistogram(Binning.histogramManyBins(ss, bins), aggregatePath(ss, bins),
+        s"bins=$bins parts=$parts")
+      assertSameHistogram(Binning.histogramManyBins(Seq((spread, "v", "v")), bins),
+        Binning.histogramManyBins(Seq((df, "v", "v")), bins), s"bins=$bins parts=$parts: partitioning")
     }
   }
 
