@@ -1,7 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash/LSH, and SimHash near-duplicate detection.
@@ -575,20 +578,35 @@ object Dedup {
     * Candidates:
     *   - cross-batch: a batch doc colliding with a registry bucket pairs
     *     with that bucket's REPRESENTATIVE (the only per-bucket state the
-    *     registry holds, so recall is rep-relative);
+    *     registry holds, so recall is rep-relative; a bucket with two
+    *     registry rows pairs with both reps);
     *   - within-batch: every non-min member of a batch bucket pairs with
-    *     the bucket min — an id-ordered fold. One `min` aggregate, NO
-    *     collect_list and NO `maxBucket` cap needed: a boilerplate bucket
-    *     costs one row here.
+    *     the bucket min — an id-ordered fold with NO `maxBucket` cap: a
+    *     boilerplate bucket costs one pair per member.
     *
-    * One candidate pass: the distinct (id, cand) pairs are planned once
-    * and BROADCAST — at most `2 · bands` 16 B pairs per batch doc (one
-    * registry rep + one batch bucket-min per band: ≤ 512 B at 16 bands).
-    * Streamed (newDocs ∪ priorDocs) (id, text) rows join them map-side,
-    * so only candidate docs are shingled and no text crosses a shuffle;
-    * each pair gets EXACT shingle Jaccard against the persisted batch
-    * shingles. Every other exchange carries (band, bh, id) rows or
-    * shingle-hash arrays.
+    * One driver-merged candidate pass, in the reference's shape of
+    * per-partition results merged on the driver (`rdd.py:2347-2366`):
+    *   1. one action collects the batch's (id, band, bh) banding, which
+    *      materializes the persisted shingles and banding once;
+    *   2. the driver pairs each bucket's non-min members with its min id;
+    *   3. one action streams the registry against the batch's distinct
+    *      (band, bh) keys, broadcast, and the driver pairs every rep of a
+    *      hit bucket with each member;
+    *   4. the distinct (id, cand) pairs are BROADCAST: streamed
+    *      (newDocs ∪ priorDocs) (id, text) rows join them map-side, so only
+    *      candidate docs are shingled and no text crosses a shuffle; each
+    *      pair gets EXACT shingle Jaccard against the persisted batch
+    *      shingles, and the matches are collected;
+    *   5. the driver elects the min cand per id (ids compare by their
+    *      column's Catalyst ordering).
+    * The probe and the verify are skipped when they have no input. The
+    * build runs these jobs; the returned frame is lazy: newDocs' ids
+    * left-joined to the broadcast winners.
+    *
+    * Driver state is batch-sized: `bands` banding rows per batch doc, at
+    * most `bands` bucket-min pairs plus the hit buckets' rep pairs per
+    * batch doc, one verified row per pair and one winner per doc. Spark's
+    * `spark.driver.maxResultSize` fails an oversized collect loudly.
     *
     * Output: one row per batch doc — (idCol, dup_of, jaccard) with
     * dup_of = min verified match (NULL ⇒ the doc survives). Requires
@@ -606,26 +624,48 @@ object Dedup {
                                   w: Int = 3): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     graft.functions.SessionTuning.ensureActiveSession()
-    // the batch shingle frame feeds banding and the verify join: one
-    // tokenize pass, not two (same lifecycle note as minHashNearDup)
+    val spark = newDocs.sparkSession
+    // driver-built frames ride one-slice RDDs, not LocalRelations: the
+    // optimizer rewrites a LocalRelation's rows in every rule that touches it
+    def local(rows: Seq[Row], fields: StructField*): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(fields))
+    // the batch shingles feed the banding and the verify: one tokenize
+    // pass; released once the verify has run
     val sh = shingleDF(newDocs, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persist the slim (id, band, bh) banding too (r15): the collision
-    // probe, the bucket-min agg, the within-batch probe and a same-batch
-    // `minHashBucketRegistry` fold all read it instead of re-running the
-    // MinHash signature loop. Both persists are owned by the SESSION, like
-    // minHashNearDup's (the returned frame is lazy, so there is no "after
-    // the final action" hook): a per-batch driver should
-    // `spark.catalog.clearCache()` between batches. Both are batch-sized.
+    // the slim (id, band, bh) banding stays cached after the call: a
+    // same-batch `minHashBucketRegistry` fold reads it instead of re-running
+    // the MinHash signature loop. The SESSION owns it: a per-batch driver
+    // should `spark.catalog.clearCache()` between batches.
     val banded = bandedMinHash(sh, k, bands, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cross = banded
-      .join(registry.select(col("band"), col("bh"), col("rep_id")), Seq("band", "bh"))
-      .select(col("id"), col("rep_id").as("cand"))
-    val bmin = banded.groupBy("band", "bh").agg(min(col("id")).as("cand"))
-    val within = banded.join(bmin, Seq("band", "bh"))
-      .select(col("id"), col("cand")).where(col("id") =!= col("cand"))
-    val cand = cross.unionByName(within).distinct()
+    val idType = banded.schema("id").dataType
+    // registry reps and batch ids meet in one cand column of their union type
+    val candType = registry.select("rep_id").union(banded.select("id")).schema.head.dataType
+    val byId = catalystOrdering(idType)
+    // 1. the banding, rows (id, id as a cand, band, bh) grouped by bucket;
+    // a null id is never a bucket min, as under Spark's `min`
+    val members = banded.select(col("id"), col("id").cast(candType), col("band"), col("bh"))
+      .collect().filterNot(_.isNullAt(0)).groupBy(r => (r.getInt(2), r.getLong(3)))
+    val pairs = scala.collection.mutable.TreeSet.empty[(Any, Any)](
+      Ordering.Tuple2(byId, catalystOrdering(candType)))
+    // 2. within-batch pairs
+    members.values.foreach { ms =>
+      val m = ms.minBy(_.get(0))(byId)
+      ms.foreach(r => if (byId.compare(r.get(0), m.get(0)) != 0) pairs += (r.get(0) -> m.get(1)))
+    }
+    // 3. cross-batch pairs
+    if (members.nonEmpty) {
+      val keys = local(members.keys.toSeq.map { case (b, h) => Row(b, h) },
+        StructField("band", IntegerType), StructField("bh", LongType))
+      broadcast(keys)
+        .join(registry.select(col("band"), col("bh"), col("rep_id").cast(candType)), Seq("band", "bh"))
+        .collect()
+        .foreach(r => members((r.getInt(0), r.getLong(1))).foreach(m => pairs += (m.get(0) -> r.get(2))))
+    }
+    // 4. the verify
+    val cand = local(pairs.toSeq.map { case (i, c) => Row(i, c) },
+      StructField("id", idType), StructField("cand", candType))
     val text = (d: DataFrame) => d.select(col(idCol).as("cand"), col(textCol).as("text"))
     val verified = shingled(text(newDocs).unionByName(text(priorDocs))
         .join(broadcast(cand), "cand"), w)
@@ -635,15 +675,31 @@ object Dedup {
         (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    // one-pass winner election (r15): verified is unique per (id, cand), so
-    // min_by elects (min cand, its jaccard) in one aggregate, tie-free
-    val best = verified.groupBy("id")
-      .agg(min_by(struct(col("cand"), col("jaccard")), col("cand")).as("m"))
-      .select(col("id"), col("m.cand").as("dup_of"), col("m.jaccard").as("jaccard"))
+    val matches = if (pairs.isEmpty) Array.empty[Row] else verified.collect()
+    // banded's buffers are loaded, so this non-cascading uncache keeps them
+    sh.unpersist()
+    // 5. the election: verified is unique per (id, cand), so it is tie-free
+    val byCand = catalystOrdering(verified.schema("cand").dataType)
+    val best = scala.collection.mutable.TreeMap.empty[Any, Row](byId)
+    matches.foreach { r =>
+      if (best.get(r.get(0)).forall(b => byCand.lt(r.get(1), b.get(1)))) best(r.get(0)) = r
+    }
+    val winners = local(best.values.toSeq, StructField("id", idType),
+      verified.schema("cand").copy(name = "dup_of"), verified.schema("jaccard"))
     newDocs.select(col(idCol).as("id"))
-      .join(best, Seq("id"), "left")
+      .join(broadcast(winners), Seq("id"), "left")
       .select(col("id").as(idCol), col("dup_of"), col("jaccard"))
       .orderBy(idCol)
+  }
+
+  /** Catalyst's ordering of `dt`, over the external values a collect returns. */
+  private def catalystOrdering(dt: DataType): Ordering[Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val rows = InterpretedOrdering.forSchema(Seq(dt))
+    new Ordering[Any] {
+      def compare(a: Any, b: Any): Int =
+        rows.compare(InternalRow(toCatalyst(a)), InternalRow(toCatalyst(b)))
+    }
   }
 
   /** Exact verifier tier of [[minHashDedupAgainstRegistry]]: the same

@@ -133,8 +133,9 @@ class SparkEntryContractSpec extends SparkSpec {
     // r15 incremental LSH near-dedup: banding/candidate exchanges carry
     // (band, bh, id) rows and the verify join shingle-hash ARRAYS of the
     // batch + candidate docs only — text never crosses (ShuffleProbe
-    // sf0.001: 613,658 B; one-pass candidate verify, 4 cores: 129,313 B)
-    "dedup_near_incremental_documents" -> 550_000L)
+    // sf0.001: 613,658 B; one-pass candidate verify, 4 cores: 129,313 B;
+    // driver-merged candidate pass, build inside the listener: 65,561 B)
+    "dedup_near_incremental_documents" -> 260_000L)
 
   test("flagship slim-exchange queries stay under their shuffle-byte ceilings") {
     assume(testdataPresent)
@@ -241,8 +242,9 @@ class SparkEntryContractSpec extends SparkSpec {
     "dedup_simhash_documents" -> Set("CollectList"),
     "dedup_ngram_jaccard_documents" -> Set("CollectList"),
     "dedup_near_incremental_exact_documents" -> Set("CollectList"), // maxBucket cap
-    // (the LSH sibling dedup_near_incremental_documents plans NO collect:
-    // its within-batch gather is a min aggregate — bucket state is one id)
+    // (the LSH sibling dedup_near_incremental_documents plans NO object
+    // aggregate: its within-batch gather elects each bucket's min id on the
+    // driver over the collected banding — bucket state is one id)
     "dedup_containment_documents" -> Set("CollectList"),
     "dedup_editdist_documents" -> Set("CollectList"),   // blocked pairs
     "dedup_spans_documents" -> Set("CollectList"),      // per-doc dup spans

@@ -1,12 +1,18 @@
 package graft.llm
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.functions.MinHashSig
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -665,15 +671,43 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("minHashDedupAgainstRegistry: no shuffle exchange carries document text") {
-    val df = Dedup.minHashDedupAgainstRegistry(
-      nearIncBatch, Dedup.minHashBucketRegistry(nearIncPrior), nearIncPrior)
-    df.collect()
-    val shuffles = collectWithSubqueries(df.queryExecution.executedPlan) {
-      case s: ShuffleExchangeExec => s
+  /** Executed plans of every query `body` runs, the build's actions
+    * included: the call collects at build time, so the returned frame's own
+    * plan shows only the last of its queries. */
+  private def executedPlans(body: => Any): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    assert(shuffles.nonEmpty)
-    val textCarriers = shuffles.filter(_.output.exists(_.name == "text"))
+    Bridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** Shuffle exchanges of `plans` that carry a `text` column; fails when
+    * the plans hold no shuffle or no query read document text, so the
+    * check cannot pass on plans that miss the verify. */
+  private def textShuffles(plans: Seq[SparkPlan]): Seq[ShuffleExchangeExec] = {
+    val shuffles = plans.flatMap(p => collectWithSubqueries(p) { case s: ShuffleExchangeExec => s })
+    assert(shuffles.nonEmpty, s"no shuffle exchange in ${plans.size} executed plans")
+    assert(plans.exists(p => collectWithSubqueries(p) { case n => n }
+        .exists(_.output.exists(_.name == "text"))),
+      s"none of ${plans.size} executed plans reads document text")
+    shuffles.filter(_.output.exists(_.name == "text"))
+  }
+
+  test("minHashDedupAgainstRegistry: no shuffle exchange carries document text") {
+    val plans = executedPlans {
+      Dedup.minHashDedupAgainstRegistry(
+        nearIncBatch, Dedup.minHashBucketRegistry(nearIncPrior), nearIncPrior).collect()
+    }
+    val textCarriers = textShuffles(plans)
     assert(textCarriers.isEmpty,
       "document text crossed a shuffle exchange in the incremental LSH face")
   }
@@ -687,17 +721,16 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val batch = docs.where(col("doc_id") >= 300)
     val registry = RegistryDedupFixtures.fold(spark,
       RegistryDedupFixtures.emptyRegistry(spark), prior, s"$dir/registry")
-    // a corpus too big to auto-broadcast: the static plan's only broadcast
-    // is the one the operator asks for
+    // a corpus too big to auto-broadcast: the only broadcasts are the ones
+    // the operator asks for
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val df = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
-      val drops = df.where(col("dup_of").isNotNull).count()
-      assert(drops >= 50, s"only $drops of 60 planted near-dups dropped")
-      df.collect()
-      val shuffles = collectWithSubqueries(df.queryExecution.executedPlan) {
-        case s: ShuffleExchangeExec => s
+      var drops = 0L
+      val plans = executedPlans {
+        drops = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
+          .collect().count(!_.isNullAt(1)).toLong
       }
-      val textCarriers = shuffles.filter(_.output.exists(_.name == "text"))
+      assert(drops >= 50, s"only $drops of 60 planted near-dups dropped")
+      val textCarriers = textShuffles(plans)
       assert(textCarriers.isEmpty,
         s"document text crossed a shuffle exchange:\n${textCarriers.mkString("\n")}")
     }
@@ -716,11 +749,17 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(cached.exists(_.cacheBuilder.logicalPlan.exists(hasSig)),
       s"fold did not read the cached banding:\n$plan")
     assert(!plan.exists(hasSig), s"fold re-plans the batch's MinHash loop:\n$plan")
+    // the call released its batch shingles without a cascade: the banding
+    // keeps the buffers its candidate pass loaded instead of being recached
+    assert(cached.filter(_.cacheBuilder.logicalPlan.exists(hasSig))
+      .forall(_.cacheBuilder.isCachedColumnBuffersLoaded), "the banding was recached")
+    assert(Dedup.shingleDF(nearIncBatch, "doc_id", "text", 3).storageLevel == StorageLevel.NONE,
+      "the batch shingles are still cached")
   }
 
   test("job budget: one warm ingest batch against a parquet registry runs a " +
     "constant, budgeted number of Spark jobs") {
-    val budget = 16
+    val budget = 10
     val dir = java.nio.file.Files.createTempDirectory("registry_jobs").toString
     val docs = RegistryDedupFixtures.parquetDocs(spark,
       RegistryDedupFixtures.stream(seed = 11L, n = 400), s"$dir/docs")
@@ -729,8 +768,8 @@ class DedupSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val (lo, hi) = (b * 100L, (b + 1) * 100L)
       val batch = docs.where(col("doc_id") >= lo && col("doc_id") < hi)
       val prior = docs.where(col("doc_id") < lo)
-      val cleaned = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
-      val n = jobsOf(cleaned.collect())
+      // the build runs the candidate pass, so it is counted with the collect
+      val n = jobsOf(Dedup.minHashDedupAgainstRegistry(batch, registry, prior).collect())
       registry = RegistryDedupFixtures.fold(spark, registry, batch, s"$dir/registry/$b")
       n
     }

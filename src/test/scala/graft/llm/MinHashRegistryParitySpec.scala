@@ -65,8 +65,9 @@ object RegistryDedupFixtures {
       StructField("rep_id", LongType))))
 
   /** Folds `batch`'s buckets into `registry` through parquet at `dir`. */
-  def fold(spark: SparkSession, registry: DataFrame, batch: DataFrame, dir: String): DataFrame = {
-    Dedup.mergeMinHashRegistries(registry, Dedup.minHashBucketRegistry(batch))
+  def fold(spark: SparkSession, registry: DataFrame, batch: DataFrame, dir: String,
+           idCol: String = "doc_id"): DataFrame = {
+    Dedup.mergeMinHashRegistries(registry, Dedup.minHashBucketRegistry(batch, idCol = idCol))
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
@@ -74,10 +75,11 @@ object RegistryDedupFixtures {
   /** The two-pass formulation the one-pass verify replaced: the candidate
     * frame is planned twice (the verify join, and its distinct ids for a
     * semi-join over the prior docs and over batch ∪ prior shingles).
-    * Default parameters and column names only. */
-  def reference(newDocs: DataFrame, registry: DataFrame, priorDocs: DataFrame): DataFrame = {
+    * Default parameters and text column only. */
+  def reference(newDocs: DataFrame, registry: DataFrame, priorDocs: DataFrame,
+                idCol: String = "doc_id"): DataFrame = {
     val (threshold, k, bands, seed, w) = (0.8, 128, 16, 42L, 3)
-    val sh = Dedup.shingleDF(newDocs, "doc_id", "text", w)
+    val sh = Dedup.shingleDF(newDocs, idCol, "text", w)
     val banded = Dedup.bandedMinHash(sh, k, bands, seed)
     val cross = banded
       .join(registry.select(col("band"), col("bh"), col("rep_id")), Seq("band", "bh"))
@@ -88,8 +90,8 @@ object RegistryDedupFixtures {
     val cand = cross.unionByName(within).distinct()
     val candIds = cand.select(col("cand")).distinct()
     val priorSh = Dedup.shingleDF(
-      priorDocs.join(candIds.select(col("cand").as("doc_id")), Seq("doc_id"), "left_semi"),
-      "doc_id", "text", w)
+      priorDocs.join(candIds.select(col("cand").as(idCol)), Seq(idCol), "left_semi"),
+      idCol, "text", w)
     val candSide = sh.unionByName(priorSh)
       .join(candIds.select(col("cand").as("id")), Seq("id"), "left_semi")
     val verified = cand
@@ -102,16 +104,17 @@ object RegistryDedupFixtures {
     val best = verified.groupBy("id")
       .agg(min_by(struct(col("cand"), col("jaccard")), col("cand")).as("m"))
       .select(col("id"), col("m.cand").as("dup_of"), col("m.jaccard").as("jaccard"))
-    newDocs.select(col("doc_id").as("id"))
+    newDocs.select(col(idCol).as("id"))
       .join(best, Seq("id"), "left")
-      .select(col("id").as("doc_id"), col("dup_of"), col("jaccard"))
-      .orderBy("doc_id")
+      .select(col("id").as(idCol), col("dup_of"), col("jaccard"))
+      .orderBy(idCol)
   }
 }
 
-/** The one-pass verify of [[Dedup.minHashDedupAgainstRegistry]] must return
-  * exactly the rows, in order, of the retained two-pass reference over a
-  * seeded stream whose registry is folded through parquet batch by batch. */
+/** The driver-merged candidate pass of [[Dedup.minHashDedupAgainstRegistry]]
+  * must return exactly the rows, in order, of the retained two-pass
+  * reference over a seeded stream whose registry is folded through parquet
+  * batch by batch, and over the edge inputs below. */
 class MinHashRegistryParitySpec extends SparkSpec {
   import RegistryDedupFixtures._
 
@@ -152,5 +155,70 @@ class MinHashRegistryParitySpec extends SparkSpec {
     }
     assert(seen == Set("empty registry", "within-batch match", "registry match",
       "shingle-less doc", "rep absent from prior", "registry and batch candidates"))
+  }
+
+  test("an Int id column under a non-default name: same rows as the reference, " +
+    "and dup_of keeps the id column's type against a Long-rep registry") {
+    val dir = java.nio.file.Files.createTempDirectory("registry_int").toString
+    val docs = parquetDocs(spark, stream(seed = 19L, n = 300), s"$dir/docs")
+      .select(col("doc_id").cast(IntegerType).as("uid"), col("text"))
+    // the empty registry's rep_id is Long, so every folded registry's is too
+    var registry = emptyRegistry(spark)
+    (0 until 3).foreach { b =>
+      val batch = docs.where(col("uid") >= b * 100 && col("uid") < (b + 1) * 100)
+      val prior = docs.where(col("uid") < b * 100)
+      val got = Dedup.minHashDedupAgainstRegistry(batch, registry, prior, idCol = "uid")
+      val want = reference(batch, registry, prior, idCol = "uid")
+      assert(got.schema.map(f => f.name -> f.dataType) == Seq(
+        "uid" -> IntegerType, "dup_of" -> IntegerType, "jaccard" -> DoubleType))
+      // the reference's dup_of is its candidate frame's widened Long
+      val wantRows = want.select(col("uid"), col("dup_of").cast(IntegerType), col("jaccard"))
+        .collect().toSeq
+      val gotRows = got.collect().toSeq
+      assert(gotRows == wantRows, s"batch $b differs from the reference")
+      if (b > 0) assert(gotRows.exists(!_.isNullAt(1)), s"batch $b dropped nothing")
+      registry = fold(spark, registry, batch, s"$dir/registry/$b", idCol = "uid")
+    }
+  }
+
+  test("a registry with two rows for one bucket pairs each batch member with " +
+    "both reps, as the reference's join does") {
+    val dir = java.nio.file.Files.createTempDirectory("registry_dup").toString
+    val docs = parquetDocs(spark, stream(seed = 23L, n = 300), s"$dir/docs")
+    val prior = docs.where(col("doc_id") < 200)
+    val batch = docs.where(col("doc_id") >= 200)
+    // the halves' registries, unioned without the per-bucket min fold
+    val halves = Seq(0, 1).map(p =>
+      Dedup.minHashBucketRegistry(prior.where(col("doc_id") % 2 === p)))
+    halves.head.unionByName(halves(1)).write.mode("overwrite").parquet(s"$dir/registry")
+    val registry = spark.read.parquet(s"$dir/registry")
+    val twoReps = registry.groupBy("band", "bh").count().where(col("count") === 2)
+    assert(!twoReps.isEmpty, "no bucket holds two registry rows")
+    val hit = Dedup.bandedMinHash(Dedup.shingleDF(batch, "doc_id", "text", 3), 128, 16, 42L)
+      .join(twoReps, Seq("band", "bh"))
+    assert(!hit.isEmpty, "no batch doc collides with a two-rep bucket")
+    val got = Dedup.minHashDedupAgainstRegistry(batch, registry, prior).collect().toSeq
+    assert(got == reference(batch, registry, prior).collect().toSeq)
+    assert(got.exists(r => !r.isNullAt(1) && r.getLong(1) < 200), "no registry match")
+  }
+
+  test("batches with nothing to verify: all docs shingle-less, or no doc with " +
+    "a candidate, give every doc a NULL dup_of, as the reference does") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("registry_none").toString
+    val docs = parquetDocs(spark, nearDups(seed = 29L, prior = 100, dups = 0), s"$dir/docs")
+    val prior = docs.where(col("doc_id") < 60)
+    val registry = fold(spark, emptyRegistry(spark), prior, s"$dir/registry")
+    val fresh = docs.where(col("doc_id") >= 60)
+    val shingleLess = Seq((100L, "short"), (101L, "two words"), (102L, ""))
+      .toDF("doc_id", "text")
+    Seq("fresh docs" -> fresh, "shingle-less docs" -> shingleLess).foreach { case (what, batch) =>
+      val got = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
+      val rows = got.collect().toSeq
+      assert(rows.size == batch.count() && rows.forall(r => r.isNullAt(1) && r.isNullAt(2)),
+        s"$what: ${rows.filterNot(_.isNullAt(1)).mkString(", ")}")
+      assert(rows == reference(batch, registry, prior).collect().toSeq, what)
+      assert(got.schema == reference(batch, registry, prior).schema, what)
+    }
   }
 }
