@@ -1,15 +1,19 @@
 package graft.dist
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, InterpretedOrdering,
+  InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.HistogramAgg
@@ -32,21 +36,24 @@ object Bins {
 
 /** Distributed histogram core.
   *
-  * Design (SURVEY.md §3/§4): every series-based entry point
-  * ([[Binning.histogram]], [[Binning.histogramManyBins]],
-  * [[Binning.histogramColumns]], [[Binning.histogramLog]],
-  * [[Histogram.build]]) runs on one core: series that read the same source
-  * share one scan, and each distinct (source, column) is one nullable double
-  * slot of a union. The union is planned and code-generated once; its rows
-  * are then read in rdd.py's own shape (rdd.py:2347-2366, `mapPartitions`
-  * plus a driver-side merge): one job for a data-derived range and one job
-  * of one dense `long[n_bins]` count vector per slot and partition, both
-  * merged on the driver with no shuffle. So a histogram is 2 Spark jobs
-  * for any number of series, 1 with an explicit range or edges (each
-  * Catalyst global aggregate would be 2 under AQE: a shuffle-map job plus a
-  * result job); `HistogramJobContractSpec` checks both budgets at 1, 4 and
-  * 16 series. The result is built eagerly, like the reference's `build()`:
-  * a small local DataFrame whose collection runs no job.
+  * Design (SURVEY.md §3/§4): every histogram shape and [[Binning.minMax]]
+  * read their rows in rdd.py's own shape (rdd.py:2347-2366, `mapPartitions`
+  * plus a driver-side merge) through one private core, [[Binning.merged]]:
+  * a frame is planned and code-generated once, ONE Spark job folds each
+  * partition into a small local result (a dense count vector, a map from
+  * group to counts, per-column bounds), and the driver merges those with no
+  * shuffle. The series-based entry points ([[Binning.histogram]],
+  * [[Binning.histogramManyBins]], [[Binning.histogramColumns]],
+  * [[Binning.histogramLog]], [[Histogram.build]]) read one union: series
+  * that read the same source share one scan, and each distinct (source,
+  * column) is one nullable double slot. So a histogram of any shape (any
+  * number of series, groups or axes) is 2 Spark jobs with a data-derived
+  * range, the range job and then the count job, and 1 with an explicit
+  * range or edges; `minMax` is 1. A Catalyst global aggregate would be 2
+  * under AQE (a shuffle-map job plus a result job), and a grouped one more.
+  * `HistogramJobContractSpec` checks these budgets. Every result is built
+  * eagerly, like the reference's `build()`: a small local DataFrame whose
+  * collection runs no job.
   */
 object Binning {
 
@@ -116,11 +123,6 @@ object Binning {
   /** A column by its exact name: dots and backticks in it are not parsed. */
   private[dist] def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
-  /** Dense spine of bin ids 0..n-1 (tiny; the post-agg join against it is a
-    * broadcast over at most n rows — never a scale concern). */
-  private def spine(df: DataFrame, n: Int): DataFrame =
-    df.sparkSession.range(n).select(col("id").cast("int").as("bin_id"))
-
   /** Histogram of one numeric column. Returns a dense, sorted DataFrame
     * `(bin_id, bin_lo, bin_hi, cnt)`.
     *
@@ -135,24 +137,33 @@ object Binning {
 
   /** Min/max of the double column `x` of `df` in one Spark job (the
     * reference ran 2 collect jobs per series). */
-  private[dist] def minMaxOf(df: DataFrame): (Double, Double) = executed(df.select("x"))(rangeOf(_, 1))
+  private[dist] def minMaxOf(df: DataFrame): (Double, Double) = rangeOf(df.select("x"), 1)
 
-  /** Runs `body` over the code-generated rows of `df` as one SQL execution
-    * named "histogram", so the UI and `QueryExecutionListener`s see the
-    * jobs it runs; `df` is planned once however many jobs `body` runs. */
-  private def executed[T](df: DataFrame)(body: RDD[InternalRow] => T): T = {
+  /** The one core of every histogram shape and of [[minMax]]: `df` is
+    * planned once and its code-generated rows are read by ONE Spark job, in
+    * one SQL execution named "histogram", so the UI and
+    * `QueryExecutionListener`s see it. `part` folds each partition into a
+    * small local result, and the driver folds those results into `zero`
+    * with `merge`, in partition order; an input without partitions gives
+    * `zero`. Nothing is shuffled. A second call over the same frame reuses
+    * its plan. */
+  private def merged[P: ClassTag, R](df: DataFrame, zero: R)(part: Iterator[InternalRow] => P)
+                                    (merge: (R, P) => R): R = {
     val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("histogram"))(body(qe.toRdd))
+    SQLExecution.withNewExecutionId(qe, Some("histogram")) {
+      val rows = qe.toRdd
+      rows.sparkContext.runJob(rows, part).foldLeft(zero)(merge)
+    }
   }
 
-  /** Shared range of the first `width` double columns of `rows` in ONE job:
-    * min of mins / max of maxes, per partition and then on the driver in
-    * partition order. Nulls are skipped and NaN is excluded
-    * (rdd.py:2275-2282): it fails every comparison, so it never becomes a
-    * bound. An equal value never replaces a bound (the first of 0.0 and
-    * -0.0 is kept, as Spark's `min`/`max` keep it). */
-  private def rangeOf(rows: RDD[InternalRow], width: Int): (Double, Double) = {
-    val bounds = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+  /** Shared range of the first `width` double columns of `df` in ONE job:
+    * min of mins / max of maxes, per partition and then on the driver.
+    * Nulls are skipped and NaN is excluded (rdd.py:2275-2282): it fails
+    * every comparison, so it never becomes a bound. An equal value never
+    * replaces a bound (the first of 0.0 and -0.0 is kept, as Spark's
+    * `min`/`max` keep it). */
+  private def rangeOf(df: DataFrame, width: Int): (Double, Double) = {
+    val (lo, hi) = merged(df, (Double.PositiveInfinity, Double.NegativeInfinity)) { it =>
       var (lo, hi) = (Double.PositiveInfinity, Double.NegativeInfinity)
       it.foreach { r =>
         var k = 0
@@ -166,29 +177,56 @@ object Binning {
         }
       }
       (lo, hi)
-    })
-    val (lo, hi) = bounds.foldLeft((Double.PositiveInfinity, Double.NegativeInfinity)) {
-      case ((lo, hi), (l, h)) => (if (l < lo) l else lo, if (h > hi) h else hi)
-    }
+    } { case ((lo, hi), (l, h)) => (if (l < lo) l else lo, if (h > hi) h else hi) }
     if (lo > hi) // no value at all
       throw new IllegalArgumentException("can not generate buckets from empty RDD") // rdd.py:2290-2292
     (lo, hi)
   }
 
-  /** Dense counts of the first `slots` double columns of `rows` against
+  /** Per-column min and max of the double columns of `df` in ONE job, under
+    * Spark's `min`/`max` rules: nulls are skipped, NaN is the greatest
+    * value, an equal value never replaces a bound (so the first of 0.0 and
+    * -0.0 is kept), and partitions merge in order. A column with no value
+    * gives None. */
+  private def boundsOf(df: DataFrame): Seq[Option[(Double, Double)]] = {
+    val width = df.schema.size
+    merged(df, Seq.fill(width)(Option.empty[(Double, Double)])) { it =>
+      val (seen, lo, hi) = (new Array[Boolean](width), new Array[Double](width), new Array[Double](width))
+      it.foreach { r =>
+        var k = 0
+        while (k < width) {
+          if (!r.isNullAt(k)) {
+            val v = r.getDouble(k)
+            if (!seen(k)) { seen(k) = true; lo(k) = v; hi(k) = v }
+            else {
+              if (compareDoubles(lo(k), v) > 0) lo(k) = v
+              if (compareDoubles(hi(k), v) < 0) hi(k) = v
+            }
+          }
+          k += 1
+        }
+      }
+      (0 until width).map(k => if (seen(k)) Some((lo(k), hi(k))) else None)
+    } { (acc, part) =>
+      acc.zip(part).map {
+        case (Some((l, h)), Some((pl, ph))) =>
+          Some((if (compareDoubles(l, pl) > 0) pl else l, if (compareDoubles(h, ph) < 0) ph else h))
+        case (a, p) => a.orElse(p)
+      }
+    }
+  }
+
+  /** Dense counts of the first `slots` double columns of `df` against
     * `edges` in ONE job: slot k's counts are `counts(k * n until (k + 1) * n)`.
     * Each partition fills one `long[slots * n]` through
     * [[graft.functions.HistogramAgg.bucket]], which drops NaN and
-    * out-of-range values. The driver adds each task's vector into one
-    * total that starts at zeros as the task finishes (exact long sums, so
-    * the order does not matter and only one vector is held), and an input
-    * without partitions gives dense zeros. */
-  private def countsOf(rows: RDD[InternalRow], slots: Int, edges: Vector[Double]): Array[Long] = {
+    * out-of-range values, and the driver adds them up (exact long sums);
+    * an input without partitions gives dense zeros. */
+  private def countsOf(df: DataFrame, slots: Int, edges: Vector[Double]): Array[Long] = {
     val n = edges.size - 1
     val es = edges.toArray
     val step = HistogramAgg.evenStep(edges)
-    val total = new Array[Long](slots * n)
-    rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+    merged(df, new Array[Long](slots * n)) { it =>
       val c = new Array[Long](slots * n)
       it.foreach { r =>
         var k = 0
@@ -201,12 +239,22 @@ object Binning {
         }
       }
       c
-    }, (_: Int, c: Array[Long]) => {
-      var i = 0
-      while (i < total.length) { total(i) += c(i); i += 1 }
-    })
+    }(addInto)
+  }
+
+  /** Adds `part` into `total` and returns it. */
+  private def addInto(total: Array[Long], part: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < total.length) { total(i) += part(i); i += 1 }
     total
   }
+
+  /** A local DataFrame of `rows`: collecting it runs no job. */
+  private def local(spark: SparkSession, fields: Seq[StructField], rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+
+  /** A non-nullable output column. */
+  private def field(name: String, dt: DataType): StructField = StructField(name, dt, nullable = false)
 
   /** Same output as [[histogram]], which already counts in one
     * [[graft.functions.HistogramAgg]] aggregate. */
@@ -265,8 +313,8 @@ object Binning {
     * one union child; each distinct (source, column) is one nullable double
     * slot `s_k`, null in the children of the other sources, and a repeated
     * pair reuses its slot. The union is planned once and its rows read by
-    * at most two jobs in one SQL execution: [[rangeOf]] for a data-derived
-    * range, then [[countsOf]], which drops null, NaN and out-of-range values
+    * at most two jobs: [[rangeOf]] for a data-derived range, then
+    * [[countsOf]], which drops null, NaN and out-of-range values
     * itself, so the union children carry no filter. The result is a local
     * DataFrame of the dense, sorted bins: `bin_lo`/`bin_hi` are the edges
     * themselves, user-supplied edges verbatim and derived ones as
@@ -290,26 +338,28 @@ object Binning {
         (if (sj == j) Bridge.column(a) else lit(null)).cast("double").as(s"s$k")
       }: _*)
     }.reduce(_ union _)
-    val (es, counts) = executed(union) { rows =>
-      val es: Vector[Double] = bins match {
-        case Bins.Edges(e) => validateEdges(e); e.toVector
-        case Bins.Count(n) =>
-          val (lo, hi) = range.getOrElse(rangeOf(rows, slots.size))
-          require(lo <= hi, s"invalid range [$lo, $hi]")
-          equalWidthEdges(lo, hi, n)
-      }
-      (es, countsOf(rows, slots.size, es))
-    }
+    val es = edgesOf(bins, range, rangeOf(union, slots.size))
+    val counts = countsOf(union, slots.size, es)
     val nb = es.size - 1
     val slotOf = slotKeys.map(slots.indexOf)
-    val out = (0 until nb).map { i =>
+    local(spark, binFields ++ names.map(field(_, LongType)), (0 until nb).map { i =>
       Row.fromSeq(Seq[Any](i, es(i), es(i + 1)) ++ slotOf.map(k => counts(k * nb + i)))
-    }
-    val schema = StructType(Seq(StructField("bin_id", IntegerType, nullable = false),
-      StructField("bin_lo", DoubleType, nullable = false), StructField("bin_hi", DoubleType, nullable = false)) ++
-      names.map(StructField(_, LongType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+    })
   }
+
+  /** `(bin_id, bin_lo, bin_hi)`, the leading columns of a 1-D histogram. */
+  private val binFields = Seq(field("bin_id", IntegerType), field("bin_lo", DoubleType), field("bin_hi", DoubleType))
+
+  /** The edges of `bins`: explicit edges, validated; else equal-width ones
+    * over `range`, or over the data range `derived` runs one job for. */
+  private def edgesOf(bins: Bins, range: Option[(Double, Double)], derived: => (Double, Double)): Vector[Double] =
+    bins match {
+      case Bins.Edges(e) => validateEdges(e); e.toVector
+      case Bins.Count(n) =>
+        val (lo, hi) = range.getOrElse(derived)
+        require(lo <= hi, s"invalid range [$lo, $hi]")
+        equalWidthEdges(lo, hi, n)
+    }
 
   /** Duplicate series names get " (k)" suffixes, mirroring the reference's
     * add_column de-dupe (pyspark_dist_explore.py ~L80-90). */
@@ -329,23 +379,56 @@ object Binning {
 
   /** Grouped histogram: shared global range over the whole column (rows
     * with a null group included), counts per (group, bin). Dense over
-    * non-null groups × bins.
+    * non-null groups × bins, sorted by the group column's Catalyst ordering,
+    * then by bin. Output: (<groupCol>, bin_id, cnt).
     *
-    * One grouped aggregate of one [[graft.functions.HistogramAgg]] vector
-    * per group — the shuffle carries n_groups fixed-width count vectors
-    * instead of n_groups × n_bins rows. `hist_counts` drops null, NaN and
-    * out-of-range values and counts the degenerate `[v, v]` bucket, and
-    * every group's buffer is dense from its first row, so a group whose
-    * values are all dropped still gets its zero bins. */
+    * A derived range is one job ([[minMaxOf]]); the counts are one more
+    * ([[merged]]), in which each partition builds a map from group to a
+    * dense `long[n_bins]` (bounded by its distinct groups × n_bins) and the
+    * driver adds the maps up and sorts the groups. Groups compare as
+    * Spark's `groupBy` compares them: by their binary form after
+    * floating-point normalization (-0.0 is 0.0, every NaN is one NaN), so
+    * a string group column must have the default binary collation.
+    * [[graft.functions.HistogramAgg.bucket]] drops null, NaN and
+    * out-of-range values and counts the degenerate `[v, v]` bucket, and a
+    * group is dense from its first row, so a group whose values are all
+    * dropped still gets its zero bins. */
   def histogramByGroup(df: DataFrame, valueCol: String, groupCol: String, n: Int = 10,
                        range: Option[(Double, Double)] = None): DataFrame = {
     val x = col(valueCol).cast("double")
     val (lo, hi) = range.getOrElse(minMaxOf(df.select(x.as("x"))))
     val es = equalWidthEdges(lo, hi, n)
-    df.where(col(groupCol).isNotNull).groupBy(col(groupCol).as("grp"))
-      .agg(HistogramAgg.hist_counts(x, es).as("cnts"))
-      .select(col("grp").as(groupCol), posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
-      .orderBy(groupCol, "bin_id")
+    val (esa, step, nb) = (es.toArray, HistogramAgg.evenStep(es), es.size - 1)
+    val grouped = df.select(col(groupCol).as("g"), x.as("x"))
+    val g = grouped.queryExecution.analyzed.output.head
+    val keyed = grouped.select(Bridge.column(Bridge.normalizedFloats(g)), col("x"))
+    val dt = g.dataType
+    val counts = merged(keyed, new java.util.HashMap[UnsafeRow, Array[Long]]) { it =>
+      val key = InterpretedUnsafeProjection.createProjection(Seq(BoundReference(0, dt, nullable = true)))
+      val m = new java.util.HashMap[UnsafeRow, Array[Long]]
+      it.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val k = key(r)
+          var c = m.get(k)
+          if (c == null) { c = new Array[Long](nb); m.put(k.copy(), c) }
+          if (!r.isNullAt(1)) {
+            val b = HistogramAgg.bucket(r.getDouble(1), esa, step)
+            if (b >= 0) c(b) += 1L
+          }
+        }
+      }
+      m.asScala.toArray
+    } { (total, part) =>
+      part.foreach { case (k, c) => Option(total.putIfAbsent(k, c)).foreach(addInto(_, c)) }
+      total
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val groups = counts.asScala.toSeq.sortBy(kc => kc._1: InternalRow)(InterpretedOrdering.forSchema(Seq(dt)))
+    local(df.sparkSession, Seq(StructField(groupCol, dt), field("bin_id", IntegerType), field("cnt", LongType)),
+      groups.flatMap { case (k, c) =>
+        val v = toScala(k.get(0, dt))
+        (0 until nb).map(i => Row(v, i, c(i)))
+      })
   }
 
   /** `to_pandas(kind='hist')` label: `"%.2f - %.2f"` over the bin edges
@@ -411,21 +494,20 @@ object Binning {
   }
 
   /** Cumulative distribution over a histogram: running count and CDF
-    * fraction per bin. Input is any `(bin_id, …, cnt)` histogram result —
-    * an ALREADY-AGGREGATED n_bins-row frame — so the single-partition window
-    * is O(n_bins) driver-adjacent work, not a data-scale sort (the
-    * `partitionBy(lit(0))` keeps Spark from logging the no-partition
-    * warning). The fraction is an exact-integer running sum over an exact
-    * total with one double division per bin: bit-deterministic. */
+    * fraction per bin. Input is any `(bin_id, …, cnt)` histogram result, an
+    * already-aggregated n_bins-row frame: its rows are collected (no job
+    * for a local histogram), sorted by bin on the driver and summed there
+    * exactly. The fraction is Spark's double division of the running count
+    * by the total, evaluated on the local rows (so an all-zero histogram
+    * gives Spark's division-by-zero result): bit-deterministic. Output: the
+    * histogram's columns, then `cum_cnt` and `cdf`. */
   def cdf(hist: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val run = Window.partitionBy(lit(0)).orderBy("bin_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val all = Window.partitionBy(lit(0))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    hist.withColumn("cum_cnt", sum(col("cnt")).over(run))
-      .withColumn("cdf", col("cum_cnt").cast("double") / sum(col("cnt")).over(all).cast("double"))
-      .orderBy("bin_id")
+    val rows = hist.collect().sortBy(_.getAs[Int]("bin_id"))
+    val cnt = hist.schema.fieldIndex("cnt")
+    val cum = rows.map(_.getLong(cnt)).scanLeft(0L)(_ + _).tail
+    local(hist.sparkSession, hist.schema.fields.toSeq :+ StructField("cum_cnt", LongType),
+      rows.zip(cum).map { case (r, c) => Row.fromSeq(r.toSeq :+ c) }.toSeq)
+      .withColumn("cdf", col("cum_cnt").cast("double") / lit(cum.lastOption.getOrElse(0L).toDouble))
   }
 
   /** Log-spaced histogram: n geometric bins over [lo, hi] — the right shape
@@ -463,49 +545,41 @@ object Binning {
     * the rdd.py:2350-2351 drop rule, applied per axis; each axis keeps the
     * closed-last-bucket clamp.
     *
-    * Two actions: one combined min/max agg for both axes, one counting
-    * pass (`groupBy(bin_x, bin_y)` hash-agg — shuffle of
-    * at most nx × ny rows), then a dense-grid spine join (tiny broadcast).
-    * Degenerate axes (min == max) collapse to a single closed bucket on that
-    * axis. Output: (bin_x, bin_y, x_lo, x_hi, y_lo, y_hi, cnt), dense,
-    * sorted by (bin_x, bin_y). */
+    * Two jobs, one with both ranges given: one for both axes' min/max
+    * ([[boundsOf]] over the jointly cleaned rows) and one ([[merged]]) in
+    * which each partition fills one `long[nx·ny]` grid that the driver adds
+    * up. Degenerate axes (min == max) collapse to a single closed bucket on
+    * that axis. Output: (bin_x, bin_y, x_lo, x_hi, y_lo, y_hi, cnt), dense,
+    * sorted by (bin_x, bin_y); the edges are [[equalWidthEdges]]'. */
   def histogram2d(df: DataFrame, colX: String, colY: String, nx: Int = 10, ny: Int = 10,
                   rangeX: Option[(Double, Double)] = None,
                   rangeY: Option[(Double, Double)] = None): DataFrame = {
     require(nx >= 1 && ny >= 1, "bins must be >= 1")
     val clean = df.select(col(colX).cast("double").as("x"), col(colY).cast("double").as("y"))
       .where(col("x").isNotNull && !isnan(col("x")) && col("y").isNotNull && !isnan(col("y")))
-    val (xlo, xhi, ylo, yhi) = (rangeX, rangeY) match {
-      case (Some((a, b)), Some((c, dd))) => (a, b, c, dd)
+    val ((xlo, xhi), (ylo, yhi)) = (rangeX, rangeY) match {
+      case (Some(rx), Some(ry)) => (rx, ry)
       case _ =>
-        val r = clean.agg(min("x"), max("x"), min("y"), max("y")).head()
-        if (r.isNullAt(0))
-          throw new IllegalArgumentException("can not generate buckets from empty RDD")
-        (rangeX.map(_._1).getOrElse(r.getDouble(0)), rangeX.map(_._2).getOrElse(r.getDouble(1)),
-          rangeY.map(_._1).getOrElse(r.getDouble(2)), rangeY.map(_._2).getOrElse(r.getDouble(3)))
+        val Seq(bx, by) = boundsOf(clean)
+        if (bx.isEmpty) throw new IllegalArgumentException("can not generate buckets from empty RDD")
+        (rangeX.getOrElse(bx.get), rangeY.getOrElse(by.get))
     }
     require(xlo <= xhi && ylo <= yhi, s"invalid ranges [$xlo,$xhi] [$ylo,$yhi]")
-    val (nxe, nye) = (if (xlo == xhi) 1 else nx, if (ylo == yhi) 1 else ny)
-    val xes = equalWidthEdges(xlo, xhi, nxe)
-    val yes = equalWidthEdges(ylo, yhi, nye)
-    val inRange = clean.where(col("x") >= lit(xlo) && col("x") <= lit(xhi) &&
-      col("y") >= lit(ylo) && col("y") <= lit(yhi))
-    val counts = inRange
-      .groupBy(binId(col("x"), xes).as("bin_x"), binId(col("y"), yes).as("bin_y"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = df.sparkSession.range(nxe).select(col("id").cast("int").as("bin_x"))
-      .crossJoin(df.sparkSession.range(nye).select(col("id").cast("int").as("bin_y")))
-    // equalWidthEdges computes exactly i*step+lo, so echoing the driver-side
-    // vectors via element_at literals is bit-identical to the oracle formula
-    def edgeCols(b: Column, es: Vector[Double], loN: String, hiN: String) = Seq(
-      element_at(typedLit(es.dropRight(1)), b + 1).as(loN),
-      element_at(typedLit(es.drop(1)), b + 1).as(hiN))
-    grid.join(counts, Seq("bin_x", "bin_y"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .select(Seq(col("bin_x"), col("bin_y")) ++
-        edgeCols(col("bin_x"), xes, "x_lo", "x_hi") ++
-        edgeCols(col("bin_y"), yes, "y_lo", "y_hi") ++ Seq(col("cnt")): _*)
-      .orderBy("bin_x", "bin_y")
+    val (xes, yes) = (equalWidthEdges(xlo, xhi, nx), equalWidthEdges(ylo, yhi, ny))
+    val (nxe, nye) = (xes.size - 1, yes.size - 1)
+    val (xa, xs, ya, ys) = (xes.toArray, HistogramAgg.evenStep(xes), yes.toArray, HistogramAgg.evenStep(yes))
+    val counts = merged(clean, new Array[Long](nxe * nye)) { it =>
+      val c = new Array[Long](nxe * nye)
+      it.foreach { r =>
+        val (bx, by) = (HistogramAgg.bucket(r.getDouble(0), xa, xs), HistogramAgg.bucket(r.getDouble(1), ya, ys))
+        if (bx >= 0 && by >= 0) c(bx * nye + by) += 1L
+      }
+      c
+    }(addInto)
+    local(df.sparkSession, Seq(field("bin_x", IntegerType), field("bin_y", IntegerType)) ++
+      Seq("x_lo", "x_hi", "y_lo", "y_hi").map(field(_, DoubleType)) :+ field("cnt", LongType),
+      for (i <- 0 until nxe; j <- 0 until nye)
+        yield Row(i, j, xes(i), xes(i + 1), yes(j), yes(j + 1), counts(i * nye + j)))
   }
 
   /** Weighted histogram: per bin, the row count AND the exact sum of a weight
@@ -514,50 +588,49 @@ object Binning {
     * rows with a null/NaN weight still count in `cnt` but contribute nothing
     * to `wsum` (documented asymmetry — the row exists, its weight doesn't).
     *
-    * The weight sum aggregates as `decimal(28,6)` casts so it is
-    * order-independent under any partitioning (double summation would drift
-    * with the shuffle schedule), surfaced as a double. A derived range is one job
-    * ([[minMaxOf]]); the counts are one grouped aggregate, an n_bins-row
-    * shuffle. Output: (bin_id, bin_lo,
+    * Each weight is cast to `decimal(28,6)` in the planned projection (Spark's
+    * own cast) and the casts add up exactly, so the sum is independent of
+    * partitioning and order; it is surfaced as a double (0.0 for a bin with
+    * no weight). A derived range is one job ([[minMaxOf]]); the counts and
+    * sums are one more ([[merged]]), each partition filling n_bins counts
+    * and decimal sums that the driver adds up. Output: (bin_id, bin_lo,
     * bin_hi, cnt, wsum), dense, sorted. */
   def histogramWeighted(df: DataFrame, colName: String, weightCol: String,
                         bins: Bins = Bins.Count(10),
                         range: Option[(Double, Double)] = None): DataFrame = {
-    val clean = df.select(col(colName).cast("double").as("x"),
-        col(weightCol).cast("double").as("w"))
+    val w = col(weightCol).cast("double")
+    val clean = df.select(col(colName).cast("double").as("x"), when(!isnan(w), w).cast("decimal(28,6)").as("w"))
       .where(col("x").isNotNull && !isnan(col("x")))
-    val es: Vector[Double] = bins match {
-      case Bins.Edges(e) => validateEdges(e); e.toVector
-      case Bins.Count(n) =>
-        val (lo, hi) = range.getOrElse(minMaxOf(clean))
-        require(lo <= hi, s"invalid range [$lo, $hi]")
-        if (lo == hi || n == 1) Vector(lo, hi) else equalWidthEdges(lo, hi, n)
+    val es = edgesOf(bins, range, minMaxOf(clean))
+    val (esa, step, n) = (es.toArray, HistogramAgg.evenStep(es), es.size - 1)
+    val (cnt, wsum) = merged(clean, (new Array[Long](n), Array.fill(n)(java.math.BigDecimal.ZERO))) { it =>
+      val (c, s) = (new Array[Long](n), Array.fill(n)(java.math.BigDecimal.ZERO))
+      it.foreach { r =>
+        val b = HistogramAgg.bucket(r.getDouble(0), esa, step)
+        if (b >= 0) {
+          c(b) += 1L
+          if (!r.isNullAt(1)) s(b) = s(b).add(r.getDecimal(1, 28, 6).toJavaBigDecimal)
+        }
+      }
+      (c, s)
+    } { case ((c, s), (pc, ps)) =>
+      for (i <- 0 until n) s(i) = s(i).add(ps(i))
+      (addInto(c, pc), s)
     }
-    val n = es.size - 1
-    val wsum = sum(when(!isnan(col("w")), col("w")).cast("decimal(28,6)"))
-      .cast("double").as("wsum")
-    val inRange = clean.where(col("x") >= lit(es.head) && col("x") <= lit(es.last))
-    val counts = inRange
-      .groupBy(binId(col("x"), es).as("bin_id"))
-      .agg(count(lit(1)).as("cnt"), wsum)
-    spine(clean, n).join(counts, Seq("bin_id"), "left")
-      .na.fill(0L, Seq("cnt")).na.fill(0.0, Seq("wsum"))
-      .select(col("bin_id"),
-        element_at(typedLit(es.dropRight(1)), col("bin_id") + 1).as("bin_lo"),
-        element_at(typedLit(es.drop(1)), col("bin_id") + 1).as("bin_hi"),
-        col("cnt"), col("wsum"))
-      .orderBy("bin_id")
+    local(df.sparkSession, binFields ++ Seq(field("cnt", LongType), field("wsum", DoubleType)),
+      (0 until n).map(i => Row(i, es(i), es(i + 1), cnt(i), wsum(i).doubleValue)))
   }
 
-  /** Min/max over several columns of one frame in one combined aggregate —
-    * the reference ran 2 collect jobs PER series (SURVEY.md §3 step 2). It
-    * stays a Spark aggregate (2 jobs under AQE) because it returns Spark's
-    * `min`/`max`, where NaN is the greatest value; a histogram's range
-    * skips NaN instead ([[rangeOf]]). */
+  /** Min/max over several columns of one frame in ONE Spark job — the
+    * reference ran 2 collect jobs PER series (SURVEY.md §3 step 2). Each
+    * column is cast to double and follows Spark's `min`/`max` ([[boundsOf]]):
+    * NaN is the greatest value (a histogram's range skips NaN instead,
+    * [[rangeOf]]) and a column with no value gives null. Output: one local
+    * row (<col>_min, <col>_max, …). */
   def minMax(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).cast("double")).as(s"${c}_min"),
-      max(col(c).cast("double")).as(s"${c}_max")))
-    df.agg(aggs.head, aggs.tail: _*)
+    require(cols.nonEmpty, "at least one column required")
+    val bounds = boundsOf(df.select(cols.map(c => col(c).cast("double")): _*))
+    local(df.sparkSession, cols.flatMap(c => Seq(s"${c}_min", s"${c}_max").map(StructField(_, DoubleType))),
+      Seq(Row.fromSeq(bounds.flatMap(_.fold(Seq[Any](null, null)) { case (lo, hi) => Seq(lo, hi) }))))
   }
 }

@@ -22,8 +22,8 @@ package object dist {
     def histogramBy(valueCol: String, groupCol: String, bins: Int = 10): DataFrame =
       Binning.histogramByGroup(df, valueCol, groupCol, bins)
 
-    /** Min/max over several numeric columns in one aggregate (2 jobs under
-      * AQE; NaN counts as the greatest value, as in Spark's `max`). */
+    /** Min/max over several numeric columns in one Spark job, as one local
+      * row (NaN counts as the greatest value, as in Spark's `max`). */
     def minMax(cols: String*): DataFrame = Binning.minMax(df, cols)
 
     /** Density points (bin centers × counts) — reference distplot data. */

@@ -13,6 +13,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `e` with every floating-point value in it normalized as Spark's
+    * `groupBy` normalizes its keys (-0.0 becomes 0.0, every NaN one NaN), so
+    * equal keys have equal binary forms. */
+  def normalizedFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** DataFrame over an already-built logical plan: the histogram core
     * reads a series' source plan (a frame's analyzed plan minus a top
     * projection) back as a DataFrame this way. */

@@ -55,8 +55,10 @@ object Graphs {
     val e = e0.join(outW, "esrc")
       .select(col("esrc"), col("edst"), (col("w") / col("ow")).cast(dec).as("share"))
       .localCheckpoint(false)
-    val nodes = e.select(col("esrc").as("id"))
-      .union(e.select(col("edst").as("id"))).distinct().localCheckpoint(false)
+    // one read of the checkpoint: a self-union would compute its blocks
+    // twice, in two concurrent tasks of one stage
+    val nodes = e.select(explode(array(col("esrc"), col("edst"))).as("id"))
+      .distinct().localCheckpoint(false)
     var ranks = nodes.select(col("id"), lit(1).cast(dec).as("rank"))
     for (i <- 1 to iters) {
       val contribs = e.join(ranks, e("esrc") === ranks("id"))
@@ -217,8 +219,11 @@ object Graphs {
     // the blocks in its own job — the eager version paid one extra job per
     // checkpoint for the same state (r15, guide §2.6)
     e = e.localCheckpoint(false)
-    deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    // each degree count reads its checkpoint once (a self-union would
+    // compute the lazy blocks twice, in two concurrent tasks of one stage)
+    def degrees(e: DataFrame) =
+      e.select(explode(array(col("a"), col("b"))).as("id")).groupBy("id").agg(count(lit(1)).as("deg"))
+    deg = degrees(e)
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -234,8 +239,7 @@ object Graphs {
           .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
           .localCheckpoint(false)
-        deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("deg"))
+        deg = degrees(e)
       }
     }
     deg.where(col("deg") >= k)

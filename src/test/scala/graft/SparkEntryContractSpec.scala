@@ -31,7 +31,7 @@ class SparkEntryContractSpec extends SparkSpec {
     "ann_brute_topk_embeddings", // broadcast(query-side), non-equi condition
     "centroid_sim_embeddings",   // pair join over a one-row-per-GROUP frame
     // crossJoin with a 1-row aggregate (corpus totals / bounds / stats row)
-    "clip_outliers_lineitem", "hist2d_quantity_discount", "bm25_documents",
+    "clip_outliers_lineitem", "bm25_documents",
     "hll_daily_users_events", "hybrid_topk_documents", "pmi_top20_bigrams",
     "tfidf_top3_documents", "assoc_rules_events", "source_set_ops_documents",
     "heavy_hitters_tokens", // crossJoin(broadcast(1-row token total))

@@ -11,7 +11,9 @@ import org.apache.spark.sql.DataFrame
   * then the count-vector job) and 1 with an explicit range or explicit
   * edges (the count-vector job only). Collecting the result, a local
   * DataFrame, runs none. The series mix two parquet sources and several
-  * columns of one source; at N = 16 every (source, column) pair repeats. */
+  * columns of one source; at N = 16 every (source, column) pair repeats.
+  * The grouped, 2-D and weighted shapes keep the same budgets, `minMax` is
+  * 1 job, and `cdf` over a local histogram adds none. */
 class HistogramJobContractSpec extends SparkSpec {
 
   private lazy val sources: (DataFrame, DataFrame) = {
@@ -57,5 +59,29 @@ class HistogramJobContractSpec extends SparkSpec {
     assert(ranged.map(_._2).distinct == Seq(1), ranged)
     val edged = jobs(Bins.Edges(Seq(0.0, 1.0, 10.0, 100.0, 1000.0)), None)
     assert(edged.map(_._2).distinct == Seq(1), edged)
+  }
+
+  test("grouped, 2-D and weighted: 2 jobs with a derived range, 1 with an explicit one") {
+    val (t, _) = sources
+    val derived = Seq[(String, () => DataFrame)](
+      "histogramByGroup" -> (() => Binning.histogramByGroup(t, "b", "a")),
+      "histogram2d" -> (() => Binning.histogram2d(t, "a", "b")),
+      "histogramWeighted" -> (() => Binning.histogramWeighted(t, "b", "c")))
+    val explicit = Seq[(String, () => DataFrame)](
+      "histogramByGroup" -> (() => Binning.histogramByGroup(t, "b", "a", 10, Some((0.0, 500.0)))),
+      "histogram2d" -> (() => Binning.histogram2d(t, "a", "b", 10, 10, Some((0.0, 50.0)), Some((0.0, 500.0)))),
+      "histogramWeighted" -> (() => Binning.histogramWeighted(t, "b", "c", Bins.Count(10), Some((0.0, 500.0)))),
+      "histogramWeighted edges" -> (() => Binning.histogramWeighted(t, "b", "c", Bins.Edges(Seq(0.0, 10.0, 1e3)))))
+    def jobsEach(builds: Seq[(String, () => DataFrame)]) = builds.map { case (n, b) => n -> jobsOf(b().collect()) }
+    val (d, e) = (jobsEach(derived), jobsEach(explicit))
+    assert(d.forall(_._2 == 2), d)
+    assert(e.forall(_._2 == 1), e)
+  }
+
+  test("minMax: 1 job; cdf over a local histogram: none") {
+    val (t, _) = sources
+    assert(jobsOf(Binning.minMax(t, Seq("a", "b", "c")).collect()) == 1)
+    val h = Binning.histogram(t, "b")
+    assert(jobsOf(Binning.cdf(h).collect()) == 0)
   }
 }

@@ -68,8 +68,8 @@ class SkewStressSpec extends SparkSpec {
        "and results stay exact", Slow) {
     // the runtime half of the skew story (salting is the planning-time
     // half above): with the skew threshold lowered to CI-fixture bytes —
-    // the same emulation tools/SkewBench uses, since local partitions
-    // never hit the 256 MiB production default — AQE must detect the hot
+    // local partitions never reach the 256 MiB production default, and
+    // SCALE.md §2's timed fixture lowered it the same way — AQE must detect the hot
     // partition and split it, which the final adaptive plan records as
     // `skew=true` on the sort-merge join
     val keys = Seq("spark.sql.adaptive.enabled",
