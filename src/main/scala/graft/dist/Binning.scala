@@ -9,14 +9,13 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Bound
   InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
-
-import graft.functions.HistogramAgg
 
 /** Bin specification: either a bin count (edges derived from data min/max or
   * an explicit range) or an explicit, validated boundary list.
@@ -42,8 +41,9 @@ object Bins {
   * a frame is planned and code-generated once, ONE Spark job folds each
   * partition into a small local result (a dense count vector, a map from
   * group to counts, per-column bounds), and the driver merges those with no
-  * shuffle. The series-based entry points ([[Binning.histogram]],
-  * [[Binning.histogramManyBins]], [[Binning.histogramColumns]],
+  * shuffle. Every count vector is filled through one bucketing rule,
+  * [[Binning.bucket]]. The series-based entry points ([[Binning.histogram]],
+  * [[Binning.histogramMany]], [[Binning.histogramColumns]],
   * [[Binning.histogramLog]], [[Histogram.build]]) read one union: series
   * that read the same source share one scan, and each distinct (source,
   * column) is one nullable double slot. So a histogram of any shape (any
@@ -90,7 +90,31 @@ object Binning {
     steps.max - steps.min < 1e-10
   }
 
-  /** Bin-id expression for a value column against fixed edges.
+  /** The common bin width of `edges` when they are evenly spaced within
+    * rdd.py's 1e-10 tolerance (rdd.py:2340-2342), else NaN. */
+  private def evenStep(edges: Seq[Double]): Double =
+    if (isEvenWidth(edges)) (edges.last - edges.head) / (edges.size - 1) else Double.NaN
+
+  /** The bucket of `x` against `edges` (rdd.py:2350-2360), or -1 when `x`
+    * is NaN or out of range (dropped). `step` is [[evenStep]] of the edges:
+    * even widths take the fast path `min(int((x - lo) / step), n - 1)`,
+    * uneven ones `bisect_right(edges, x) - 1`, both clamped into the closed
+    * last bucket; `[v, v]` is the one degenerate min == max bucket
+    * (rdd.py:2295-2296). Every histogram count goes through it. */
+  private def bucket(x: Double, edges: Array[Double], step: Double): Int = {
+    val n = edges.length - 1
+    if (!(x >= edges(0) && x <= edges(n))) -1 // NaN fails both tests
+    else if (n == 1) 0
+    else if (!step.isNaN) math.min(((x - edges(0)) / step).toInt, n - 1)
+    else {
+      var b = java.util.Arrays.binarySearch(edges, x)
+      if (b < 0) b = -b - 2 // insertion point - 1
+      math.min(b, n - 1)
+    }
+  }
+
+  /** Bin-id expression for a value column against fixed edges: the Column
+    * form of [[bucket]], for frames that bin inside a Catalyst plan.
     *
     * Even widths (rdd.py:2352-2354 fast path):
     *   `least(floor((x - lo) / step), n-1)` — the `least` clamp folds the
@@ -219,20 +243,20 @@ object Binning {
   /** Dense counts of the first `slots` double columns of `df` against
     * `edges` in ONE job: slot k's counts are `counts(k * n until (k + 1) * n)`.
     * Each partition fills one `long[slots * n]` through
-    * [[graft.functions.HistogramAgg.bucket]], which drops NaN and
+    * [[bucket]], which drops NaN and
     * out-of-range values, and the driver adds them up (exact long sums);
     * an input without partitions gives dense zeros. */
   private def countsOf(df: DataFrame, slots: Int, edges: Vector[Double]): Array[Long] = {
     val n = edges.size - 1
     val es = edges.toArray
-    val step = HistogramAgg.evenStep(edges)
+    val step = evenStep(edges)
     merged(df, new Array[Long](slots * n)) { it =>
       val c = new Array[Long](slots * n)
       it.foreach { r =>
         var k = 0
         while (k < slots) {
           if (!r.isNullAt(k)) {
-            val b = HistogramAgg.bucket(r.getDouble(k), es, step)
+            val b = bucket(r.getDouble(k), es, step)
             if (b >= 0) c(k * n + b) += 1L
           }
           k += 1
@@ -250,39 +274,28 @@ object Binning {
   }
 
   /** A local DataFrame of `rows`: collecting it runs no job. */
-  private def local(spark: SparkSession, fields: Seq[StructField], rows: Seq[Row]): DataFrame =
+  private[dist] def local(spark: SparkSession, fields: Seq[StructField], rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
 
   /** A non-nullable output column. */
   private def field(name: String, dt: DataType): StructField = StructField(name, dt, nullable = false)
 
-  /** Same output as [[histogram]], which already counts in one
-    * [[graft.functions.HistogramAgg]] aggregate. */
-  def histogramOnePass(df: DataFrame, colName: String, bins: Bins = Bins.Count(10),
-                       range: Option[(Double, Double)] = None): DataFrame =
-    histogram(df, colName, bins, range)
-
   /** Multi-series histogram with a SHARED range across all series — the
     * reference's only cross-series interaction (global min of mins / max of
     * maxes unless `range=` given; pyspark_dist_explore.py ~L100-118).
-    * Output: (bin_id, bin_lo, bin_hi, <label>_cnt ...), dense, sorted; the
-    * count columns follow the series order. */
-  def histogramMany(series: Seq[(DataFrame, String, String)], n: Int = 10,
+    * Each series is (frame, column, label); explicit edges skip the min/max
+    * job, mirroring the reference's `bins=list`. Labels are de-duplicated
+    * ([[dedupeLabels]]) and only ever used as output names, so any string
+    * is a valid label. Output: (bin_id, bin_lo, bin_hi, <label>_cnt ...),
+    * dense, sorted; the count columns follow the series order. */
+  def histogramMany(series: Seq[(DataFrame, String, String)], bins: Bins = Bins.Count(10),
                     range: Option[(Double, Double)] = None): DataFrame =
-    histogramManyBins(series, Bins.Count(n), range)
-
-  /** [[histogramMany]] generalized to any [[Bins]] spec (explicit edges skip
-    * the min/max job, mirroring the reference's `bins=list`). Labels
-    * are de-duplicated ([[dedupeLabels]]) and only ever used as output
-    * names, so any string is a valid label. */
-  def histogramManyBins(series: Seq[(DataFrame, String, String)], bins: Bins,
-                        range: Option[(Double, Double)] = None): DataFrame =
     counted(series.map(s => (s._1, s._2)), dedupeLabels(series.map(_._3)).map(_ + "_cnt"), bins, range)
 
   /** Multi-column histogram over ONE frame: the reference's
     * `add_data(multi_col_df)` split into per-column series with a SHARED
     * range; all columns share one scan per action, as in
-    * [[histogramManyBins]]. Output: (bin_id, bin_lo, bin_hi, <col>_cnt ...),
+    * [[histogramMany]]. Output: (bin_id, bin_lo, bin_hi, <col>_cnt ...),
     * dense, sorted. */
   def histogramColumns(df: DataFrame, cols: Seq[String], n: Int = 10,
                        range: Option[(Double, Double)] = None): DataFrame =
@@ -383,26 +396,41 @@ object Binning {
     * then by bin. Output: (<groupCol>, bin_id, cnt).
     *
     * A derived range is one job ([[minMaxOf]]); the counts are one more
-    * ([[merged]]), in which each partition builds a map from group to a
-    * dense `long[n_bins]` (bounded by its distinct groups × n_bins) and the
-    * driver adds the maps up and sorts the groups. Groups compare as
-    * Spark's `groupBy` compares them: by their binary form after
-    * floating-point normalization (-0.0 is 0.0, every NaN is one NaN), so
-    * a string group column must have the default binary collation.
-    * [[graft.functions.HistogramAgg.bucket]] drops null, NaN and
-    * out-of-range values and counts the degenerate `[v, v]` bucket, and a
-    * group is dense from its first row, so a group whose values are all
-    * dropped still gets its zero bins. */
+    * ([[countsByGroup]]), in which a group whose values are all dropped
+    * still gets its zero bins. A group column with a non-binary collation
+    * is rejected. */
   def histogramByGroup(df: DataFrame, valueCol: String, groupCol: String, n: Int = 10,
                        range: Option[(Double, Double)] = None): DataFrame = {
     val x = col(valueCol).cast("double")
     val (lo, hi) = range.getOrElse(minMaxOf(df.select(x.as("x"))))
-    val es = equalWidthEdges(lo, hi, n)
-    val (esa, step, nb) = (es.toArray, HistogramAgg.evenStep(es), es.size - 1)
-    val grouped = df.select(col(groupCol).as("g"), x.as("x"))
-    val g = grouped.queryExecution.analyzed.output.head
-    val keyed = grouped.select(Bridge.column(Bridge.normalizedFloats(g)), col("x"))
+    val grouped = df.select(col(groupCol), x)
+    val counts = countsByGroup(grouped, equalWidthEdges(lo, hi, n))
+    local(df.sparkSession,
+      Seq(StructField(groupCol, grouped.schema.head.dataType), field("bin_id", IntegerType), field("cnt", LongType)),
+      counts.flatMap { case (v, c) => c.indices.map(i => Row(v, i, c(i))) })
+  }
+
+  /** Dense counts per group against `edges` in ONE job ([[merged]]): the
+    * first column of `grouped` is the group, the second the double value.
+    * Each partition builds a map from group to a dense `long[n_bins]`
+    * (bounded by its distinct groups × n_bins), and the driver adds the
+    * maps up and sorts the groups by their Catalyst ordering. Groups compare
+    * as Spark's `groupBy` compares them: by their binary form after
+    * floating-point normalization (-0.0 is 0.0, every NaN is one NaN). A
+    * string with a non-binary collation has no such binary form (`groupBy`
+    * compares it by collation key), so a group type holding one is rejected
+    * with an error naming it. A null group is skipped; [[bucket]] drops
+    * null, NaN and out-of-range values, and a group is dense from its first
+    * row. Returns each group's value, as a `Row` holds it, with its counts.
+    * [[histogramByGroup]] and `Stats`' pairwise comparators count here. */
+  private[dist] def countsByGroup(grouped: DataFrame, edges: Vector[Double]): Seq[(Any, Array[Long])] = {
+    val Seq(g, v) = grouped.queryExecution.analyzed.output
     val dt = g.dataType
+    require(UnsafeRowUtils.isBinaryStable(dt),
+      s"a group column of type ${dt.sql} has a non-binary collation, which this histogram cannot group by; " +
+        "cast it to STRING to group by its bytes")
+    val (esa, step, nb) = (edges.toArray, evenStep(edges), edges.size - 1)
+    val keyed = grouped.select(Bridge.column(Bridge.normalizedFloats(g)), Bridge.column(v))
     val counts = merged(keyed, new java.util.HashMap[UnsafeRow, Array[Long]]) { it =>
       val key = InterpretedUnsafeProjection.createProjection(Seq(BoundReference(0, dt, nullable = true)))
       val m = new java.util.HashMap[UnsafeRow, Array[Long]]
@@ -412,7 +440,7 @@ object Binning {
           var c = m.get(k)
           if (c == null) { c = new Array[Long](nb); m.put(k.copy(), c) }
           if (!r.isNullAt(1)) {
-            val b = HistogramAgg.bucket(r.getDouble(1), esa, step)
+            val b = bucket(r.getDouble(1), esa, step)
             if (b >= 0) c(b) += 1L
           }
         }
@@ -423,12 +451,8 @@ object Binning {
       total
     }
     val toScala = CatalystTypeConverters.createToScalaConverter(dt)
-    val groups = counts.asScala.toSeq.sortBy(kc => kc._1: InternalRow)(InterpretedOrdering.forSchema(Seq(dt)))
-    local(df.sparkSession, Seq(StructField(groupCol, dt), field("bin_id", IntegerType), field("cnt", LongType)),
-      groups.flatMap { case (k, c) =>
-        val v = toScala(k.get(0, dt))
-        (0 until nb).map(i => Row(v, i, c(i)))
-      })
+    counts.asScala.toSeq.sortBy(kc => kc._1: InternalRow)(InterpretedOrdering.forSchema(Seq(dt)))
+      .map { case (k, c) => (toScala(k.get(0, dt)), c) }
   }
 
   /** `to_pandas(kind='hist')` label: `"%.2f - %.2f"` over the bin edges
@@ -567,11 +591,11 @@ object Binning {
     require(xlo <= xhi && ylo <= yhi, s"invalid ranges [$xlo,$xhi] [$ylo,$yhi]")
     val (xes, yes) = (equalWidthEdges(xlo, xhi, nx), equalWidthEdges(ylo, yhi, ny))
     val (nxe, nye) = (xes.size - 1, yes.size - 1)
-    val (xa, xs, ya, ys) = (xes.toArray, HistogramAgg.evenStep(xes), yes.toArray, HistogramAgg.evenStep(yes))
+    val (xa, xs, ya, ys) = (xes.toArray, evenStep(xes), yes.toArray, evenStep(yes))
     val counts = merged(clean, new Array[Long](nxe * nye)) { it =>
       val c = new Array[Long](nxe * nye)
       it.foreach { r =>
-        val (bx, by) = (HistogramAgg.bucket(r.getDouble(0), xa, xs), HistogramAgg.bucket(r.getDouble(1), ya, ys))
+        val (bx, by) = (bucket(r.getDouble(0), xa, xs), bucket(r.getDouble(1), ya, ys))
         if (bx >= 0 && by >= 0) c(bx * nye + by) += 1L
       }
       c
@@ -602,11 +626,11 @@ object Binning {
     val clean = df.select(col(colName).cast("double").as("x"), when(!isnan(w), w).cast("decimal(28,6)").as("w"))
       .where(col("x").isNotNull && !isnan(col("x")))
     val es = edgesOf(bins, range, minMaxOf(clean))
-    val (esa, step, n) = (es.toArray, HistogramAgg.evenStep(es), es.size - 1)
+    val (esa, step, n) = (es.toArray, evenStep(es), es.size - 1)
     val (cnt, wsum) = merged(clean, (new Array[Long](n), Array.fill(n)(java.math.BigDecimal.ZERO))) { it =>
       val (c, s) = (new Array[Long](n), Array.fill(n)(java.math.BigDecimal.ZERO))
       it.foreach { r =>
-        val b = HistogramAgg.bucket(r.getDouble(0), esa, step)
+        val b = bucket(r.getDouble(0), esa, step)
         if (b >= 0) {
           c(b) += 1L
           if (!r.isNullAt(1)) s(b) = s(b).add(r.getDecimal(1, 28, 6).toJavaBigDecimal)

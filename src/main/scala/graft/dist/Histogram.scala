@@ -50,23 +50,20 @@ class Histogram(bins: Bins = Bins.Count(10), range: Option[(Double, Double)] = N
   }
 
   /** Idempotent, eager materialization (reference build(), ~L95-120)
-    * through [[Binning.histogramManyBins]]: one scan per distinct source
+    * through [[Binning.histogramMany]]: one scan per distinct source
     * per job, one min/max job for a derived range and one count-vector job
     * for all series — 2 Spark jobs for any number of series, 1 with an
     * explicit range or edges, which skip the min/max (~L104). The result
     * is a local DataFrame; `HistogramJobContractSpec` holds the build to
     * that budget. */
   def build(): DataFrame = built.getOrElse {
-    val b = Binning.histogramManyBins(series.toSeq, bins, range)
+    val b = Binning.histogramMany(series.toSeq, bins, range)
     built = Some(b)
     b
   }
 
   /** Wide histogram table with formatted bin labels (to_pandas('hist')). */
-  def toHistDF: DataFrame = {
-    val b = build()
-    b.withColumn("bin_label", format_string("%.2f - %.2f", col("bin_lo"), col("bin_hi")))
-  }
+  def toHistDF: DataFrame = Binning.withLabels(build())
 
   /** Density table: bin centers × per-series counts (to_pandas('density')). */
   def toDensityDF: DataFrame = {

@@ -1,7 +1,8 @@
 package graft.dist
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField}
 
 /** Column-statistics operators beyond histograms: quantiles and distinct
   * counts, each in an exact tier and a sketch tier.
@@ -68,6 +69,35 @@ object Stats {
     }: _*)
   }
 
+  /** Shared first half of the pairwise-histogram comparators
+    * ([[distributionDistance]], [[psiMatrix]]): each group's count vector
+    * over a common equal-width grid, counted by Binning's grouped
+    * driver-merge ([[Binning.countsByGroup]]: one job, no shuffle, groups
+    * compared as `groupBy` compares them), then one local (grp, tot, cnts)
+    * row per group with at least one in-range value, gathered into a single
+    * array and expanded to a<b pairs expression-side — no self-join.
+    * Returns the pairs frame; each row carries `p.a` / `p.b` structs with
+    * (grp, tot, cnts). */
+  private def groupHistPairs(df: DataFrame, valueCol: String, groupCol: String,
+                             n: Int, range: Option[(Double, Double)],
+                             measure: String): (DataFrame, Seq[Double]) = {
+    val clean = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
+      .where(col("grp").isNotNull && col("x").isNotNull && !isnan(col("x")))
+    val (lo, hi) = range.getOrElse(Binning.minMaxOf(clean))
+    require(hi > lo, s"degenerate range [$lo, $hi]: all values equal, every pairwise $measure is 0")
+    val es = Binning.equalWidthEdges(lo, hi, n)
+    val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
+    val rows = Binning.countsByGroup(inRange, es).map { case (g, c) => Row(g, c.sum, c.toSeq) }
+    val perGroup = Binning.local(df.sparkSession, Seq(inRange.schema.head, StructField("tot", LongType),
+      StructField("cnts", ArrayType(LongType, containsNull = false), nullable = false)), rows)
+    val pairs = perGroup
+      .agg(collect_list(struct(col("grp"), col("tot"), col("cnts"))).as("gs"))
+      .select(explode(filter(
+        flatten(transform(col("gs"), a => transform(col("gs"), b => struct(a.as("a"), b.as("b"))))),
+        p => p.getField("a").getField("grp") < p.getField("b").getField("grp"))).as("p"))
+    (pairs, es)
+  }
+
   /** Pairwise total-variation distance between per-group value
     * distributions: bin the column over ONE shared global range
     * (equal-width, same semantics as [[Binning.histogramByGroup]]), then for
@@ -77,44 +107,15 @@ object Stats {
     * standard "how different are these two histograms" measures a curation
     * pass uses to compare sources/shards.
     *
-    * Scale + determinism shape: counting is one
-    * [[graft.functions.HistogramAgg]] vector per group (shuffle =
-    * n_groups fixed-width rows), and the pair expansion gathers those
-    * n_groups aggregated rows into a single array and explodes a<b pairs —
-    * ONE scan, no self-join (a self-join would re-run the scan per side
-    * unless exchange reuse fires). The per-bin terms are computed in exact
+    * Scale + determinism shape: a derived range is one job and the per-group
+    * counts one more ([[groupHistPairs]]); the pair expansion runs over the
+    * n_groups local rows. The per-bin terms are computed in exact
     * integer/decimal arithmetic (`|cntA*totB - cntB*totA|`) with a single
     * double division at the end, so results are bit-deterministic and
     * oracle-checkable. Bounded by group cardinality: fine for categorical
     * group columns (≤ ~1000 groups); a million-group comparison would want
-    * the pair-join formulation instead. */
-  /** Shared first half of the pairwise-histogram comparators
-    * ([[distributionDistance]], [[psiMatrix]]): one HistogramAgg count
-    * vector per group over a common equal-width grid, gathered into a
-    * single array and expanded to a<b pairs expression-side — ONE scan, no
-    * self-join. Returns the pairs frame; each row carries `p.a` / `p.b`
-    * structs with (grp, tot, cnts). */
-  private def groupHistPairs(df: DataFrame, valueCol: String, groupCol: String,
-                             n: Int, range: Option[(Double, Double)],
-                             measure: String): (DataFrame, Seq[Double]) = {
-    val clean = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
-      .where(col("grp").isNotNull && col("x").isNotNull && !isnan(col("x")))
-    val (lo, hi) = range.getOrElse(Binning.minMaxOf(clean))
-    require(hi > lo, s"degenerate range [$lo, $hi]: all values equal, every pairwise $measure is 0")
-    val es = Binning.equalWidthEdges(lo, hi, n)
-    val perGroup = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-      .groupBy(col("grp"))
-      .agg(graft.functions.HistogramAgg.hist_counts(col("x"), es).as("cnts"))
-      .select(col("grp"), col("cnts"),
-        aggregate(col("cnts"), lit(0L), (a, c) => a + c).as("tot"))
-    val pairs = perGroup
-      .agg(collect_list(struct(col("grp"), col("tot"), col("cnts"))).as("gs"))
-      .select(explode(filter(
-        flatten(transform(col("gs"), a => transform(col("gs"), b => struct(a.as("a"), b.as("b"))))),
-        p => p.getField("a").getField("grp") < p.getField("b").getField("grp"))).as("p"))
-    (pairs, es)
-  }
-
+    * the pair-join formulation instead. A group column with a non-binary
+    * collation is rejected. */
   def distributionDistance(df: DataFrame, valueCol: String, groupCol: String,
                            n: Int = 10,
                            range: Option[(Double, Double)] = None): DataFrame = {

@@ -81,20 +81,6 @@ object GraftFunctions {
       (args: Seq[Expression]) => {
         require(args.size == 1, "nfc_normalize(s) takes 1 argument")
         NfcNormalize(args(0))
-      }),
-    (FunctionIdentifier("hist_counts"),
-      info("hist_counts",
-        "hist_counts(x, array<double> edges) - aggregate: dense bucket counts for fixed boundaries"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "hist_counts(x, edges) takes 2 arguments")
-        val edges = args(1).eval() match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-            a.toDoubleArray().toSeq
-          case other => throw new IllegalArgumentException(
-            s"hist_counts edges must be a foldable array<double> literal, got $other")
-        }
-        graft.dist.Binning.validateEdges(edges)
-        HistogramAgg(args(0), edges)
       })
   )
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * this repo's own mains (r13 verdict #1).
   *
   * Spark's ObjectHashAggregate (the physical operator behind every
-  * TypedImperativeAggregate here — [[TopKAgg]], [[HistogramAgg]],
-  * [[KCenterAgg]], and the DataSketches sketch aggregates) silently falls
+  * TypedImperativeAggregate here — [[TopKAgg]], [[KCenterAgg]],
+  * [[DecSumVecAgg]], and the DataSketches sketch aggregates) silently falls
   * back to SORT-BASED aggregation after only 128 in-memory keys per
   * partition (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
   * default). The fallback externally sorts the aggregate's WHOLE input
@@ -53,21 +53,16 @@ import org.apache.spark.sql.SparkSession
   * fallback and instead keeps hash-aggregating — trading disk spill for
   * executor-memory pressure (graft's OWN aggregates are all bounded-state
   * by a checked contract, so they are safe at any key count; yours may
-  * not be). Two escape hatches, both honored on every delivery path:
-  *   - `spark.graft.tuneObjectAgg=false` (conf, any time before the
-  *     first graft call) disables the tuning entirely.
-  *   - Any EXPLICITLY-SET `spark.sql.objectHashAggregate.sortBased
-  *     .fallbackThreshold` — via `--conf`, the session builder, or
-  *     `spark.conf.set` — is always respected, including an explicit
-  *     `128` re-pinning Spark's conservative default (detected through
-  *     the session's set-conf registry, not by value comparison). */
+  * not be). The escape hatch, honored on every delivery path: set
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` yourself —
+  * via `--conf`, the session builder, or `spark.conf.set`, any time before
+  * the first graft call. An explicitly set value is always respected,
+  * including an explicit `128` re-pinning Spark's conservative default
+  * (detected through the session's set-conf registry, not by value
+  * comparison). */
 object SessionTuning {
 
   private val FallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-
-  /** Opt-out switch for library consumers: set to `false` to keep Spark's
-    * default object-agg fallback behavior session-wide. */
-  val TuneKey = "spark.graft.tuneObjectAgg"
 
   /** 2²² in-memory keys — bounded-state aggs at this key count cost
     * ~100s of MB worst-case, far below executor memory, and real group
@@ -76,18 +71,15 @@ object SessionTuning {
   val fallbackThreshold: Int = 1 << 22
 
   /** Raise the ObjectHashAggregate sort-fallback threshold unless the
-    * user opted out ([[TuneKey]]) or explicitly set the threshold
-    * themselves. Explicitness is read from the session's set-conf
-    * registry (`SQLConf.contains`) rather than by comparing against 128,
-    * so a user who deliberately re-pins Spark's default is respected too
-    * (ADVICE r14). Cheap (two conf reads), idempotent — our own set()
-    * marks the key explicit, so later calls no-op. */
-  def ensureObjectAggHashPath(spark: SparkSession): Unit = {
-    val optedOut = spark.conf.get(TuneKey, "true").equalsIgnoreCase("false")
-    if (!optedOut && !spark.sessionState.conf.contains(FallbackKey)) {
+    * user explicitly set it themselves. Explicitness is read from the
+    * session's set-conf registry (`SQLConf.contains`) rather than by
+    * comparing against 128, so a user who deliberately re-pins Spark's
+    * default is respected too (ADVICE r14). Cheap (one conf read),
+    * idempotent — our own set() marks the key explicit, so later calls
+    * no-op. */
+  def ensureObjectAggHashPath(spark: SparkSession): Unit =
+    if (!spark.sessionState.conf.contains(FallbackKey))
       spark.conf.set(FallbackKey, fallbackThreshold.toString)
-    }
-  }
 
   private val ExcludedRulesKey = "spark.sql.optimizer.excludedRules"
 

@@ -177,7 +177,6 @@ class SparkEntryContractSpec extends SparkSpec {
   //   Spark's graceful sort-spill for executor OOM.
   private val boundedStateObjectAggs = Set(
     "TopKAgg",             // k-bounded heap (k ≤ a few hundred by contract)
-    "HistogramAgg",        // fixed edges → fixed-size long[] bins
     "KCenterAgg",          // ≤ k centers × dim floats + one double
     "DecSumVecAgg",        // fixed dim-length decimal sum buffer
     "DecTermSumsAgg",      // fixed n-slot decimal sum buffer

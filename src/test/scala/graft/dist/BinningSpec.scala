@@ -86,7 +86,7 @@ class BinningSpec extends SparkSpec {
   test("multi-series shared range + deterministic pivot columns") {
     val a = Seq(0.0, 1.0, 2.0).toDF("x") // min 0
     val b = Seq(8.0, 9.0, 10.0).toDF("y") // max 10
-    val h = Binning.histogramMany(Seq((a, "x", "a"), (b, "y", "b")), n = 5)
+    val h = Binning.histogramMany(Seq((a, "x", "a"), (b, "y", "b")), Bins.Count(5))
     assert(h.columns.toSeq == Seq("bin_id", "bin_lo", "bin_hi", "a_cnt", "b_cnt"))
     val rows = h.orderBy("bin_id").select("a_cnt", "b_cnt").as[(Long, Long)].collect().toSeq
     // shared range [0,10], width 2: a -> bins 0,0,1 ; b -> bins 4,4,4(closed)
@@ -102,7 +102,7 @@ class BinningSpec extends SparkSpec {
       }.get
       assert(!buffers.isCachedColumnBuffersLoaded)
       // the count job scans the cached relation, which loads its buffers
-      val h = Binning.histogramMany(Seq((a, "a", "a"), (t.select("b"), "b", "b")), n = 2)
+      val h = Binning.histogramMany(Seq((a, "a", "a"), (t.select("b"), "b", "b")), Bins.Count(2))
       assert(buffers.isCachedColumnBuffersLoaded)
       assert(h.select("a_cnt", "b_cnt").as[(Long, Long)].collect().toSeq == Seq((1L, 1L), (1L, 1L)))
     } finally a.unpersist()
@@ -134,28 +134,27 @@ class BinningSpec extends SparkSpec {
     assert(centers == Seq(2.5, 7.5))
   }
 
-  test("histogramOnePass matches histogram on even, uneven, and degenerate bins") {
+  test("histogram: hand-checked edges and counts on even, uneven, degenerate bins") {
     val df = Seq(0.0, 1.5, 2.5, 5.0, 7.5, 10.0, Double.NaN, -1.0, 11.0).toDF("v")
     def rows(h: org.apache.spark.sql.DataFrame) =
       h.collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3))).toSeq
-    // even width, data-derived range over non-NaN values: [-1, 11]
-    assert(rows(Binning.histogramOnePass(df, "v", Bins.Count(4))) ==
-      rows(Binning.histogram(df, "v", Bins.Count(4))))
+    // even width, data-derived range over non-NaN values: [-1, 11], step 3
+    assert(rows(Binning.histogram(df, "v", Bins.Count(4))) ==
+      Seq((0, -1.0, 2.0, 3L), (1, 2.0, 5.0, 1L), (2, 5.0, 8.0, 2L), (3, 8.0, 11.0, 2L)))
     // explicit range excludes out-of-range values
-    assert(rows(Binning.histogramOnePass(df, "v", Bins.Count(4), Some((0.0, 10.0)))) ==
-      rows(Binning.histogram(df, "v", Bins.Count(4), Some((0.0, 10.0)))))
+    assert(rows(Binning.histogram(df, "v", Bins.Count(4), Some((0.0, 10.0)))) ==
+      Seq((0, 0.0, 2.5, 2L), (1, 2.5, 5.0, 1L), (2, 5.0, 7.5, 1L), (3, 7.5, 10.0, 2L)))
     // uneven boundaries (bisect path), out-of-range dropped
-    assert(rows(Binning.histogramOnePass(df, "v", Bins.Edges(Seq(0.0, 1.0, 5.0, 10.0)))) ==
-      rows(Binning.histogram(df, "v", Bins.Edges(Seq(0.0, 1.0, 5.0, 10.0)))))
+    assert(rows(Binning.histogram(df, "v", Bins.Edges(Seq(0.0, 1.0, 5.0, 10.0)))) ==
+      Seq((0, 0.0, 1.0, 1L), (1, 1.0, 5.0, 2L), (2, 5.0, 10.0, 3L)))
     // degenerate min==max single bucket
     val const = Seq(3.0, 3.0, 3.0).toDF("v")
-    assert(rows(Binning.histogramOnePass(const, "v", Bins.Count(5))) ==
-      rows(Binning.histogram(const, "v", Bins.Count(5))))
+    assert(rows(Binning.histogram(const, "v", Bins.Count(5))) == Seq((0, 3.0, 3.0, 3L)))
     // boundary values land per bisect_right: x==edge goes to the right bucket,
     // last bucket closed
     val edges = Seq(0.0, 5.0, 10.0)
     val b = Seq(0.0, 5.0, 10.0).toDF("v")
-    assert(rows(Binning.histogramOnePass(b, "v", Bins.Edges(edges))).map(_._4) == Seq(1L, 2L))
+    assert(rows(Binning.histogram(b, "v", Bins.Edges(edges))).map(_._4) == Seq(1L, 2L))
   }
 
   test("histogramColumns works for a single column and colliding labels dedupe safely") {

@@ -13,7 +13,9 @@ import org.apache.spark.sql.DataFrame
   * DataFrame, runs none. The series mix two parquet sources and several
   * columns of one source; at N = 16 every (source, column) pair repeats.
   * The grouped, 2-D and weighted shapes keep the same budgets, `minMax` is
-  * 1 job, and `cdf` over a local histogram adds none. */
+  * 1 job, and `cdf` over a local histogram adds none. The pairwise
+  * comparators `Stats.distributionDistance` and `Stats.psiMatrix` count on
+  * the grouped core at build and gather their pairs at collect. */
 class HistogramJobContractSpec extends SparkSpec {
 
   private lazy val sources: (DataFrame, DataFrame) = {
@@ -83,5 +85,20 @@ class HistogramJobContractSpec extends SparkSpec {
     assert(jobsOf(Binning.minMax(t, Seq("a", "b", "c")).collect()) == 1)
     val h = Binning.histogram(t, "b")
     assert(jobsOf(Binning.cdf(h).collect()) == 0)
+  }
+
+  test("pairwise comparators: 4 jobs with a derived range, 3 with an explicit one") {
+    val (t, _) = sources
+    val calls = Seq[(String, Option[(Double, Double)] => DataFrame)](
+      "distributionDistance" -> (r => Stats.distributionDistance(t, "b", "c", 10, r)),
+      "psiMatrix" -> (r => Stats.psiMatrix(t, "b", "c", 10, r)))
+    val js = for ((name, call) <- calls; range <- Seq(None, Some((0.0, 500.0)))) yield {
+      var df: DataFrame = null
+      val built = jobsOf { df = call(range) }
+      (name, range, built, jobsOf(df.collect()))
+    }
+    // build: the range job (derived only), then the counts job; collect:
+    // the gather's shuffle-map job and the result job over the local rows
+    assert(js.map(j => (j._3, j._4)) == Seq((2, 2), (1, 2), (2, 2), (1, 2)), js)
   }
 }

@@ -1,7 +1,6 @@
 package graft.dist
 
 import graft.SparkSpec
-import graft.functions.HistogramAgg
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
@@ -21,10 +20,11 @@ class HistogramPropertySpec extends SparkSpec {
   /** The Catalyst formulation of a multi-series histogram, kept as the
     * parity reference: one nullable double slot per series in a union, a
     * derived range from one `least(min)`/`greatest(max)` global aggregate
-    * over the NaN-free slots, one global `hist_counts` aggregate per slot,
-    * `posexplode(arrays_zip(..))` into the bins, even-width edges as
-    * `i * step + lo` (`hi` on the last bin), explicit edges echoed by
-    * `element_at`, `[lo, hi]` for one bin, sorted by bin id. */
+    * over the NaN-free slots, per slot a `groupBy(binId)` count of its
+    * in-range values left-joined onto a dense bin spine (so it bins with
+    * the Column form, not the driver-merged core's `bucket`), even-width
+    * edges as `i * step + lo` (`hi` on the last bin), explicit edges echoed
+    * by `element_at`, `[lo, hi]` for one bin, sorted by bin id. */
   private def aggregatePath(series: Seq[(DataFrame, String, String)], bins: Bins): DataFrame = {
     val xs = series.indices.map(k => col(s"s$k"))
     val union = series.zipWithIndex.map { case ((df, c, _), j) =>
@@ -49,11 +49,14 @@ class HistogramPropertySpec extends SparkSpec {
         (b * lit(step) + lit(lo), when(b === lit(nb - 1), lit(hi)).otherwise((b + lit(1)) * lit(step) + lit(lo)))
     }
     val names = Binning.dedupeLabels(series.map(_._3)).map(_ + "_cnt")
-    val cnts = xs.zipWithIndex.map { case (x, k) => HistogramAgg.hist_counts(x, es).as(s"c$k") }
-    union.agg(cnts.head, cnts.tail: _*)
-      .select(posexplode(arrays_zip(series.indices.map(k => col(s"c$k")): _*)))
-      .select(Seq(b.as("bin_id"), binLo.as("bin_lo"), binHi.as("bin_hi")) ++
-        names.zipWithIndex.map { case (nm, k) => col("col").getField(s"c$k").as(nm) }: _*)
+    val spine = spark.range(nb).select(col("id").cast("int").as("pos"))
+    val counted = xs.zipWithIndex.foldLeft(spine) { case (acc, (x, k)) =>
+      val c = union.where(x.isNotNull && !isnan(x) && x >= lit(es.head) && x <= lit(es.last))
+        .groupBy(Binning.binId(x, es).as("pos")).agg(count(lit(1)).as(s"c$k"))
+      acc.join(c, Seq("pos"), "left").na.fill(0L, Seq(s"c$k"))
+    }
+    counted.select(Seq(b.as("bin_id"), binLo.as("bin_lo"), binHi.as("bin_hi")) ++
+        names.zipWithIndex.map { case (nm, k) => col(s"c$k").as(nm) }: _*)
       .orderBy("bin_id")
   }
 
@@ -130,10 +133,10 @@ class HistogramPropertySpec extends SparkSpec {
     val edges = Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0)
     for (((vs, n), i) <- samples(Gen.zip(valuesGen, nBinsGen), 20).zipWithIndex) {
       val df = vs.toDF("v")
-      val derived = Binning.histogramOnePass(df, "v", Bins.Count(n))
+      val derived = Binning.histogram(df, "v", Bins.Count(n))
         .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
       assert(derived == derivedOracle(vs, n), s"case $i derived: n=$n values=$vs")
-      val uneven = Binning.histogramOnePass(df, "v", Bins.Edges(edges))
+      val uneven = Binning.histogram(df, "v", Bins.Edges(edges))
         .orderBy("bin_id").select("cnt").as[Long].collect().toSeq
       assert(uneven == oracleCounts(vs, edges), s"case $i uneven: values=$vs")
     }
@@ -162,8 +165,8 @@ class HistogramPropertySpec extends SparkSpec {
       val t = abFrame()
       val mergedSeries = Seq((t.select("a"), "a", "a"), (t, "b", "b"),
         (cs.toDF("c"), "c", "c"), (t.select("a", "b"), "a", "a"))
-      val merged = Binning.histogramManyBins(mergedSeries, bins)
-      val apart = Binning.histogramManyBins(Seq((abFrame(), "a", "a"), (abFrame(), "b", "b"),
+      val merged = Binning.histogramMany(mergedSeries, bins)
+      val apart = Binning.histogramMany(Seq((abFrame(), "a", "a"), (abFrame(), "b", "b"),
         (cs.toDF("c"), "c", "c"), (abFrame(), "a", "a")), bins)
       assert(merged.columns.toSeq == Seq("bin_id", "bin_lo", "bin_hi", "a_cnt", "b_cnt", "c_cnt", "a (1)_cnt"))
       val rows = merged.collect().toSeq
@@ -189,7 +192,7 @@ class HistogramPropertySpec extends SparkSpec {
     val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     assert(none.rdd.getNumPartitions == 0)
     val edges = Bins.Edges(Seq(-50.0, -10.0, 0.0, 1.0, 25.0, 80.0))
-    val h = Binning.histogramManyBins(Seq((none, "v", "v")), edges)
+    val h = Binning.histogramMany(Seq((none, "v", "v")), edges)
     assert(h.select("v_cnt").as[Long].collect().toSeq == Seq.fill(5)(0L))
     assertSameHistogram(h, aggregatePath(Seq((none, "v", "v")), edges), "no partitions")
     val rnd = new scala.util.Random(11)
@@ -198,10 +201,10 @@ class HistogramPropertySpec extends SparkSpec {
     for (bins <- Seq(Bins.Count(9), edges); parts <- Seq(1, 3, 8)) {
       val spread = rnd.shuffle(vs).toDF("v").repartition(parts)
       val ss = Seq((spread, "v", "v"), (df, "v", "w"))
-      assertSameHistogram(Binning.histogramManyBins(ss, bins), aggregatePath(ss, bins),
+      assertSameHistogram(Binning.histogramMany(ss, bins), aggregatePath(ss, bins),
         s"bins=$bins parts=$parts")
-      assertSameHistogram(Binning.histogramManyBins(Seq((spread, "v", "v")), bins),
-        Binning.histogramManyBins(Seq((df, "v", "v")), bins), s"bins=$bins parts=$parts: partitioning")
+      assertSameHistogram(Binning.histogramMany(Seq((spread, "v", "v")), bins),
+        Binning.histogramMany(Seq((df, "v", "v")), bins), s"bins=$bins parts=$parts: partitioning")
     }
   }
 

@@ -3,7 +3,6 @@ package graft.dist
 import scala.util.Try
 
 import graft.SparkSpec
-import graft.functions.HistogramAgg
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,17 +19,99 @@ class HistogramShapeParitySpec extends SparkSpec {
 
   // ------------------------------------------------ the replaced formulations
 
-  /** Grouped: one range job, then a grouped `hist_counts` aggregate exploded
-    * into bins and sorted. */
+  /** Grouped: one range job, then a `groupBy(group, binId)` count
+    * left-joined onto a dense spine of the distinct non-null groups × bins,
+    * and sorted. It bins with the Column form, not the core's `bucket`. */
   private def byGroupPath(df: DataFrame, valueCol: String, groupCol: String, n: Int,
                           range: Option[(Double, Double)]): DataFrame = {
     val x = col(valueCol).cast("double")
     val (lo, hi) = range.getOrElse(Binning.minMaxOf(df.select(x.as("x"))))
     val es = Binning.equalWidthEdges(lo, hi, n)
-    df.where(col(groupCol).isNotNull).groupBy(col(groupCol).as("grp"))
-      .agg(HistogramAgg.hist_counts(x, es).as("cnts"))
-      .select(col("grp").as(groupCol), posexplode(col("cnts")).as(Seq("bin_id", "cnt")))
+    val gx = df.where(col(groupCol).isNotNull).select(col(groupCol).as("grp"), x.as("x"))
+    val counts = gx.where(!isnan(col("x")) && col("x") >= lit(lo) && col("x") <= lit(hi))
+      .groupBy(col("grp"), Binning.binId(col("x"), es).as("bin_id")).agg(count(lit(1)).as("cnt"))
+    gx.select("grp").distinct()
+      .crossJoin(spark.range(es.size - 1).select(col("id").cast("int").as("bin_id")))
+      .join(counts, Seq("grp", "bin_id"), "left").na.fill(0L, Seq("cnt"))
+      .select(col("grp").as(groupCol), col("bin_id"), col("cnt"))
       .orderBy(groupCol, "bin_id")
+  }
+
+  /** The pairwise comparators' per-group counts as they were planned before
+    * they moved onto the core: the in-range rows of the non-null groups
+    * counted per (group, binId), left-joined onto a dense group × bin
+    * spine, gathered per group into a `cnts` array in bin order, with `tot`
+    * its sum; then the unchanged pair expansion. */
+  private def pairsPath(df: DataFrame, valueCol: String, groupCol: String, n: Int,
+                        range: Option[(Double, Double)]): (DataFrame, Seq[Double]) = {
+    val clean = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
+      .where(col("grp").isNotNull && col("x").isNotNull && !isnan(col("x")))
+    val (lo, hi) = range.getOrElse(Binning.minMaxOf(clean))
+    require(hi > lo, s"degenerate range [$lo, $hi]")
+    val es = Binning.equalWidthEdges(lo, hi, n)
+    val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
+    val counts = inRange.groupBy(col("grp"), Binning.binId(col("x"), es).as("b")).agg(count(lit(1)).as("c"))
+    val perGroup = inRange.select("grp").distinct()
+      .crossJoin(spark.range(es.size - 1).select(col("id").cast("int").as("b")))
+      .join(counts, Seq("grp", "b"), "left").na.fill(0L, Seq("c"))
+      .groupBy(col("grp")).agg(sort_array(collect_list(struct(col("b"), col("c")))).as("bc"))
+      .select(col("grp"), transform(col("bc"), e => e.getField("c")).as("cnts"))
+      .select(col("grp"), col("cnts"), aggregate(col("cnts"), lit(0L), (a, c) => a + c).as("tot"))
+    val pairs = perGroup
+      .agg(collect_list(struct(col("grp"), col("tot"), col("cnts"))).as("gs"))
+      .select(explode(filter(
+        flatten(transform(col("gs"), a => transform(col("gs"), b => struct(a.as("a"), b.as("b"))))),
+        p => p.getField("a").getField("grp") < p.getField("b").getField("grp"))).as("p"))
+    (pairs, es)
+  }
+
+  /** `Stats.distributionDistance`'s TVD and KS expressions over [[pairsPath]]. */
+  private def tvdPath(df: DataFrame, valueCol: String, groupCol: String, n: Int,
+                      range: Option[(Double, Double)]): DataFrame = {
+    val (pairs, es) = pairsPath(df, valueCol, groupCol, n, range)
+    val (a, b) = (col("p").getField("a"), col("p").getField("b"))
+    val dec = "decimal(19,0)"
+    val termSum = aggregate(
+      zip_with(a.getField("cnts"), b.getField("cnts"),
+        (x, y) => abs(x.cast(dec) * b.getField("tot").cast(dec)
+                    - y.cast(dec) * a.getField("tot").cast(dec))),
+      lit(0).cast("decimal(38,0)"), (acc, t) => acc + t)
+    val idx = sequence(lit(1), lit(es.size - 1))
+    def cum(c: Column): Column =
+      transform(idx, i => aggregate(slice(c, lit(1), i), lit(0L), (acc, x) => acc + x))
+    val ksMax = array_max(
+      zip_with(cum(a.getField("cnts")), cum(b.getField("cnts")),
+        (ca, cb) => abs(ca.cast(dec) * b.getField("tot").cast(dec)
+                      - cb.cast(dec) * a.getField("tot").cast(dec))))
+    pairs.select(
+        a.getField("grp").as("grp_a"), b.getField("grp").as("grp_b"),
+        (termSum.cast("double") /
+          (lit(2.0) * a.getField("tot").cast("double") * b.getField("tot").cast("double"))).as("tvd"),
+        (ksMax.cast("double") /
+          (a.getField("tot").cast("double") * b.getField("tot").cast("double"))).as("ks"))
+      .orderBy("grp_a", "grp_b")
+  }
+
+  /** `Stats.psiMatrix`'s smoothed-share PSI expressions over [[pairsPath]]. */
+  private def psiPath(df: DataFrame, valueCol: String, groupCol: String, n: Int,
+                      range: Option[(Double, Double)], eps: Double = 0.5): DataFrame = {
+    val (pairs, es) = pairsPath(df, valueCol, groupCol, n, range)
+    val nBins = es.size - 1
+    val (a, b) = (col("p").getField("a"), col("p").getField("b"))
+    def share(cnt: Column, tot: Column): Column =
+      (cnt.cast("double") + lit(eps)) / (tot.cast("double") + lit(nBins * eps))
+    val terms = zip_with(a.getField("cnts"), b.getField("cnts"), (x, y) => {
+      val pa = share(x, a.getField("tot"))
+      val qb = share(y, b.getField("tot"))
+      round((pa - qb) * log(pa / qb), 9).cast("decimal(19,9)")
+    })
+    pairs.select(
+        a.getField("grp").as("grp_a"), b.getField("grp").as("grp_b"),
+        a.getField("tot").as("n_a"), b.getField("tot").as("n_b"),
+        aggregate(terms, lit(0).cast("decimal(28,9)"),
+            (acc, t) => (acc + t).cast("decimal(28,9)"))
+          .cast("double").as("psi"))
+      .orderBy("grp_a", "grp_b")
   }
 
   /** 2-D: a min/max aggregate, a `groupBy(bin_x, bin_y)` count, a grid
@@ -189,6 +270,48 @@ class HistogramShapeParitySpec extends SparkSpec {
       assertSame(Binning.histogramByGroup(df, "v", "g", 2), byGroupPath(df, "v", "g", 2, None), s"p=$p")
     }
     assert(Binning.histogramByGroup(frame(schema, rows, 3), "v", "g", 2).select("g").distinct().count() == 4)
+  }
+
+  test("distributionDistance and psiMatrix == per-group spine path") {
+    def both(df: DataFrame, n: Int, range: Option[(Double, Double)], clue: String): Unit = {
+      assertSame(Stats.distributionDistance(df, "v", "g", n, range), tvdPath(df, "v", "g", n, range), s"tvd $clue")
+      assertSame(Stats.psiMatrix(df, "v", "g", n, range), psiPath(df, "v", "g", n, range), s"psi $clue")
+    }
+    val rnd = new scala.util.Random(19)
+    // "far" has no value inside the explicit range (-20, 20): no pair for it
+    val rows = Seq.fill(300)(Row(Seq("b", "a", null, "c", "é", "A")(rnd.nextInt(6)),
+        nulled(math.round(rnd.nextGaussian() * 400) / 8.0, rnd))) ++
+      Seq(Row("dropped", null), Row("dropped", Double.NaN), Row("far", 1e3), Row("far", -1e3))
+    val doubleGroups = StructType(Seq(StructField("g", DoubleType), StructField("v", IntegerType)))
+    val zeros = Seq(Row(0.0, 1), Row(-0.0, 2), Row(Double.NaN, 3), Row(1.5, 4), Row(-2.0, 5),
+      Row(java.lang.Double.longBitsToDouble(0x7ff8000000000001L), 6), Row(null, 7), Row(-0.0, 8))
+    for (p <- partitionings) {
+      for (range <- Seq(None, Some((-20.0, 20.0))))
+        both(frame(grouped, rows, p), 4, range, s"p=$p range=$range")
+      both(frame(grouped, Seq(Row("a", 1.0), Row("a", 2.0), Row(null, 3.0)), p), 3, None, s"one group p=$p")
+      both(frame(grouped, Seq(Row("a", 1.0), Row("b", 2.0)), p), 2, Some((5.0, 6.0)), s"no in-range value p=$p")
+      both(frame(doubleGroups, zeros, p), 2, None, s"double groups p=$p")
+    }
+    for ((name, rs) <- Seq("empty" -> Seq.empty[Row], "all-null" -> Seq(Row("a", null), Row(null, 1.0)),
+                           "min == max" -> Seq(Row("a", 3.0), Row("b", 3.0)));
+         p <- Seq(1, 8); range <- Seq(None, Some((0.0, 5.0))))
+      both(frame(grouped, rs, p), 3, range, s"$name p=$p range=$range")
+  }
+
+  test("a group column with a non-binary collation is rejected by every grouped counter") {
+    val df = frame(grouped, Seq(Row("a", 1.0), Row("A", 2.0), Row("b", 3.0)), 2)
+      .select(collate(col("g"), "UTF8_LCASE").as("g"), col("v"))
+    val calls = Seq[(String, () => DataFrame)](
+      "histogramByGroup" -> (() => Binning.histogramByGroup(df, "v", "g", 2)),
+      "distributionDistance" -> (() => Stats.distributionDistance(df, "v", "g", 2)),
+      "psiMatrix" -> (() => Stats.psiMatrix(df, "v", "g", 2)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("UTF8_LCASE"), s"$name: ${e.getMessage}")
+    }
+    // a binary-collated cast of the same column is grouped by its bytes
+    val bytes = df.select(col("g").cast("string").as("g"), col("v"))
+    assert(Binning.histogramByGroup(bytes, "v", "g", 2).select("g").distinct().count() == 3)
   }
 
   private val pairs = StructType(Seq(StructField("x", DoubleType), StructField("y", DoubleType)))

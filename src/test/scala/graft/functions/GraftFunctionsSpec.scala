@@ -23,24 +23,6 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(viaSql.getLong(1) == viaCol.getLong(1))
   }
 
-  test("hist_counts SQL aggregate produces dense closed-last-bucket counts") {
-    GraftFunctions.register(spark)
-    Seq(0.0, 4.9, 5.0, 10.0, 11.0).toDF("v").createOrReplaceTempView("vals")
-    val counts = spark.sql(
-      "SELECT hist_counts(v, array(0.0D, 5.0D, 10.0D)) AS c FROM vals")
-      .as[Seq[Long]].collect()(0)
-    assert(counts == Seq(2L, 2L)) // 11.0 dropped, 10.0 in closed last bucket
-  }
-
-  test("hist_counts works per-group in SQL (grouped histogram surface)") {
-    GraftFunctions.register(spark)
-    Seq(("a", 1.0), ("a", 9.0), ("b", 4.0)).toDF("g", "v").createOrReplaceTempView("gv")
-    val rows = spark.sql(
-      "SELECT g, hist_counts(v, array(0.0D, 5.0D, 10.0D)) AS c FROM gv GROUP BY g ORDER BY g")
-      .as[(String, Seq[Long])].collect().toSeq
-    assert(rows == Seq(("a", Seq(1L, 1L)), ("b", Seq(1L, 0L))))
-  }
-
   test("session extension class injects the same functions") {
     // A fresh session built through the extensions path; the shared test
     // session already covers the imperative path above.
@@ -48,7 +30,7 @@ class GraftFunctionsSpec extends SparkSpec {
     val builder = new org.apache.spark.sql.SparkSessionExtensions
     ext.apply(builder) // must not throw; descriptors are well-formed
     assert(GraftFunctions.descriptors.map(_._1.funcName).sorted ==
-      Seq("compress_ratio", "float_dot", "float_double_dot", "hist_counts",
+      Seq("compress_ratio", "float_dot", "float_double_dot",
         "minhash_sig", "nfc_normalize", "simhash_pack").sorted)
   }
 

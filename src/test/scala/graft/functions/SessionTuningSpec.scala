@@ -192,21 +192,6 @@ class SessionTuningSpec extends SparkSpec {
     }
   }
 
-  test("spark.graft.tuneObjectAgg=false opts the session out entirely " +
-    "(ADVICE r14: consumer escape hatch from the session-global raise)") {
-    withFreshSession(identity) { fresh =>
-      fresh.conf.set(SessionTuning.TuneKey, "false")
-      val df = thousandKeyTopK(fresh) // facade hook runs, must no-op
-      assert(fresh.conf.get(FallbackKey) == "128",
-        "opt-out session still had its fallback threshold raised")
-      // and Spark's graceful default behavior is actually back: the
-      // 1000-key single-partition agg trips the sort fallback again
-      assert(fallbackTasks(df) > 0,
-        "opt-out session did not exhibit default 128-key fallback behavior " +
-          "— the opt-out assertion above proves nothing")
-    }
-  }
-
   test("an EXPLICIT user 128 — re-pinning Spark's default — is respected " +
     "(ADVICE r14: detection via the set-conf registry, not value compare)") {
     withFreshSession(identity) { fresh =>
