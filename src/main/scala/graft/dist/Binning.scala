@@ -57,10 +57,6 @@ object Bins {
   */
 object Binning {
 
-  /** Output schema of every histogram: (bin_id INT, bin_lo DOUBLE,
-    * bin_hi DOUBLE, cnt BIGINT), dense (zero-count bins present), sorted. */
-  val schemaDoc: String = "(bin_id INT, bin_lo DOUBLE, bin_hi DOUBLE, cnt BIGINT)"
-
   /** Equal-width edges: `[i*inc + lo for i in 0 until n] :+ hi` — the last
     * edge is the exact max, absorbing float error (rdd.py:2311-2312). The
     * integer-width nicety (rdd.py:2306-2309) is automatic in IEEE doubles:
@@ -274,7 +270,7 @@ object Binning {
   }
 
   /** A local DataFrame of `rows`: collecting it runs no job. */
-  private[dist] def local(spark: SparkSession, fields: Seq[StructField], rows: Seq[Row]): DataFrame =
+  private[graft] def local(spark: SparkSession, fields: Seq[StructField], rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
 
   /** A non-nullable output column. */
@@ -487,14 +483,8 @@ object Binning {
     // buffers every row map-side; a one-row-group fixture is ONE scan split,
     // so the buffer build ran on 1 of N cores. Multiset-exact — edges are
     // identical under any partitioning; gate off on multi-split inputs.
-    val row = graft.functions.Rebalance.spreadGated(cleaned(df, colName), 0)
-      .agg(percentile(col("x"), array(ps.map(lit): _*)).as("es")).head()
-    if (row.isNullAt(0))
-      throw new IllegalArgumentException("can not generate buckets from empty RDD")
-    val edges = row.getSeq[Double](0).toVector
-    require(edges.distinct.size == edges.size,
-      s"equi-depth edges collide (mass concentrated at one value): $edges — reduce n")
-    histogram(df, colName, Bins.Edges(edges))
+    quantileBinned(df, colName, graft.functions.Rebalance.spreadGated(cleaned(df, colName), 0)
+      .agg(percentile(col("x"), array(ps.map(lit): _*)).as("es")))
   }
 
   /** The 100 TB tier of [[histogramEquiDepth]]: edges from the
@@ -507,14 +497,21 @@ object Binning {
                                accuracy: Int = 10000): DataFrame = {
     require(n >= 1, "bins must be >= 1")
     val ps = (0 to n).map(_.toDouble / n)
-    val row = cleaned(df, colName)
-      .agg(approx_percentile(col("x"), array(ps.map(lit): _*), lit(accuracy)).as("es")).head()
+    quantileBinned(df, colName, cleaned(df, colName)
+      .agg(approx_percentile(col("x"), array(ps.map(lit): _*), lit(accuracy)).as("es")))
+  }
+
+  /** The equi-depth tiers' shared tail: `edges`' one row holds the
+    * quantile edges (null over no value), which must be distinct; then
+    * [[histogram]] at those edges. */
+  private def quantileBinned(df: DataFrame, colName: String, edges: DataFrame): DataFrame = {
+    val row = edges.head()
     if (row.isNullAt(0))
       throw new IllegalArgumentException("can not generate buckets from empty RDD")
-    val edges = row.getSeq[Double](0).toVector
-    require(edges.distinct.size == edges.size,
-      s"equi-depth edges collide (mass concentrated at one value): $edges — reduce n")
-    histogram(df, colName, Bins.Edges(edges))
+    val es = row.getSeq[Double](0).toVector
+    require(es.distinct.size == es.size,
+      s"equi-depth edges collide (mass concentrated at one value): $es — reduce n")
+    histogram(df, colName, Bins.Edges(es))
   }
 
   /** Cumulative distribution over a histogram: running count and CDF

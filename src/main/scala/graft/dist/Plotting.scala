@@ -79,7 +79,7 @@ object Plotting {
     * marks get translucent fill plus a 2px surface ring so each series'
     * outline stays readable where they stack. */
   private def bar(x: Double, y: Double, w: Double, h: Double, fill: String,
-                  tooltip: String, overlapping: Boolean = false): String = {
+                  tooltip: String, overlapping: Boolean): String = {
     val r = math.min(4.0, w / 2)
     val hh = math.max(h, 0.0)
     val rr = math.min(r, hh)

@@ -2,7 +2,7 @@ package graft.dist
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StructField}
+import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, LongType, StructField}
 
 /** Column-statistics operators beyond histograms: quantiles and distinct
   * counts, each in an exact tier and a sketch tier.
@@ -69,34 +69,42 @@ object Stats {
     }: _*)
   }
 
+  /** One group's (value, total count, dense counts) over the comparators' grid. */
+  private type GroupHist = (Any, Long, Array[Long])
+
   /** Shared first half of the pairwise-histogram comparators
     * ([[distributionDistance]], [[psiMatrix]]): each group's count vector
     * over a common equal-width grid, counted by Binning's grouped
     * driver-merge ([[Binning.countsByGroup]]: one job, no shuffle, groups
-    * compared as `groupBy` compares them), then one local (grp, tot, cnts)
-    * row per group with at least one in-range value, gathered into a single
-    * array and expanded to a<b pairs expression-side — no self-join.
-    * Returns the pairs frame; each row carries `p.a` / `p.b` structs with
-    * (grp, tot, cnts). */
+    * compared as `groupBy` compares them). Returns the group's output field
+    * and one driver-held (grp, tot, cnts) per group with at least one
+    * in-range value, sorted by the group column's Catalyst ordering. */
   private def groupHistPairs(df: DataFrame, valueCol: String, groupCol: String,
                              n: Int, range: Option[(Double, Double)],
-                             measure: String): (DataFrame, Seq[Double]) = {
+                             measure: String): (StructField, Seq[GroupHist]) = {
     val clean = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
       .where(col("grp").isNotNull && col("x").isNotNull && !isnan(col("x")))
     val (lo, hi) = range.getOrElse(Binning.minMaxOf(clean))
     require(hi > lo, s"degenerate range [$lo, $hi]: all values equal, every pairwise $measure is 0")
     val es = Binning.equalWidthEdges(lo, hi, n)
     val inRange = clean.where(col("x") >= lit(lo) && col("x") <= lit(hi))
-    val rows = Binning.countsByGroup(inRange, es).map { case (g, c) => Row(g, c.sum, c.toSeq) }
-    val perGroup = Binning.local(df.sparkSession, Seq(inRange.schema.head, StructField("tot", LongType),
-      StructField("cnts", ArrayType(LongType, containsNull = false), nullable = false)), rows)
-    val pairs = perGroup
-      .agg(collect_list(struct(col("grp"), col("tot"), col("cnts"))).as("gs"))
-      .select(explode(filter(
-        flatten(transform(col("gs"), a => transform(col("gs"), b => struct(a.as("a"), b.as("b"))))),
-        p => p.getField("a").getField("grp") < p.getField("b").getField("grp"))).as("p"))
-    (pairs, es)
+    (inRange.schema.head, Binning.countsByGroup(inRange, es).map { case (g, c) => (g, c.sum, c) })
   }
+
+  /** One local row per group pair a < b of `hists` (in their order, so
+    * sorted by (grp_a, grp_b)): the two groups, then `measures(a, b)` as
+    * the (nullable) `fields`. */
+  private def pairwise(df: DataFrame, grp: StructField, hists: Seq[GroupHist],
+                       fields: Seq[(String, DataType)])(measures: (GroupHist, GroupHist) => Seq[Any]): DataFrame = {
+    val hs = hists.toIndexedSeq
+    val rows = for (i <- hs.indices; j <- i + 1 until hs.size)
+      yield Row.fromSeq(hs(i)._1 +: hs(j)._1 +: measures(hs(i), hs(j)))
+    Binning.local(df.sparkSession, Seq(grp.copy(name = "grp_a"), grp.copy(name = "grp_b")) ++
+      fields.map { case (name, dt) => StructField(name, dt) }, rows)
+  }
+
+  /** `|x·tb − y·ta|`, exact. */
+  private def crossDiff(x: Long, tb: Long, y: Long, ta: Long): BigInt = (BigInt(x) * tb - BigInt(y) * ta).abs
 
   /** Pairwise total-variation distance between per-group value
     * distributions: bin the column over ONE shared global range
@@ -108,76 +116,65 @@ object Stats {
     * pass uses to compare sources/shards.
     *
     * Scale + determinism shape: a derived range is one job and the per-group
-    * counts one more ([[groupHistPairs]]); the pair expansion runs over the
-    * n_groups local rows. The per-bin terms are computed in exact
-    * integer/decimal arithmetic (`|cntA*totB - cntB*totA|`) with a single
-    * double division at the end, so results are bit-deterministic and
-    * oracle-checkable. Bounded by group cardinality: fine for categorical
-    * group columns (≤ ~1000 groups); a million-group comparison would want
-    * the pair-join formulation instead. A group column with a non-binary
-    * collation is rejected. */
+    * counts one more ([[groupHistPairs]]); the pairs are computed on the
+    * driver over the n_groups count vectors and returned as a local frame
+    * whose collection runs no job. The per-bin terms are exact integers
+    * (`|cntA*totB - cntB*totA|`, and the same over the prefix sums for KS),
+    * summed exactly and converted to double through Spark's `Decimal` with
+    * a single double division at the end, so results are bit-deterministic
+    * and oracle-checkable. Bounded by group cardinality: fine for
+    * categorical group columns (≤ ~1000 groups, ~500k pairs); a
+    * million-group comparison would want a distributed pair join instead.
+    * A group column with a non-binary collation is rejected. */
   def distributionDistance(df: DataFrame, valueCol: String, groupCol: String,
                            n: Int = 10,
                            range: Option[(Double, Double)] = None): DataFrame = {
-    val (pairs, es) = groupHistPairs(df, valueCol, groupCol, n, range, "TVD")
-    val (a, b) = (col("p").getField("a"), col("p").getField("b"))
-    val dec = "decimal(19,0)"
-    val termSum = aggregate(
-      zip_with(a.getField("cnts"), b.getField("cnts"),
-        (x, y) => abs(x.cast(dec) * b.getField("tot").cast(dec)
-                    - y.cast(dec) * a.getField("tot").cast(dec))),
-      lit(0).cast("decimal(38,0)"), (acc, t) => acc + t)
-    // KS over the n_bins-length count vectors: prefix sums per index (the
-    // O(n_bins²) slice-sum is over tiny aggregated arrays, not data rows)
-    val idx = sequence(lit(1), lit(es.size - 1))
-    def cum(c: Column): Column =
-      transform(idx, i => aggregate(slice(c, lit(1), i), lit(0L), (acc, x) => acc + x))
-    val ksMax = array_max(
-      zip_with(cum(a.getField("cnts")), cum(b.getField("cnts")),
-        (ca, cb) => abs(ca.cast(dec) * b.getField("tot").cast(dec)
-                      - cb.cast(dec) * a.getField("tot").cast(dec))))
-    pairs.select(
-        a.getField("grp").as("grp_a"), b.getField("grp").as("grp_b"),
-        (termSum.cast("double") /
-          (lit(2.0) * a.getField("tot").cast("double") * b.getField("tot").cast("double"))).as("tvd"),
-        (ksMax.cast("double") /
-          (a.getField("tot").cast("double") * b.getField("tot").cast("double"))).as("ks"))
-      .orderBy("grp_a", "grp_b")
+    val (grp, hists) = groupHistPairs(df, valueCol, groupCol, n, range, "TVD")
+    pairwise(df, grp, hists, Seq("tvd" -> DoubleType, "ks" -> DoubleType)) { case ((_, ta, a), (_, tb, b)) =>
+      var (sum, ks, ca, cb) = (BigInt(0), BigInt(0), 0L, 0L)
+      for (i <- a.indices) {
+        sum += crossDiff(a(i), tb, b(i), ta)
+        ca += a(i); cb += b(i)
+        ks = ks.max(crossDiff(ca, tb, cb, ta))
+      }
+      Seq(Decimal(sum).toDouble / (2.0 * ta.toDouble * tb.toDouble),
+        Decimal(ks).toDouble / (ta.toDouble * tb.toDouble))
+    }
   }
 
   /** Pairwise Population Stability Index — the ML-ops drift metric
     * (`PSI = Σ_i (p_i − q_i)·ln(p_i/q_i)`, conventional reading: <0.1
     * stable, 0.1–0.25 moderate shift, >0.25 drifted) over the same
-    * shared-grid group histograms as [[distributionDistance]]. Bin shares
-    * are Laplace-smoothed (`(cnt + eps)/(tot + n·eps)`) so empty bins
-    * cannot produce ln(0).
+    * shared-grid group histograms as [[distributionDistance]], computed on
+    * the driver into a local frame the same way. Bin shares are
+    * Laplace-smoothed (`(cnt + eps)/(tot + n·eps)`) so empty bins cannot
+    * produce ln(0).
     *
     * Determinism contract: ln() is transcendental, so unlike TVD/KS the
     * per-bin terms cannot be exact decimals. Each TERM is rounded to 9
-    * decimals and summed as exact DECIMAL — the rounding is part of the
-    * operator's definition, making the result independent of bin
-    * summation order and reproducible cross-engine. */
+    * decimals (Spark's `round`), cast to DECIMAL(19,9) and summed as exact
+    * DECIMAL(28,9) — the rounding is part of the operator's definition,
+    * making the result independent of bin summation order and reproducible
+    * cross-engine. The ln is `StrictMath.log`, the one Spark's `log`
+    * evaluates. */
   def psiMatrix(df: DataFrame, valueCol: String, groupCol: String,
                 n: Int = 10, range: Option[(Double, Double)] = None,
                 eps: Double = 0.5): DataFrame = {
     require(eps > 0, "eps must be > 0 (smoothing guards ln(0))")
-    val (pairs, es) = groupHistPairs(df, valueCol, groupCol, n, range, "PSI")
-    val nBins = es.size - 1
-    val (a, b) = (col("p").getField("a"), col("p").getField("b"))
-    def share(cnt: Column, tot: Column): Column =
-      (cnt.cast("double") + lit(eps)) / (tot.cast("double") + lit(nBins * eps))
-    val terms = zip_with(a.getField("cnts"), b.getField("cnts"), (x, y) => {
-      val pa = share(x, a.getField("tot"))
-      val qb = share(y, b.getField("tot"))
-      round((pa - qb) * log(pa / qb), 9).cast("decimal(19,9)")
-    })
-    pairs.select(
-        a.getField("grp").as("grp_a"), b.getField("grp").as("grp_b"),
-        a.getField("tot").as("n_a"), b.getField("tot").as("n_b"),
-        aggregate(terms, lit(0).cast("decimal(28,9)"),
-            (acc, t) => (acc + t).cast("decimal(28,9)"))
-          .cast("double").as("psi"))
-      .orderBy("grp_a", "grp_b")
+    val (grp, hists) = groupHistPairs(df, valueCol, groupCol, n, range, "PSI")
+    val smoothing = n * eps
+    pairwise(df, grp, hists, Seq("n_a" -> LongType, "n_b" -> LongType, "psi" -> DoubleType)) {
+      case ((_, ta, a), (_, tb, b)) =>
+        var sum = java.math.BigDecimal.ZERO
+        for (i <- a.indices) {
+          val pa = (a(i).toDouble + eps) / (ta.toDouble + smoothing)
+          val qb = (b(i).toDouble + eps) / (tb.toDouble + smoothing)
+          val term = Decimal(graft.functions.LitTopCents.sparkRound((pa - qb) * StrictMath.log(pa / qb), 9))
+          require(term.changePrecision(19, 9), s"PSI term $term overflows decimal(19,9)")
+          sum = sum.add(term.toJavaBigDecimal)
+        }
+        Seq[Any](ta, tb, Decimal(sum).toDouble)
+    }
   }
 
   /** Per-group z-score outliers: standardize `valueCol` against its group's

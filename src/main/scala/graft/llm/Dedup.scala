@@ -36,43 +36,30 @@ object Dedup {
     * pair rows are bounded by maxBucket·corpus rows — so Spark's own choice
     * (broadcast at toy scale) stands; above it the hint binds.
     *
-    * `SET spark.graft.nearDup.hintMinBytes=<n>` overrides (0 forces the
-    * hint at any size — the plan-contract regime used by the test suite).
-    * The default is deliberately LOW (4 MB of scan bytes ≈ tens of
+    * The threshold is deliberately LOW (4 MB of scan bytes ≈ tens of
     * thousands of documents): scan stats are COMPRESSED bytes, and
     * repetitive corpora — exactly the dup-heavy ones whose pair frames
     * explode — compress hardest (the 100× fixture's near-identical
     * replicas pack 100× the rows into 20× the bytes). Mis-gating low costs
     * ~0.5 s of hint rent; mis-gating high re-opens a measured 772 s
     * broadcast pathology. */
-  val hintMinBytesConf = "spark.graft.nearDup.hintMinBytes"
-  val hintMinBytesDefault: Long = 4L << 20
+  private[graft] val hintMinBytes: Long = 4L << 20
 
-  /** True when `docs`' plan-time size estimate crosses the hint gate.
-    * The estimate is the SUM OVER LEAF RELATIONS (file scans / local data),
-    * not the frame's own top-level stat: callers like [[cleanCorpusMinHash]]
-    * pass a frame derived through aggregations and joins, whose top-level
-    * estimate is exactly the kind of guess the hint exists to bypass — a
-    * post-agg estimate collapsing below the threshold would silently re-open
-    * the broadcast pathology at scale. Leaf stats are real file sizes and an
-    * upper bound on the corpus feeding the operator, so the gate can only
-    * err toward the safe (hinted) side on derived inputs. */
-  private def wantShuffleHash(docs: DataFrame): Boolean = {
-    // a malformed SET value must fail naming the conf key, not surface as a
-    // bare NumberFormatException from inside an unrelated dedup query's
-    // plan build
-    val threshold = docs.sparkSession.conf.getOption(hintMinBytesConf) match {
-      case None => hintMinBytesDefault
-      case Some(raw) =>
-        try raw.trim.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$hintMinBytesConf must be a byte count in plain digits, got '$raw'")
-        }
-    }
-    docs.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum >= BigInt(threshold)
-  }
+  /** `docs`' plan-time size estimate, which the gate compares with
+    * [[hintMinBytes]]: the SUM OVER LEAF RELATIONS (file scans / local
+    * data), not the frame's own top-level stat. Callers like
+    * [[cleanCorpusMinHash]] pass a frame derived through aggregations and
+    * joins, whose top-level estimate is exactly the kind of guess the hint
+    * exists to bypass — a post-agg estimate collapsing below the threshold
+    * would silently re-open the broadcast pathology at scale. Leaf stats
+    * are real file sizes and an upper bound on the corpus feeding the
+    * operator, so the gate can only err toward the safe (hinted) side on
+    * derived inputs. */
+  private[graft] def leafBytes(docs: DataFrame): BigInt =
+    docs.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** True when `docs` crosses the hint gate. */
+  private def wantShuffleHash(docs: DataFrame): Boolean = leafBytes(docs) >= BigInt(hintMinBytes)
 
   /** Apply `shuffle_hash` to a verification-join build side iff the gate
     * fired for the corpus this build side derives from. */
@@ -488,7 +475,6 @@ object Dedup {
                      idCol: String = "doc_id", textCol: String = "text", w: Int = 3): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     graft.functions.SessionTuning.ensureActiveSession()
-    val r = k / bands
     // The shingle frame is referenced 3x in this plan (signature pipeline +
     // both sides of the verification join); persist so the tokenize+shingle
     // pass over the corpus runs once, not three times. MEMORY_AND_DISK spills
@@ -507,7 +493,7 @@ object Dedup {
         a => transform(filter(col("ids"), b => a < b), b => struct(a.as("id_a"), b.as("id_b")))))).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    // SHUFFLE_HASH hints behind the corpus-size gate (see [[hintMinBytesConf]]):
+    // SHUFFLE_HASH hints behind the corpus-size gate (see [[hintMinBytes]]):
     // size estimates through explode→dropDuplicates (pairs) and a cold
     // InMemoryRelation (sh) are guesses, and at sf10 Spark chose to BROADCAST
     // both — including the candidate-PAIR frame, whose row count is
@@ -598,15 +584,18 @@ object Dedup {
     *      pair gets EXACT shingle Jaccard against the persisted batch
     *      shingles, and the matches are collected;
     *   5. the driver elects the min cand per id (ids compare by their
-    *      column's Catalyst ordering).
+    *      column's Catalyst ordering);
+    *   6. one action collects newDocs' ids; the driver gives each its
+    *      winner and sorts them (nulls first, as `orderBy` does).
     * The probe and the verify are skipped when they have no input. The
-    * build runs these jobs; the returned frame is lazy: newDocs' ids
-    * left-joined to the broadcast winners.
+    * build runs these jobs and returns a local frame whose collection runs
+    * no job.
     *
     * Driver state is batch-sized: `bands` banding rows per batch doc, at
     * most `bands` bucket-min pairs plus the hit buckets' rep pairs per
-    * batch doc, one verified row per pair and one winner per doc. Spark's
-    * `spark.driver.maxResultSize` fails an oversized collect loudly.
+    * batch doc, one verified row per pair, one winner and one result row
+    * per doc. Spark's `spark.driver.maxResultSize` fails an oversized
+    * collect loudly.
     *
     * Output: one row per batch doc — (idCol, dup_of, jaccard) with
     * dup_of = min verified match (NULL ⇒ the doc survives). Requires
@@ -684,12 +673,14 @@ object Dedup {
     matches.foreach { r =>
       if (best.get(r.get(0)).forall(b => byCand.lt(r.get(1), b.get(1)))) best(r.get(0)) = r
     }
-    val winners = local(best.values.toSeq, StructField("id", idType),
-      verified.schema("cand").copy(name = "dup_of"), verified.schema("jaccard"))
-    newDocs.select(col(idCol).as("id"))
-      .join(broadcast(winners), Seq("id"), "left")
-      .select(col("id").as(idCol), col("dup_of"), col("jaccard"))
-      .orderBy(idCol)
+    // 6. the result
+    val ids = newDocs.select(col(idCol))
+    val rows = ids.collect().map(_.get(0)).sorted(byId).map { i =>
+      Option(i).flatMap(best.get).fold(Row(i, null, null))(w => Row(i, w.get(1), w.get(2)))
+    }
+    graft.dist.Binning.local(spark, Seq(ids.schema.head.copy(name = idCol),
+      verified.schema("cand").copy(name = "dup_of", nullable = true),
+      verified.schema("jaccard").copy(nullable = true)), rows.toSeq)
   }
 
   /** Catalyst's ordering of `dt`, over the external values a collect returns. */
@@ -819,7 +810,7 @@ object Dedup {
   def latestByKey(df: DataFrame, keys: Seq[String],
                   tsCol: String, tieCol: String): DataFrame = {
     require(keys.nonEmpty, "need at least one key column")
-    val rest = df.columns.filterNot(keys.contains)
+    val rest = df.columns.toIndexedSeq.filterNot(keys.contains)
     df.groupBy(keys.map(col): _*)
       .agg(max_by(struct(rest.map(col): _*),
         struct(col(tsCol), col(tieCol))).as("__latest"))
@@ -923,7 +914,7 @@ object Dedup {
     val hintGate = wantShuffleHash(docs)
     pairs
       // SHUFFLE_HASH for the same reason as minHashNearDup's verification
-      // joins (gated the same way — see [[hintMinBytesConf]]): estimates
+      // joins (gated the same way — see [[hintMinBytes]]): estimates
       // through the explode'd pair frame are guesses and sf10 planned BOTH
       // joins as broadcasts, including the pair frame
       .join(gateHint(keyed.select(col("id").as("id_a"), col("k").as("k_a")), hintGate), "id_a")

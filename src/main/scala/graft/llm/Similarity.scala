@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.Rebalance.spreadGated
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1755,7 +1756,7 @@ object Similarity {
       require(total > 0, s"$opName: no candidate vectors")
       val kk = math.min(k.toLong, total).toInt
       val raw = counts.map { case (c, n) => (c, n, kk.toDouble * n / total) }
-      var quota = scala.collection.mutable.Map(raw.map { case (c, n, x) =>
+      val quota = scala.collection.mutable.Map(raw.map { case (c, n, x) =>
         c -> math.min(n, x.toLong).toInt }: _*)
       // hand out remaining slots by largest fractional remainder (id asc tie)
       var left = kk - quota.values.sum

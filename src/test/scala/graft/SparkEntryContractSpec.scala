@@ -218,8 +218,6 @@ class SparkEntryContractSpec extends SparkSpec {
     "mi_lang_source" -> Set("CollectList"),       // lang×source contingency
     "lang_entropy_by_source" -> Set("CollectList"),     // per-source langs
     "entropy_documents" -> Set("CollectList"),    // per-lang char classes
-    "dist_tvd_events" -> Set("CollectList"),      // per-type value buckets
-    "psi_drift_events" -> Set("CollectList"),     // fixed decile buckets
     "gini_doclen_documents" -> Set("CollectList"),      // fixed buckets
     "centroid_sim_embeddings" -> Set("CollectList"),    // one row per GROUP
     "curate_corpus_documents" -> Set("CollectList"),    // per-source stats
@@ -297,7 +295,6 @@ class SparkEntryContractSpec extends SparkSpec {
     assume(testdataPresent)
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-    import org.apache.spark.sql.functions.col
     def objectAggFns(p: SparkPlan): Seq[String] = {
       val here = p.collect { case o: ObjectHashAggregateExec =>
         o.aggregateExpressions.map(_.aggregateFunction.getClass.getSimpleName)
@@ -481,44 +478,44 @@ class SparkEntryContractSpec extends SparkSpec {
   test("near-dup verification joins: shuffled-hash above the size gate, " +
     "broadcast below it") {
     assume(testdataPresent)
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, concat, lit}
     // Catalyst's size estimates through explode->dropDuplicates are
     // guesses; at sf10 it chose to BROADCAST the candidate-pair frame of
     // both pair tiers (SCALE.md §11 Offender 6, 771.8 s measured). The
-    // SHUFFLE_HASH hints are gated on the corpus frame's plan-time size
-    // (spark.graft.nearDup.hintMinBytes) so toy corpora keep the broadcast
-    // plan that is right for them. Regime A pins the gate open (threshold
-    // 0 = what a 100 TB corpus sees) and asserts the hinted shape at
-    // sf0.001; regime B (default gate, toy corpus) asserts Spark's own
-    // broadcast choice came back and nothing degraded to a nested loop.
-    val gateConf = graft.llm.Dedup.hintMinBytesConf
-    try {
-      spark.conf.set(gateConf, "0")
-      for (q <- Seq("dedup_near_minhash", "dedup_editdist_documents")) {
-        val plan = SparkEntry.queries(q)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastHashJoin"),
-          s"$q verification join regressed to broadcast above the gate:\n$plan")
-        assert(plan.contains("ShuffledHashJoin"),
-          s"$q lost its shuffled-hash verification shape above the gate:\n$plan")
-      }
-    } finally spark.conf.unset(gateConf)
-    // Regime B pins the gate CLOSED explicitly (a threshold no fixture can
-    // cross) rather than relying on the production default: the assertion
-    // is about the plan contract below the gate, and coupling it to
-    // hintMinBytesDefault would flip the test if the default is ever bumped
-    // or the sf0.001 fixture grows past 4 MB compressed.
-    try {
-      spark.conf.set(gateConf, Long.MaxValue.toString)
-      for (q <- Seq("dedup_near_minhash", "dedup_editdist_documents")) {
-        val plan = SparkEntry.queries(q)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-        assert(plan.contains("BroadcastHashJoin"),
-          s"$q under the gate should recover the toy-scale broadcast plan:\n$plan")
-        assert(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"),
-          s"$q degraded to a nested loop under the gate:\n$plan")
-      }
-    } finally spark.conf.unset(gateConf)
+    // SHUFFLE_HASH hints are gated on the corpus frame's plan-time leaf
+    // size (Dedup.hintMinBytes) so toy corpora keep the broadcast plan that
+    // is right for them. Both operators run with their declared queries'
+    // parameters (dedup_near_minhash, dedup_editdist_documents).
+    val operators = Seq[(String, DataFrame => DataFrame)](
+      "minHashNearDup" -> (d => graft.llm.Dedup.minHashNearDup(d, threshold = SparkEntry.dedupJaccard)),
+      "editDistanceNearDup" -> (d => graft.llm.Dedup.editDistanceNearDup(d, maxDist = 1, keyLen = 24)))
+    // Regime A: a spark.range-rooted corpus whose leaf estimate is above the
+    // gate, the size a 100 TB corpus sees; planned only, nothing executes
+    val big = spark.range(graft.llm.Dedup.hintMinBytes / 4)
+      .select(col("id").as("doc_id"), concat(lit("doc "), col("id").cast("string")).as("text"))
+    assert(graft.llm.Dedup.leafBytes(big) > graft.llm.Dedup.hintMinBytes)
+    for ((name, op) <- operators) {
+      var plan = ""
+      assert(jobsOf { plan = op(big).queryExecution.executedPlan.toString } == 0, s"$name ran a job")
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"$name verification join regressed to broadcast above the gate:\n$plan")
+      assert(plan.contains("ShuffledHashJoin"),
+        s"$name lost its shuffled-hash verification shape above the gate:\n$plan")
+    }
+    // Regime B: the sf0.001 fixture, below the gate: Spark's own broadcast
+    // choice comes back and nothing degrades to a nested loop
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    assert(graft.llm.Dedup.leafBytes(docs) < graft.llm.Dedup.hintMinBytes,
+      "the sf0.001 documents fixture no longer sits below the gate")
+    for ((name, op) <- operators) {
+      val plan = op(docs).queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$name under the gate should recover the toy-scale broadcast plan:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"),
+        s"$name degraded to a nested loop under the gate:\n$plan")
+    }
   }
 
   test("decontam_semantic_embeddings: eval side broadcasts, training side " +

@@ -15,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   * The grouped, 2-D and weighted shapes keep the same budgets, `minMax` is
   * 1 job, and `cdf` over a local histogram adds none. The pairwise
   * comparators `Stats.distributionDistance` and `Stats.psiMatrix` count on
-  * the grouped core at build and gather their pairs at collect. */
+  * the grouped core at build and return their pairs as a local DataFrame. */
 class HistogramJobContractSpec extends SparkSpec {
 
   private lazy val sources: (DataFrame, DataFrame) = {
@@ -87,7 +87,7 @@ class HistogramJobContractSpec extends SparkSpec {
     assert(jobsOf(Binning.cdf(h).collect()) == 0)
   }
 
-  test("pairwise comparators: 4 jobs with a derived range, 3 with an explicit one") {
+  test("pairwise comparators: 2 jobs with a derived range, 1 with an explicit one, none to collect") {
     val (t, _) = sources
     val calls = Seq[(String, Option[(Double, Double)] => DataFrame)](
       "distributionDistance" -> (r => Stats.distributionDistance(t, "b", "c", 10, r)),
@@ -97,8 +97,8 @@ class HistogramJobContractSpec extends SparkSpec {
       val built = jobsOf { df = call(range) }
       (name, range, built, jobsOf(df.collect()))
     }
-    // build: the range job (derived only), then the counts job; collect:
-    // the gather's shuffle-map job and the result job over the local rows
-    assert(js.map(j => (j._3, j._4)) == Seq((2, 2), (1, 2), (2, 2), (1, 2)), js)
+    // build: the range job (derived only), then the counts job; the pairs
+    // are a local frame, so collecting them runs no job
+    assert(js.map(j => (j._3, j._4)) == Seq((2, 0), (1, 0), (2, 0), (1, 0)), js)
   }
 }

@@ -23,7 +23,6 @@ class CurationSpec extends SparkSpec {
 
   test("mmrSelectBatched with nCells=1 is EXACTLY the exact greedy " +
     "(the agreement contract that keeps mmrSelect the verifier tier)") {
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(4242)
     val vecs = (0 until 80).map(i =>
       (i.toLong, Seq.fill(16)((rnd.nextGaussian()).toFloat)))
@@ -39,7 +38,6 @@ class CurationSpec extends SparkSpec {
 
   test("seeded batched faces: nCells=1 equals the exact greedy (both ops), " +
     "and multi-cell output is deterministic under repartition") {
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(4242)
     val vecs = (0 until 80).map(i =>
       (i.toLong, Seq.fill(16)((rnd.nextGaussian()).toFloat)))
@@ -73,7 +71,6 @@ class CurationSpec extends SparkSpec {
 
   test("mmrSelectBatched: quotas partition k across cells by size, every " +
     "selection is same-cell-diverse, deterministic under repartition") {
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(11)
     // 4 well-separated clusters of different sizes (40/30/20/10)
     val centers = Seq.fill(4)(Seq.fill(16)(rnd.nextGaussian() * 3))
@@ -109,7 +106,6 @@ class CurationSpec extends SparkSpec {
 
   test("kCenterSelectBatched with nCells=1 is EXACTLY the exact greedy " +
     "(the agreement contract that keeps kCenterSelect the verifier tier)") {
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(4242)
     val vecs = (0 until 80).map(i =>
       (i.toLong, Seq.fill(16)((rnd.nextGaussian()).toFloat)))
@@ -126,7 +122,6 @@ class CurationSpec extends SparkSpec {
   test("kCenterSelectBatched: quotas partition k by cell size, per-cell seed " +
     "is the cell's relevance argmax, later picks are farthest-point, " +
     "deterministic under repartition") {
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(11)
     // 4 well-separated clusters of different sizes (40/30/20/10) — same
     // fixture family as the batched-MMR quota test
@@ -165,7 +160,6 @@ class CurationSpec extends SparkSpec {
 
   test("kCenterSelectBatched: within-cell picks spread across planted " +
     "subclusters (coverage), unlike per-cell top-rel") {
-    import org.apache.spark.sql.functions._
     // ONE k-means cell containing two tight near-orthogonal subclusters:
     // farthest-point must alternate between them, pure relevance would not.
     val rnd = new scala.util.Random(5)
@@ -186,7 +180,6 @@ class CurationSpec extends SparkSpec {
 
   test("kCenterSelect: one pick per planted cluster at k = #clusters, " +
     "seed is the most corpus-central vector, deterministic under repartition") {
-    import org.apache.spark.sql.functions._
     // 4 well-separated clusters on coordinate axes: cluster c = e_{4c} +
     // small seeded noise in the OTHER dims, 20 members each. k-center's
     // defining guarantee (Gonzalez 2-approximation) on separated data is

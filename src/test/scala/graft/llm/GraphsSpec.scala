@@ -273,7 +273,6 @@ class GraphsSpec extends SparkSpec {
 
   test("pageRank over the LSH kNN graph: conservation, determinism, and " +
     "agreement with the exact-edge tier on planted clusters") {
-    import org.apache.spark.sql.functions.col
     // 20 planted clusters of 4 near-identical vectors — the near-dup regime
     // the LSH tier is declared for (same shape as SimilaritySpec's recall
     // fixtures): the exact kNN graph is ~20 disjoint K4s, so the two tiers'

@@ -186,7 +186,10 @@ class MinHashRegistryParitySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("registry_dup").toString
     val docs = parquetDocs(spark, stream(seed = 23L, n = 300), s"$dir/docs")
     val prior = docs.where(col("doc_id") < 200)
+    // plus a batch doc with a null id whose text is a prior doc's: it has
+    // registry candidates but never a match, and sorts first
     val batch = docs.where(col("doc_id") >= 200)
+      .unionByName(docs.where(col("doc_id") === 5).select(lit(null).cast("long").as("doc_id"), col("text")))
     // the halves' registries, unioned without the per-bucket min fold
     val halves = Seq(0, 1).map(p =>
       Dedup.minHashBucketRegistry(prior.where(col("doc_id") % 2 === p)))
@@ -197,8 +200,11 @@ class MinHashRegistryParitySpec extends SparkSpec {
     val hit = Dedup.bandedMinHash(Dedup.shingleDF(batch, "doc_id", "text", 3), 128, 16, 42L)
       .join(twoReps, Seq("band", "bh"))
     assert(!hit.isEmpty, "no batch doc collides with a two-rep bucket")
-    val got = Dedup.minHashDedupAgainstRegistry(batch, registry, prior).collect().toSeq
+    val result = Dedup.minHashDedupAgainstRegistry(batch, registry, prior)
+    val got = result.collect().toSeq
     assert(got == reference(batch, registry, prior).collect().toSeq)
+    assert(result.schema == reference(batch, registry, prior).schema)
+    assert(got.head == Row(null, null, null), "the null id is not first, unmatched")
     assert(got.exists(r => !r.isNullAt(1) && r.getLong(1) < 200), "no registry match")
   }
 

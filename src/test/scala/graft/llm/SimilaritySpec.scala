@@ -481,12 +481,12 @@ class SimilaritySpec extends SparkSpec {
       "(?i)Exchange roundrobinpartitioning".r.findAllIn(
         d.queryExecution.executedPlan.toString.split("== Initial Plan ==").head).length
     val starved = df.coalesce(1)
-    assert(rr(graft.llm.spreadGated(starved, minBytes = 0)) == 1,
+    assert(rr(graft.functions.Rebalance.spreadGated(starved, minBytes = 0)) == 1,
       "all-pairs policy must rebalance a starved input at any size")
-    assert(rr(graft.llm.spreadGated(starved)) == 0,
+    assert(rr(graft.functions.Rebalance.spreadGated(starved)) == 0,
       "default size gate must keep a sub-split starved frame put")
     val split = df.repartition(n)
-    assert(rr(graft.llm.spreadGated(split, minBytes = 0)) == 1, // setup only
+    assert(rr(graft.functions.Rebalance.spreadGated(split, minBytes = 0)) == 1, // setup only
       "well-split frame re-exchanged (the setup repartition is the one rr)")
   }
 
@@ -694,7 +694,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("kMeansProfileSeeded: deterministic under repartition; partitions " +
     "the corpus; same cluster recovery as the hash-seeded tier") {
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(909)
     val centers = Seq.fill(4)(Seq.fill(16)(rnd.nextGaussian() * 3))
     // ids INTERLEAVED across clusters: id-ordered seeding means the k

@@ -95,7 +95,7 @@ class SinksSpec extends SparkSpec {
     // releasing the handle unpins the shared DISK_ONLY parse cache (delta
     // vs before: other suites in the shared session may hold caches)
     split.done()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(cachedBefore)
     assert(leaked.isEmpty, s"splitCorrupt cache still pinned after done(): $leaked")
   }
 
